@@ -540,31 +540,34 @@ def test_rendered_keys_auto_compaction(spark, dirs):
     assert left.count() == 0
 
 
-def test_streaming_session_window_matches_batch_twin(spark):
-    """The streaming session_window parity query agrees with a batch
-    lag/cumsum sessionization of the same derived clip stream (same gap
-    semantics: new session when diff >= gap)."""
-    from pyspark.sql import Window
+@pytest.mark.parametrize(
+    "name",
+    ["streaming_tumbling_parity", "streaming_sliding_parity", "streaming_session_parity"],
+)
+def test_streaming_parity_matches_oracle(spark, name):
+    """Each bounded streaming-window query (tumbling, sliding — every clip
+    in exactly two windows — and session) hashes equal to its DuckDB
+    oracle over the same tables, with the oracle sweep's normalisation."""
+    import duckdb
 
-    from imagor_spark.plans.catalog import q_streaming_session_window
-    from imagor_spark.sources.docs_clips import cached_clips
+    import __spark_entry__ as entry
+    from tools.oracle_sweep import TABLES, frame_fingerprint
 
     sf = "/root/testdata/sf0.001"
-    stream_out = q_streaming_session_window(spark, sf).collect()
-    clips = cached_clips(spark, sf)
-    w = Window.partitionBy("codec").orderBy("ingest_ts")
-    ep = F.col("ingest_ts").cast("double")
-    gap = F.when(ep - F.lag(ep).over(w) >= 10, 1).otherwise(0)
-    twin = (
-        clips.select("codec", "ingest_ts")
-        .withColumn("sid", F.sum(gap).over(w))
-        .groupBy("codec", "sid")
-        .agg(F.min("ingest_ts").alias("session_start"), F.count("*").alias("n_clips"))
-        .select("codec", "session_start", "n_clips")
-        .collect()
-    )
-    assert sorted(map(tuple, stream_out)) == sorted(map(tuple, twin))
-    assert len(stream_out) > 1  # non-degenerate: multiple sessions exist
+    sdf = entry.queries()[name](spark, sf)
+    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+        cur = con.execute(entry.oracle_sql()[name])
+        ocols = [d[0] for d in cur.description]
+        orows = cur.fetchall()
+    finally:
+        con.close()
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows) > 1  # non-degenerate: several groups
+    assert frame_fingerprint(scols, srows) == frame_fingerprint(ocols, orows)
 
 
 def test_compaction_during_live_stream_with_same_dir_cache(spark, dirs):
