@@ -34,7 +34,7 @@ Modes:
                                       # pair equally; every pair + best-pair
                                       # efficiency is reported
 Env knobs: SPARK_GRAFT_{SF_DIR,CPUS,N_CLIPS,BENCH_RUNS,QUERY_RUNS,WORKDIR,
-SCALE_CORES,SCALE_CORES_SUB,SCALE_PAIRS,SKIP_WARMUP,SALT,ADMISSION}.
+SCALE_CORES,SCALE_CORES_SUB,SCALE_PAIRS,SKIP_WARMUP}.
 SPARK_GRAFT_WORKDIR sets the scratch base dir (e.g. /dev/shm) for a single
 run; --workdir-tmpfs is shorthand for /dev/shm.
 """
@@ -227,15 +227,6 @@ def run_pipeline_bench(spark, sf_dir: str, workdir: str) -> dict:
             secret=SECRET,
             allow_unsafe=True,
             assets=watermark_assets(),
-            # NO salt repartition in the straight-through sink pipeline:
-            # the dedup shuffle on clip_id already distributes uniformly,
-            # so salting here would be a redundant full payload shuffle
-            # (~3 GB at sf0.1). Salting belongs to the windowed-agg paths
-            # grouping on the skewed codec key. (env knob for A/B runs)
-            salt_partitions=(int(os.environ["SPARK_GRAFT_SALT"])
-                             if os.environ.get("SPARK_GRAFT_SALT") else None),
-            # admission A/B knob (default ON = production semantics)
-            admission=os.environ.get("SPARK_GRAFT_ADMISSION", "1") != "0",
             wait=True,
         )
         committed = sink.read_committed(spark)

@@ -21,7 +21,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Iterator
 
@@ -126,8 +125,6 @@ def make_transform_fn(
     signer = HMACSigner(alg, truncate, secret) if secret is not None else None
     if allow_unsafe is None:
         allow_unsafe = signer is None
-    if os.environ.get("SPARK_GRAFT_DECODE_CACHE") == "0":  # A/B kill switch
-        use_decode_cache = False
     fixed_now = now_ms
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,10 +1,9 @@
-"""Deduplication operators — exact, MinHash-LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators — MinHash-LSH, SimHash, n-gram Jaccard.
 
 The reference's dedup plane is key-level (result-cache + singleflight); a
 training-data pipeline also needs CONTENT-level near-dup detection. All
 Spark-first:
 
-* exact     — hash-groupBy on a normalized fingerprint (one shuffle).
 * minhash   — per-doc signatures from shingle minima (explode → groupBy),
               banded LSH: docs sharing a band bucket are candidates; a
               self-join on (band, bucket) finds pairs WITHOUT the O(n²)
@@ -29,20 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..engine.session import SessionFrameCache
-from .text import doc_fingerprint
 
-# bounded registry for per-call shingle persists (see jaccard_pairs_pruned)
+# bounded registry for per-call candidate persists (see jaccard_pairs_arrays)
 _PRUNED_SHINGLE_REGISTRY = SessionFrameCache(max_per_app=4)
-
-
-def exact_dups(df: DataFrame, col: str = "text") -> DataFrame:
-    """Groups of byte-identical (normalized) docs: fingerprint → ids."""
-    return (
-        df.select("doc_id", doc_fingerprint(col, n_chars=1_000_000))
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def shingles(df: DataFrame, col: str = "text", k: int = 3) -> DataFrame:
@@ -156,32 +144,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_pairs_pruned(
-    docs: DataFrame, pairs: DataFrame, col: str = "text", k: int = 3
-) -> DataFrame:
-    """Candidate-pruned exact-Jaccard verification — the 100 TB shape:
-    shingles are EXPLODED ONLY for docs that appear in a candidate pair
-    (left-semi prune BEFORE the explode; LSH keeps candidates ≪ corpus),
-    instead of materializing the full corpus shingle table the verification
-    join will mostly discard. Values identical to the unpruned path."""
-    cand = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    pruned = docs.join(cand, "doc_id", "left_semi")
-    # persist the PRUNED shingle table: the verification consumes it three
-    # times (A side, B side, sizes) and would otherwise re-pay the
-    # semi-join + explode per branch. Safe at 100 TB because candidates
-    # ≪ corpus by LSH construction — this is never the full shingle table.
-    # Tracked in a bounded session registry so repeated calls in a
-    # long-lived driver unpersist older shingle tables instead of
-    # accumulating cache blocks forever (evicted plans recompute lazily).
-    sh = shingles(pruned, col, k).persist()
-    _PRUNED_SHINGLE_REGISTRY.register(docs.sparkSession, "pruned_shingles", sh)
-    return jaccard_pairs(sh, pairs)
-
-
 def jaccard_pairs_arrays(
     docs: DataFrame, pairs: DataFrame, col: str = "text", k: int = 3
 ) -> DataFrame:
@@ -204,8 +166,7 @@ def jaccard_pairs_arrays(
     # this function through FIVE references (cand union ×2, the broadcast,
     # and once per arr side) — persist the tiny pair list so the band join
     # runs once, and likewise the candidate-pruned array table which both
-    # join sides stream (bounded session registry, same discipline as the
-    # r5 pruned-shingle persist this replaces)
+    # join sides stream (bounded session registry)
     pairs = pairs.persist()
     _PRUNED_SHINGLE_REGISTRY.register(spark, "jaccard_pairs", pairs)
     cand = (

@@ -19,60 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-# scratch dirs (checkpoint + sink) for the streaming parity queries: fresh
-# per call (a reused checkpoint would make rep 2 of a bench a no-op resume,
-# not a measurement), claimed with owner.pid stamps so a later bench's
-# purge_stale_workdirs reclaims them once this process exits, and the
-# PREVIOUS call's dirs for the same query are deleted eagerly — best-of-N
-# benches no longer leak one checkpoint per rep (the r4 ck_* leak)
-_PARITY_SCRATCH: dict[str, list[str]] = {}
-
-
-def _parity_scratch(qname: str) -> tuple[str, str]:
-    from ..engine.workdirs import make_workdir
-
-    for d in _PARITY_SCRATCH.pop(qname, []):
-        shutil.rmtree(d, ignore_errors=True)
-    ck = make_workdir(f"imagor_ck_{qname}_")
-    out = make_workdir(f"imagor_ck_{qname}_sink_")
-    _PARITY_SCRATCH[qname] = [ck, out]
-    return ck, out
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _bounded_stream_conf(spark, input_dir: str):
-    """Scale-adaptive shuffle/state partitions for a BOUNDED streaming
-    replay (guide §2.2 'fewer, larger reduce partitions'): the parity
-    streams aggregate a few hundred KB of window state, yet inherited the
-    session's shuffle-partition count — on the bench session that meant 32
-    state stores × every micro-batch of checkpointing/commit overhead for
-    ~dozens of groups (r5 verdict wrong #4: ~1,800 task-seconds on 0.9 MB
-    of input). Partition count is derived from INPUT SIZE (~64 MB per
-    partition, floor 4), never from the local core count, so at real scale
-    the same formula yields the session default again; the session value is
-    restored when the stream has drained. Aggregation results are
-    partition-count-invariant, so hashes are unchanged (oracle-checked).
-    Env override SPARK_GRAFT_PARITY_PARTITIONS for A/B runs."""
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_bytes = 0
-    for root, _dirs, files in os.walk(input_dir):
-        for f in files:
-            try:
-                n_bytes += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    env = os.environ.get("SPARK_GRAFT_PARITY_PARTITIONS")
-    target = int(env) if env else max(4, min(default, (n_bytes >> 26) + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
-        yield target
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(default))
-
-
 # ------------------------------------------------------------------- text
 
 
@@ -708,17 +654,41 @@ GROUP BY 1, 2 ORDER BY 1, 2
 
 # ------------------------------------------------------- streaming parity
 
+# scratch dirs (checkpoint + sink) per parity query: fresh per call (a
+# reused checkpoint would make rep 2 of a bench a no-op resume, not a
+# measurement), claimed with owner.pid stamps so a later bench's
+# purge_stale_workdirs reclaims them once this process exits, and the
+# PREVIOUS call's dirs for the same query are deleted eagerly so repeated
+# reps leak no checkpoints
+_PARITY_SCRATCH: dict[str, list[str]] = {}
 
-def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL streaming query (availableNow) over the docs-derived clip
-    stream: transform → tumbling 10-min windows × out-codec → UPDATE mode
-    → foreachBatch :class:`AggSink` (exactly-once commit log; fresh
-    checkpoint per call). The read side folds the committed update log to
-    current state (latest batch wins per window) — the production shape:
-    resumable from checkpoint, no complete-mode state replay, no memory
-    sink. The DuckDB oracle predicts the same rollup by arithmetic — a
-    hash-checked STREAMING correctness gate."""
-    from ..engine.transform import make_transform_fn, OUTPUT_SCHEMA
+
+def _bounded_agg_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build_agg,
+    output_mode: str,
+    keys: list[str],
+    sentinel: tuple | None = None,
+) -> DataFrame:
+    """Run one REAL streaming aggregation (availableNow) over the
+    docs-derived clip stream and return its result ordered by ``keys``.
+
+    ``build_agg`` maps the source stream to the aggregate and sets its own
+    watermark; ``sentinel`` is one extra clips row unioned in as a second
+    file stream. A foreachBatch :class:`AggSink` commits each micro-batch
+    (exactly-once log, fresh checkpoint per call) and the read side folds
+    the log to current state, latest batch wins per ``keys`` group — the
+    production shape: resumable, no complete-mode replay, no memory sink.
+
+    Shuffle/state partitions follow INPUT SIZE (~64 MB per partition,
+    floor 4; guide §2.2 'fewer, larger reduce partitions'), never the local
+    core count: a few hundred KB of window state would otherwise pay the
+    session's partition count in per-batch state commits, while at real
+    scale the formula yields the session default again, which is restored
+    once the stream drains. Results are partition-count-invariant."""
+    from ..engine.workdirs import make_workdir
     from ..sources.docs_clips import CLIPS_SCHEMA, cached_clips, clips_cache_dir
     from ..streaming.sink import AggSink
 
@@ -727,32 +697,67 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once per sf_dir across ALL audio queries, batch and streaming
     cached_clips(spark, sf_dir)
     data_dir = os.path.join(clips_cache_dir(sf_dir), "data")
-    ck, out_dir = _parity_scratch("tumbling")
-    sink = AggSink(out_dir)
-    with _bounded_stream_conf(spark, data_dir):
-        stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(data_dir)
-        fn = make_transform_fn("1234", allow_unsafe=True)
-        res = stream.mapInPandas(fn, schema=OUTPUT_SCHEMA).withWatermark(
-            "ingest_ts", "5 minutes"
+    for d in _PARITY_SCRATCH.pop(name, []):
+        shutil.rmtree(d, ignore_errors=True)
+    ck = make_workdir(f"imagor_ck_{name}_")
+    out_dir = make_workdir(f"imagor_ck_{name}_sink_")
+    _PARITY_SCRATCH[name] = [ck, out_dir]
+    stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(data_dir)
+    if sentinel is not None:
+        sentinel_dir = os.path.join(out_dir, "sentinel_src")
+        spark.createDataFrame([sentinel], CLIPS_SCHEMA).write.parquet(sentinel_dir)
+        stream = stream.unionByName(
+            spark.readStream.schema(CLIPS_SCHEMA).parquet(sentinel_dir)
         )
-        agg = (
-            res.filter(F.col("status") == "ok")
+    sink = AggSink(out_dir)
+    n_bytes = 0
+    for root, _dirs, files in os.walk(data_dir):
+        for f in files:
+            try:
+                n_bytes += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(max(4, min(default, (n_bytes >> 26) + 1)))
+    )
+    try:
+        q = (
+            build_agg(stream)
+            .writeStream.foreachBatch(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(default))
+    return sink.read_latest(spark, keys).orderBy(*keys)
+
+
+def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming TUMBLING windows: transform → 10-min windows × out-codec,
+    UPDATE mode. The DuckDB oracle predicts the same rollup by arithmetic —
+    a hash-checked STREAMING correctness gate."""
+    from ..engine.transform import make_transform_fn, OUTPUT_SCHEMA
+
+    fn = make_transform_fn("1234", allow_unsafe=True)
+
+    def build_agg(stream: DataFrame) -> DataFrame:
+        return (
+            stream.mapInPandas(fn, schema=OUTPUT_SCHEMA)
+            .withWatermark("ingest_ts", "5 minutes")
+            .filter(F.col("status") == "ok")
             .groupBy(
                 F.window("ingest_ts", "10 minutes").getField("start").alias("window_start"),
                 F.col("codec").alias("out_codec"),
             )
             .agg(F.count("*").alias("n_clips"), F.sum("n_samples").alias("total_samples"))
         )
-        q = (
-            agg.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return sink.read_latest(spark, ["window_start", "out_codec"]).orderBy(
-        "window_start", "out_codec"
+
+    return _bounded_agg_stream(
+        spark, sf_dir, "tumbling", build_agg, "update", ["window_start", "out_codec"]
     )
 
 
@@ -792,23 +797,12 @@ GROUP BY 1, 2 ORDER BY 1, 2
 
 
 def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL streaming SLIDING windows (availableNow) over the docs-derived
-    clip stream: 10-min windows every 5 (each clip in exactly two) × codec,
-    UPDATE mode → foreachBatch :class:`AggSink` (exactly-once commit log,
-    resumable checkpoint, latest-batch-wins fold on read) — completes the
-    north_rule window triple (tumbling/session/sliding) as hash-checked
-    STREAMING gates, same production sink shape as the other two parity
-    queries (no complete mode, no memory sink)."""
-    from ..sources.docs_clips import CLIPS_SCHEMA, cached_clips, clips_cache_dir
-    from ..streaming.sink import AggSink
+    """Streaming SLIDING windows: 10-min windows every 5 (each clip in
+    exactly two) × codec, UPDATE mode — completes the north_rule window
+    triple (tumbling/session/sliding) as hash-checked STREAMING gates."""
 
-    cached_clips(spark, sf_dir)
-    data_dir = os.path.join(clips_cache_dir(sf_dir), "data")
-    ck, out_dir = _parity_scratch("sliding")
-    sink = AggSink(out_dir)
-    with _bounded_stream_conf(spark, data_dir):
-        stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(data_dir)
-        agg = (
+    def build_agg(stream: DataFrame) -> DataFrame:
+        return (
             stream.withWatermark("ingest_ts", "5 minutes")
             .groupBy(
                 F.window("ingest_ts", "10 minutes", "5 minutes")
@@ -818,16 +812,9 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count("*").alias("n_clips"))
         )
-        q = (
-            agg.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return sink.read_latest(spark, ["window_start", "codec"]).orderBy(
-        "window_start", "codec"
+
+    return _bounded_agg_stream(
+        spark, sf_dir, "sliding", build_agg, "update", ["window_start", "codec"]
     )
 
 
@@ -847,58 +834,41 @@ GROUP BY 1, 2 ORDER BY 1, 2
 
 
 def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL streaming session windows (availableNow) over the docs-derived
-    clip stream: ``session_window(ingest_ts, 10s)`` × codec. The derived
-    ingest pattern makes sessions analytically predictable — wav covers 14
-    consecutive seconds per 20 (6 s gaps < 10 s merge into ONE session),
-    flac 5-second runs every 20 (15 s gaps split), ogg single seconds every
-    20 (19 s gaps → singletons) — so the DuckDB oracle replays the session
-    assignment with lag/cumsum arithmetic and the result is hash-checked:
-    the streaming twin of the batch ``events_sessionize`` gate (closes the
-    r3 "sessions are ● only in batch" gap).
+    """Streaming SESSION windows: ``session_window(ingest_ts, 10s)`` ×
+    codec. The derived ingest pattern makes sessions analytically
+    predictable — wav covers 14 consecutive seconds per 20 (6 s gaps < 10 s
+    merge into ONE session), flac 5-second runs every 20 (15 s gaps split),
+    ogg single seconds every 20 (19 s gaps → singletons) — so the DuckDB
+    oracle replays the session assignment with lag/cumsum arithmetic and
+    the result is hash-checked: the streaming twin of the batch
+    ``events_sessionize`` gate.
 
-    Sink shape: APPEND mode (the only mode Spark allows for session-window
-    aggregation — each CLOSED session emits exactly once) → foreachBatch
-    :class:`AggSink` (exactly-once commit log, resumable checkpoint). A
-    session only closes when the event-time watermark passes its end, so a
-    bounded input's tail sessions would sit in state forever; the stream
-    unions a far-future SENTINEL row (an event-time heartbeat, the standard
-    flush idiom for bounded replays) that advances the watermark past every
-    real session's end, then filters the sentinel's own codec out of the
-    aggregate."""
+    APPEND mode (the only mode Spark allows for session-window aggregation
+    — each CLOSED session emits exactly once). A session only closes when
+    the event-time watermark passes its end, so a bounded input's tail
+    sessions would sit in state forever; the stream unions a far-future
+    SENTINEL row (an event-time heartbeat, the standard flush idiom for
+    bounded replays) that advances the watermark past every real session's
+    end, then filters the sentinel's own codec out of the result."""
     import datetime
 
-    from ..sources.docs_clips import CLIPS_SCHEMA, cached_clips, clips_cache_dir
-    from ..streaming.sink import AggSink
-
-    cached_clips(spark, sf_dir)
-    data_dir = os.path.join(clips_cache_dir(sf_dir), "data")
-    ck, out_dir = _parity_scratch("session")
     # real ingest_ts spans [base, base+3599 s]; sentinel at base+4000 s with
     # a 5-minute watermark delay puts the watermark at base+3700 s — past
     # every real session end (≤ base+3609 s) but not its own
-    sentinel_dir = os.path.join(out_dir, "sentinel_src")
-    spark.createDataFrame(
-        [(
-            "__sentinel__", b"", 8000, 0, "__hb__", "",
-            datetime.datetime(2026, 1, 1, 0, 0, 0) + datetime.timedelta(seconds=4000),
-            "unsafe/__sentinel__",
-        )],
-        CLIPS_SCHEMA,
-    ).write.parquet(sentinel_dir)
-    sink = AggSink(out_dir)
-    with _bounded_stream_conf(spark, data_dir):
-        stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(data_dir)
-        stream = stream.unionByName(
-            spark.readStream.schema(CLIPS_SCHEMA).parquet(sentinel_dir)
-        )
-        # NO codec filter inside the streaming query: a predicate on a grouping
-        # column gets pushed below the aggregate AND below the EventTimeWatermark
-        # node, pruning the sentinel before it can advance the watermark
-        # (measured: watermark stuck at real-max − delay, 33 sessions unflushed).
-        # It is also unnecessary — the sentinel's own session never closes, so
-        # append mode can never emit it; the read side filters as belt-and-braces.
-        agg = (
+    sentinel = (
+        "__sentinel__", b"", 8000, 0, "__hb__", "",
+        datetime.datetime(2026, 1, 1, 0, 0, 0) + datetime.timedelta(seconds=4000),
+        "unsafe/__sentinel__",
+    )
+
+    # NO codec filter inside the streaming query: a predicate on a grouping
+    # column gets pushed below the aggregate AND below the EventTimeWatermark
+    # node, pruning the sentinel before it can advance the watermark
+    # (measured: watermark stuck at real-max − delay, 33 sessions unflushed).
+    # It is also unnecessary — the sentinel's own session never closes, so
+    # append mode can never emit it; the read side filters as belt-and-braces.
+    def build_agg(stream: DataFrame) -> DataFrame:
+        return (
             stream.withWatermark("ingest_ts", "5 minutes")
             .groupBy(F.session_window("ingest_ts", "10 seconds").alias("sw"), "codec")
             .agg(F.count("*").alias("n_clips"))
@@ -908,19 +878,11 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_clips",
             )
         )
-        q = (
-            agg.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        sink.read_latest(spark, ["codec", "session_start"])
-        .filter(F.col("codec") != "__hb__")
-        .orderBy("codec", "session_start")
-    )
+
+    return _bounded_agg_stream(
+        spark, sf_dir, "session", build_agg, "append", ["codec", "session_start"],
+        sentinel=sentinel,
+    ).filter(F.col("codec") != "__hb__")
 
 
 ORACLE_STREAM_SESSION = """

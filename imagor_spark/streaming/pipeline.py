@@ -5,24 +5,18 @@ Streaming (SURVEY §3.1 Spark mapping):
 
   readStream (file/Iceberg source)
     → watermark on ingest_ts                     (event-time plane)
-    → salted repartition on the skewed codec key (scale plane)
     → dropDuplicatesWithinWatermark(clip_id)     (singleflight +
                                                   single-render-per-key,
                                                   imagor.go:842-884)
-    → transform (vectorized decode→ops→encode)   (the processor)
-    → foreachBatch IdempotentSink                (result storage save,
-                                                  exactly-once)
+    → foreachBatch TransformingSink              (result-cache probe,
+                                                  admission, vectorized
+                                                  decode→ops→encode,
+                                                  exactly-once save)
 
 State lives in RocksDB (spark.sql.streaming.stateStore.providerClass) so
 dedup state at 10^12 keys spills off-heap; the within-watermark retention
 bound keeps state finite (the reference's result cache has TTL semantics
 too — getTtl, imagor.go:991-1003).
-
-Skew: ``codec`` is 70 % 'wav' (FIXTURES §1). Stateful dedup shuffles by
-clip_id (uniform), but the downstream windowed agg groups by codec — we
-salt it: ``salt = pmod(hash(clip_id), N_SALTS)`` is added to the group key,
-then a second tiny agg folds the salts. At 1000 executors this turns one
-hot partition into N_SALTS even ones; AQE handles residual skew.
 """
 
 from __future__ import annotations
@@ -31,8 +25,14 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..engine.config import CONFIG_SCHEMA, DEFAULT_CONFIG_ROWS
-from ..engine.transform import make_transform_fn, OUTPUT_SCHEMA
+from ..engine.config import params_config_df, resolve_with_config
+from ..engine.transform import (
+    OUTPUT_SCHEMA,
+    _anti_join_rendered,
+    make_key_validity_udf,
+    make_transform_fn,
+    singleflight_within,
+)
 from ..sources.clips import CLIPS_SCHEMA
 from .sink import IdempotentSink
 
@@ -41,87 +41,17 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def configure_streaming(spark, use_rocksdb: bool = True) -> None:
-    if use_rocksdb:
-        try:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-        except Exception:
-            pass  # fall back to HDFSBackedStateStoreProvider
-
-
-def build_stream(
-    spark,
-    input_dir: str,
-    secret: str | None = None,
-    watermark: str = "10 minutes",
-    dedup: bool = True,
-    salt_partitions: int | None = None,
-    assets: dict | None = None,
-    max_files_per_trigger: int | None = None,
-    for_aggregation: bool = False,
-    allow_unsafe: bool | None = None,
-    rendered_keys: DataFrame | None = None,
-) -> DataFrame:
-    """Source → result-cache anti-join → watermark → dedup → transform.
-    Returns the streaming result DataFrame (un-sunk), so windowed aggs can
-    branch off it (``for_aggregation=True`` is the layout the windowed-agg
-    queries use). The PRODUCTION sink path is ``run_pipeline`` →
-    :class:`TransformingSink`, where the transform runs per-batch inside
-    foreachBatch and the result-cache index is re-read each micro-batch;
-    the ``rendered_keys`` parameter here takes a STATIC snapshot, which is
-    fine for bounded availableNow aggregations but would miss mid-stream
-    commits on a long-running stream.
-
-    ``rendered_keys``: static DataFrame[result_key] of already-committed
-    renders (``IdempotentSink.read_rendered_keys``). Incoming clips whose
-    ops resolve to a committed key are dropped BEFORE decode — the
-    reference's cache-hit-before-render economy (imagor.go:403-408,
-    loadResult :600-664)."""
-    reader = spark.readStream.schema(CLIPS_SCHEMA)
-    if max_files_per_trigger:
-        # admission control ≅ ProcessConcurrency/ProcessQueueSize semaphores
-        # (imagor.go:134-137,409-427): bound in-flight work per trigger
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    if rendered_keys is not None:
-        from ..engine.transform import skip_rendered
-
-        stream = skip_rendered(stream, rendered_keys)
-    b_assets = spark.sparkContext.broadcast(assets) if assets else None
-    fn = make_transform_fn(secret, b_assets, allow_unsafe=allow_unsafe)
-    if not for_aggregation:
-        # SINK layout: dedup BEFORE transform — the singleflight semantic
-        # (imagor.go:842-884): a duplicate clip_id must never pay the render.
-        # foreachBatch is not a stateful operator, so no watermark is needed
-        # downstream of the transform (mapInPandas drops the watermark tag).
-        stream = stream.withWatermark("ingest_ts", watermark)
-        if dedup:
-            stream = stream.dropDuplicatesWithinWatermark(["clip_id"])
-        if salt_partitions:
-            stream = stream.repartition(
-                salt_partitions,
-                F.col("codec"),
-                F.pmod(F.hash("clip_id"), F.lit(salt_partitions)),
-            )
-        return stream.mapInPandas(fn, schema=OUTPUT_SCHEMA)
-    # AGGREGATION layout: windowed aggs need an event-time watermark on the
-    # *transformed* stream, and Spark allows only one watermark definition
-    # per query — so here the watermark (and optional dedup) sit after the
-    # transform. Duplicates may render twice in this layout; the agg itself
-    # still sees each clip once when dedup=True (multiple stateful operators
-    # chained, Spark 3.5+ allowMultiple).
-    out = stream.mapInPandas(fn, schema=OUTPUT_SCHEMA)
-    out = out.withWatermark("ingest_ts", watermark)
-    if dedup:
-        out = out.dropDuplicatesWithinWatermark(["clip_id"])
-    return out
+def configure_streaming(spark) -> None:
+    try:
+        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    except Exception:
+        pass  # fall back to HDFSBackedStateStoreProvider
 
 
 def build_raw_stream(
     spark,
     input_dir: str,
     watermark: str = "10 minutes",
-    dedup: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Source → watermark → stateful dedup, NO transform: the render plane
@@ -135,23 +65,23 @@ def build_raw_stream(
         # admission control ≅ ProcessConcurrency/ProcessQueueSize semaphores
         # (imagor.go:134-137,409-427): bound in-flight work per trigger
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir).withWatermark("ingest_ts", watermark)
-    if dedup:
-        # singleflight / single-render-per-key (imagor.go:842-884): a
-        # duplicate clip_id must never pay the render
-        stream = stream.dropDuplicatesWithinWatermark(["clip_id"])
-    return stream
+    # singleflight / single-render-per-key (imagor.go:842-884): a duplicate
+    # clip_id must never pay the render
+    return (
+        reader.parquet(input_dir)
+        .withWatermark("ingest_ts", watermark)
+        .dropDuplicatesWithinWatermark(["clip_id"])
+    )
 
 
 class TransformingSink(IdempotentSink):
     """The request lifecycle (imagor.go:275-540) executed INSIDE foreachBatch:
 
-      batch → result-cache anti-join (index re-read THIS batch)
+      batch → key + signature/expiry pre-check
+            → result-cache anti-join (index re-read THIS batch)
             → within-batch singleflight (same result_key renders once)
             → admission (broadcast config dim, quarantine pre-decode)
-            → salted repartition (optional)
             → decode→ops→encode transform
-            ∪ quarantined rows
             → exactly-once commit (IdempotentSink)
 
     Re-reading the committed rendered-keys index per micro-batch is the
@@ -178,14 +108,12 @@ class TransformingSink(IdempotentSink):
         self,
         out_dir: str,
         transform_fn,
+        secret: str | None,
+        allow_unsafe: bool | None = None,
         partition_by: str | None = "codec",
         rendered_compact_every: int = 32,
         result_cache: IdempotentSink | None = None,
         result_cache_max_age_ms: int | None = None,
-        admission_rows: list | None = None,
-        admission_schema: str = CONFIG_SCHEMA,
-        salt_partitions: int | None = None,
-        validity_args: tuple | None = None,
     ):
         super().__init__(
             out_dir,
@@ -195,24 +123,15 @@ class TransformingSink(IdempotentSink):
         self.transform_fn = transform_fn
         self.result_cache = result_cache
         self.result_cache_max_age_ms = result_cache_max_age_ms
-        self.admission_rows = admission_rows
-        self.admission_schema = admission_schema
-        self.salt_partitions = salt_partitions
-        # (secret, alg, truncate, allow_unsafe, now_ms) for the cheap
-        # pre-render signature/expiry check feeding winner selection — a
-        # rejected duplicate must never suppress a valid same-key row
-        # (r5 ADVICE #1; imagor.go validates before singleflight)
-        self.validity_args = validity_args
+        # the cheap pre-render signature/expiry check feeding winner
+        # selection, with the transform's own signer posture: a rejected
+        # duplicate must never suppress a valid same-key row (the
+        # reference validates before singleflight, imagor.go:290-338 vs :842)
+        self.key_validity = make_key_validity_udf(secret, allow_unsafe=allow_unsafe)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
             return  # replayed batch: effect already visible → exactly-once
-        from ..engine.transform import (
-            _anti_join_rendered,
-            singleflight_within,
-            with_result_key,
-        )
-
         spark = batch_df.sparkSession
         # one key projection serves BOTH cache economies (the reference
         # derives the key once per request too, imagor.go:403-408):
@@ -232,20 +151,12 @@ class TransformingSink(IdempotentSink):
         # carry different ops) or a pre-dedup winner dim (a winner clip_id
         # consumed by an earlier batch's state would silently drop its
         # whole key group) — both rejected as semantics changes.
-        ok_col = None
-        if self.validity_args is not None:
-            from ..engine.transform import make_key_validity_udf
-
-            kv = make_key_validity_udf(*self.validity_args)
-            keyed = (
-                batch_df.withColumn("__kv", kv(F.col("ops")))
-                .withColumn("__rk", F.col("__kv.rk"))
-                .withColumn("__ok", F.col("__kv.ok"))
-                .drop("__kv")
-            )
-            ok_col = "__ok"
-        else:
-            keyed = with_result_key(batch_df, out_col="__rk")
+        keyed = (
+            batch_df.withColumn("__kv", self.key_validity(F.col("ops")))
+            .withColumn("__rk", F.col("__kv.rk"))
+            .withColumn("__ok", F.col("__kv.ok"))
+            .drop("__kv")
+        )
         if self.result_cache is not None and (
             # cheap driver-side probe: with nothing committed yet (fresh
             # stream, empty cache dir) the anti-join is skipped entirely
@@ -261,47 +172,14 @@ class TransformingSink(IdempotentSink):
                 spark, max_age_ms=self.result_cache_max_age_ms
             )
             keyed = _anti_join_rendered(keyed, rendered)
-        batch_df = singleflight_within(keyed, ok_col=ok_col).drop(
-            "__rk", *([ok_col] if ok_col else [])
+        batch_df = singleflight_within(keyed, ok_col="__ok").drop("__rk", "__ok")
+        # attach admit_status via broadcast join; the transform UDF
+        # quarantines non-ok rows pre-decode (single plan, no union)
+        batch_df = resolve_with_config(batch_df, params_config_df(spark)).drop(
+            "decoder", "max_dur_ms", "max_sr_hz", "target_store", "default_quality",
         )
-        if self.admission_rows is not None:
-            from ..engine.config import resolve_with_config
-
-            cfg = spark.createDataFrame(self.admission_rows, self.admission_schema)
-            # attach admit_status via broadcast join; the transform UDF
-            # quarantines non-ok rows pre-decode (single plan, no union)
-            batch_df = resolve_with_config(batch_df, cfg).drop(
-                "decoder", "max_dur_ms", "max_sr_hz", "target_store",
-                "default_quality",
-            )
-        if self.salt_partitions:
-            batch_df = batch_df.repartition(
-                self.salt_partitions,
-                F.col("codec"),
-                F.pmod(F.hash("clip_id"), F.lit(self.salt_partitions)),
-            )
         out = batch_df.mapInPandas(self.transform_fn, schema=OUTPUT_SCHEMA)
         self._commit(out, batch_id)
-
-
-def run_to_sink(
-    result_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    partition_by: str | None = "codec",
-):
-    """Attach the exactly-once sink and start the query."""
-    sink = IdempotentSink(out_dir, partition_by=partition_by)
-    writer = (
-        result_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    return q, sink
 
 
 def run_pipeline(
@@ -311,16 +189,12 @@ def run_pipeline(
     checkpoint_dir: str | None = None,
     secret: str | None = None,
     watermark: str = "10 minutes",
-    dedup: bool = True,
-    salt_partitions: int | None = None,
     assets: dict | None = None,
-    use_rocksdb: bool = True,
     wait: bool = True,
     allow_unsafe: bool | None = None,
     result_cache_dir: str | None = None,
     max_files_per_trigger: int | None = None,
     result_cache_max_age_ms: int | None = None,
-    admission: bool = True,
 ):
     """End-to-end: build, sink, (optionally) wait for availableNow drain.
 
@@ -328,30 +202,22 @@ def run_pipeline(
     index is anti-joined against each batch BEFORE the transform — re-read
     per micro-batch, so keys committed mid-stream (including by this very
     stream when ``result_cache_dir == out_dir``, the resume-with-cache
-    pattern) are seen without a restart.
-
-    ``admission``: broadcast-join the per-codec config dimension and
-    quarantine unknown-codec / over-limit rows pre-decode (the reference's
-    CheckResolution + loader resolution chain)."""
-    configure_streaming(spark, use_rocksdb)
+    pattern) are seen without a restart."""
+    configure_streaming(spark)
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
     b_assets = spark.sparkContext.broadcast(assets) if assets else None
-    fn = make_transform_fn(secret, b_assets, allow_unsafe=allow_unsafe)
     sink = TransformingSink(
         out_dir,
-        transform_fn=fn,
+        transform_fn=make_transform_fn(secret, b_assets, allow_unsafe=allow_unsafe),
+        secret=secret,
+        allow_unsafe=allow_unsafe,
         result_cache=(
             IdempotentSink(result_cache_dir) if result_cache_dir else None
         ),
         result_cache_max_age_ms=result_cache_max_age_ms,
-        admission_rows=DEFAULT_CONFIG_ROWS if admission else None,
-        salt_partitions=salt_partitions,
-        # same signer posture as the transform itself, so the winner
-        # pre-check and the render agree on what rejects
-        validity_args=(secret, "sha1", 0, allow_unsafe, None),
     )
     stream = build_raw_stream(
-        spark, input_dir, watermark=watermark, dedup=dedup,
+        spark, input_dir, watermark=watermark,
         max_files_per_trigger=max_files_per_trigger,
     )
     q = (

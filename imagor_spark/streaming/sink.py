@@ -38,10 +38,13 @@ full payload batch three jobs long).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 
 from pyspark.sql import DataFrame, functions as F
+
+log = logging.getLogger(__name__)
 
 # statuses whose results land in result storage (≅ successful render)
 _RENDERED_STATUSES = ("ok", "meta")
@@ -119,9 +122,7 @@ class IdempotentSink:
         # is near-free CPU and its 5% loss costs ~1.2 s even on the
         # 122 MB/s disk workdir — it wins on BOTH workdirs, and the same
         # holds at scale for any sink whose payloads are compressed codecs.
-        # Env-overridable for A/B measurement (BENCH.md codec study).
-        compression = os.environ.get("SPARK_GRAFT_SINK_COMPRESSION", "snappy")
-        writer = batch_df.write.mode("overwrite").option("compression", compression)
+        writer = batch_df.write.mode("overwrite").option("compression", "snappy")
         if self.partition_by:
             writer = writer.partitionBy(self.partition_by)
         writer.parquet(data_path)
@@ -167,7 +168,7 @@ class IdempotentSink:
             try:
                 self.compact_rendered_keys(spark)
             except Exception as exc:  # pragma: no cover - transient FS/Spark
-                print(f"[sink] rendered-keys compaction deferred: {exc}")
+                log.warning("rendered-keys compaction deferred: %s", exc, exc_info=True)
 
     def _write_side_tables(self, written: DataFrame, batch_id: int) -> None:
         """Lineage / metrics / rendered-keys side tables from a

@@ -5,7 +5,6 @@ kill-and-resume from checkpoint and duplicate-clip suppression."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,9 +16,8 @@ from imagor_spark.sources.clips import (
     make_pdf,
     make_row,
 )
-from imagor_spark.streaming.pipeline import build_stream, configure_streaming, run_pipeline
+from imagor_spark.streaming.pipeline import configure_streaming, run_pipeline
 from imagor_spark.streaming.sink import IdempotentSink
-from imagor_spark.streaming.windows import batch_sessionize, session_agg, tumbling_agg
 
 
 @pytest.fixture()
@@ -131,86 +129,6 @@ def test_late_data_dropped_beyond_watermark(spark, dirs):
     )
     out = sink.read_committed(spark)
     assert out.groupBy("clip_id").count().filter("count > 1").count() == 0
-
-
-def test_tumbling_and_session_windows_streaming(spark, dirs):
-    """Windowed aggregates run as a streaming query and produce finite
-    per-(window, codec, sr_bucket) rollups."""
-    write_batch(spark, dirs["in"], 0, 80)
-    configure_streaming(spark)
-    result = build_stream(spark, dirs["in"], secret=SECRET, allow_unsafe=True, watermark="5 minutes", for_aggregation=True)
-    agg = tumbling_agg(result, window="1 minute")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("tumble_out")
-        .option("checkpointLocation", dirs["ckpt"] + "-w")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM tumble_out").collect()
-    # append mode only emits closed windows; late tail may hold some open —
-    # presence + shape is the assertion
-    assert all(r["n_clips"] >= 1 for r in rows)
-
-    # sliding windows: 2-min windows sliding 1 min — every clip must land
-    # in exactly two windows, so total n_clips across windows = 2× rows seen
-    from imagor_spark.streaming.windows import sliding_agg
-
-    slid = sliding_agg(
-        build_stream(spark, dirs["in"], secret=SECRET, allow_unsafe=True,
-                     watermark="5 minutes", for_aggregation=True)
-    )
-    q_s = (
-        slid.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("slide_out")
-        .option("checkpointLocation", dirs["ckpt"] + "-sl")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_s.awaitTermination()
-    total = spark.sql("SELECT SUM(n_clips) s FROM slide_out").first()["s"]
-    n_in = spark.read.parquet(dirs["in"]).dropDuplicates(["clip_id"]).count()
-    assert total == 2 * n_in
-
-    sess = session_agg(build_stream(spark, dirs["in"], secret=SECRET, allow_unsafe=True, watermark="5 minutes", for_aggregation=True))
-    q2 = (
-        sess.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_out")
-        .option("checkpointLocation", dirs["ckpt"] + "-s")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    srows = spark.sql("SELECT * FROM sess_out").collect()
-    assert all(r["n_clips"] >= 1 for r in srows)
-
-
-def test_salted_agg_matches_unsalted(spark):
-    """Salted two-phase agg folds to identical counts/sums."""
-    df = generate_clips_df(spark, 200, signed_mix=False)
-    from imagor_spark.engine.transform import transform
-
-    res = transform(df, secret=SECRET, allow_unsafe=True).cache()
-    plain = tumbling_agg(res, salted=False).select(
-        "win", "codec", "sr_bucket", "n_clips", "out_bytes"
-    )
-    salted = tumbling_agg(res, salted=True).select(
-        "win", "codec", "sr_bucket", "n_clips", "out_bytes"
-    )
-    a = {tuple(map(str, r[:3])): (r[3], r[4]) for r in plain.collect()}
-    b = {tuple(map(str, r[:3])): (r[3], r[4]) for r in salted.collect()}
-    assert a == b
-
-
-def test_batch_sessionize(spark):
-    df = generate_clips_df(spark, 100, signed_mix=False)
-    sess = batch_sessionize(df, gap_seconds=30)
-    total = sess.agg(F.sum("n_rows")).first()[0]
-    assert total == 100
 
 
 def test_result_cache_skips_already_rendered(spark, dirs):
@@ -596,13 +514,13 @@ def test_compaction_during_live_stream_with_same_dir_cache(spark, dirs):
         ).parquet(dirs["in"])
     from imagor_spark.streaming.pipeline import TransformingSink, build_raw_stream
     from imagor_spark.engine.transform import make_transform_fn
-    from imagor_spark.engine.config import DEFAULT_CONFIG_ROWS
 
     sink = TransformingSink(
         dirs["out"],
         transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
+        secret=SECRET,
+        allow_unsafe=True,
         result_cache=IdempotentSink(dirs["out"]),  # SAME dir, live
-        admission_rows=DEFAULT_CONFIG_ROWS,
         rendered_compact_every=2,  # compact aggressively mid-stream
     )
     stream = build_raw_stream(spark, dirs["in"], max_files_per_trigger=1)
