@@ -12,6 +12,7 @@ executor once (the north_star's required stream-table join).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 CONFIG_SCHEMA = (
     "codec string, decoder string, max_dur_ms int, max_sr_hz int, "
@@ -29,7 +30,13 @@ DEFAULT_CONFIG_ROWS = [
 
 
 def params_config_df(spark) -> DataFrame:
-    return spark.createDataFrame(DEFAULT_CONFIG_ROWS, CONFIG_SCHEMA)
+    """The dimension as a SQL ``VALUES`` relation: it plans a JVM-local
+    ``LocalTableScan`` and needs no Spark job, where ``createDataFrame`` of
+    a Python list plans ``Scan ExistingRDD`` — a Spark job on every use."""
+    names = ", ".join(StructType.fromDDL(CONFIG_SCHEMA).names)
+    # repr of the fixture's str/int values is a valid Spark SQL literal
+    values = ", ".join(f"({', '.join(map(repr, row))})" for row in DEFAULT_CONFIG_ROWS)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS config({names})")
 
 
 def resolve_with_config(clips_df: DataFrame, config_df: DataFrame) -> DataFrame:

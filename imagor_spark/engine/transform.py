@@ -14,7 +14,7 @@ Scale design:
   repeat heavily — ≅ singleflight's common-subexpression win);
 * rejected rows never decode (signature checked before touching payload);
 * no shuffle introduced: the stage is a narrow map, so upstream partitioning
-  (e.g. the salted-codec repartition) is preserved;
+  is preserved;
 * watermark/overlay assets ship once per executor via Spark broadcast
   (≅ the loader callback, imagor.go:399-402).
 """

@@ -1,17 +1,21 @@
 """The continuous dataflow — micro-batch replaces HTTP request.
 
 ≅ the reference's request lifecycle (imagor.go:275-540) as Structured
-Streaming (SURVEY §3.1 Spark mapping):
+Streaming (SURVEY §3.1 Spark mapping). Only narrow columns cross the
+stateful stage; the payload is fetched late, for the rows that survive:
 
-  readStream (file/Iceberg source)
+  readStream (file source)
+    → project clip_id, ingest_ts, ops, _metadata.file_path/row_index
     → watermark on ingest_ts                     (event-time plane)
     → dropDuplicatesWithinWatermark(clip_id)     (singleflight +
                                                   single-render-per-key,
                                                   imagor.go:842-884)
-    → foreachBatch TransformingSink              (result-cache probe,
-                                                  admission, vectorized
-                                                  decode→ops→encode,
-                                                  exactly-once save)
+    → foreachBatch TransformingSink:
+        key + signature/expiry pre-check, persisted once per trigger
+        → result-cache anti-join → within-batch singleflight
+        → late fetch: read only the survivors' source files, semi-join
+          on (file_path, row_index)
+        → admission → vectorized decode→ops→encode → exactly-once save
 
 State lives in RocksDB (spark.sql.streaming.stateStore.providerClass) so
 dedup state at 10^12 keys spills off-heap; the within-watermark retention
@@ -54,12 +58,20 @@ def build_raw_stream(
     watermark: str = "10 minutes",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Source → watermark → stateful dedup, NO transform: the render plane
-    runs per-batch inside :class:`TransformingSink` instead, so each
-    micro-batch re-resolves the committed result-cache index and admission
-    config (the reference probes result storage per request,
-    imagor.go:403-408 — a snapshot taken once at stream start would miss
-    keys committed mid-stream and re-render duplicates)."""
+    """Source → narrow projection → watermark → stateful dedup, NO
+    transform: the render plane runs per-batch inside
+    :class:`TransformingSink` instead, so each micro-batch re-resolves the
+    committed result-cache index and admission config (the reference
+    probes result storage per request, imagor.go:403-408 — a snapshot
+    taken once at stream start would miss keys committed mid-stream and
+    re-render duplicates).
+
+    The stream carries ``clip_id, ingest_ts, ops, file_path, row_index``:
+    the payload never enters the dedup exchange or its state. The sink
+    locates each surviving row's payload by its source file and row index
+    (the file source's ``_metadata`` fields, which survive the dedup).
+    ``input_dir`` must be a flat parquet dir: the late fetch reads files by
+    path, so Hive partition-directory values would not reach the sink."""
     reader = spark.readStream.schema(CLIPS_SCHEMA)
     if max_files_per_trigger:
         # admission control ≅ ProcessConcurrency/ProcessQueueSize semaphores
@@ -69,17 +81,42 @@ def build_raw_stream(
     # clip_id must never pay the render
     return (
         reader.parquet(input_dir)
+        .select("clip_id", "ingest_ts", "ops",
+                "_metadata.file_path", "_metadata.row_index")
         .withWatermark("ingest_ts", watermark)
         .dropDuplicatesWithinWatermark(["clip_id"])
+    )
+
+
+def _fetch_payloads(spark, survivors: DataFrame) -> DataFrame | None:
+    """Late materialization: the full source rows of ``survivors`` (a
+    ``file_path, row_index`` frame), read from exactly the files they came
+    from, or None when there are no survivors. ``_metadata.file_path`` is a
+    URI string (a space is ``%20``, a literal ``%`` is ``%25``); it is
+    decoded to a Hadoop path before it is handed back to the reader, which
+    would otherwise look for a file named with the escapes."""
+    jvm = spark.sparkContext._jvm
+    paths = [
+        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r.file_path)).toString()
+        for r in survivors.select("file_path").distinct().collect()
+    ]
+    if not paths:
+        return None
+    return (
+        spark.read.schema(CLIPS_SCHEMA).parquet(*paths)
+        .select("*", "_metadata.file_path", "_metadata.row_index")
+        .join(F.broadcast(survivors), ["file_path", "row_index"], "left_semi")
+        .drop("file_path", "row_index")
     )
 
 
 class TransformingSink(IdempotentSink):
     """The request lifecycle (imagor.go:275-540) executed INSIDE foreachBatch:
 
-      batch → key + signature/expiry pre-check
+      narrow batch → key + signature/expiry pre-check (persisted once)
             → result-cache anti-join (index re-read THIS batch)
             → within-batch singleflight (same result_key renders once)
+            → late payload fetch (survivors' source rows only)
             → admission (broadcast config dim, quarantine pre-decode)
             → decode→ops→encode transform
             → exactly-once commit (IdempotentSink)
@@ -95,13 +132,11 @@ class TransformingSink(IdempotentSink):
 
     Admission (≅ CheckResolution processor.go:506-516 + the loader
     resolution chain imagor.go:699-760): the per-codec config dimension is
-    broadcast-joined against the batch and the resulting ``admit_status``
-    column rides INTO the transform UDF, which quarantines non-ok rows
-    before touching a payload byte. Scale shape: the dimension is tiny
-    (one row per codec) so the join is a broadcast, and admission adds NO
-    extra branch — the micro-batch (including its stateful-dedup subtree)
-    is planned and scanned exactly once, unlike a split+union layout which
-    would execute it per branch.
+    broadcast-joined against the fetched rows and the resulting
+    ``admit_status`` column rides INTO the transform UDF, which quarantines
+    non-ok rows before touching a payload byte. Scale shape: the dimension
+    is tiny (one row per codec) so the join is a broadcast, and admission
+    adds NO extra branch over the fetched rows.
     """
 
     def __init__(
@@ -138,25 +173,35 @@ class TransformingSink(IdempotentSink):
         #   across batches — anti-join vs the committed rendered-keys index;
         #   within a batch — singleflight (imagor.go:842-884): same-key rows
         #   arriving in ONE trigger render once, not N times.
-        # NOTE (r6 optimization round, measured): the singleflight winner
-        # dim below re-reads the stateful-dedup exchange (3.9 GB at sf0.1)
-        # — shuffle read is 2× shuffle write per batch. A narrow (clip_id,
-        # ops) re-derivation was tried and did NOT shrink it: inside
-        # foreachBatch the projection cannot be pushed below the dedup's
-        # exchange, so the dim branch reads the same full-width blocks
-        # either way (~36 s task-time warm ≈ 1 s wall of a ~20 s run —
-        # not the dominant cost; the transform+encode stage is). Killing
-        # the second read entirely would require either dedup state keyed
-        # on result_key (changes which rows commit: duplicate clip_ids may
-        # carry different ops) or a pre-dedup winner dim (a winner clip_id
-        # consumed by an earlier batch's state would silently drop its
-        # whole key group) — both rejected as semantics changes.
+        # The keyed frame is narrow (no payload), so it is cheap to persist,
+        # and it is materialized by ONE full action: every later branch
+        # (anti-join, singleflight's winner dim, the survivors' broadcast)
+        # reads the cache, and the stateful dedup — with its RocksDB state
+        # commit — runs once per trigger instead of once per branch. A
+        # partial action (isEmpty, limit) would cache only some partitions
+        # and re-run the stateful stage for the rest. Measured on a
+        # 2,000-clip drain (one data trigger plus the zero-row trigger
+        # availableNow runs last), shared 4-core VM: shuffle write 157 MB
+        # → 0.4 MB, shuffle read 314 → 0.4 MB, RocksDB commit time summed
+        # over both triggers 6.1 → 2.8 s.
         keyed = (
             batch_df.withColumn("__kv", self.key_validity(F.col("ops")))
-            .withColumn("__rk", F.col("__kv.rk"))
-            .withColumn("__ok", F.col("__kv.ok"))
-            .drop("__kv")
+            .select("clip_id", "file_path", "row_index",
+                    F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok"))
+            .persist()
         )
+        try:
+            out = self._render(spark, keyed) if keyed.count() else None
+            if out is None:
+                # zero rows to render: commit the empty-batch layout
+                out = spark.createDataFrame(spark.sparkContext.emptyRDD(), OUTPUT_SCHEMA)
+            self._commit(out, batch_id)
+        finally:
+            keyed.unpersist()
+
+    def _render(self, spark, keyed: DataFrame) -> DataFrame | None:
+        """Anti-join → singleflight on the cached narrow frame, then fetch
+        and render the survivors; None when no row survives."""
         if self.result_cache is not None and (
             # cheap driver-side probe: with nothing committed yet (fresh
             # stream, empty cache dir) the anti-join is skipped entirely
@@ -166,20 +211,23 @@ class TransformingSink(IdempotentSink):
             # FRESH read of the committed index — sees keys committed by
             # earlier batches of this very stream (live cache refresh).
             # The compacted index is small relative to the stream (TTL-
-            # bounded), so Spark plans a broadcast anti-join — payloads
-            # never shuffle for cache-hit checks.
+            # bounded), so Spark plans a broadcast anti-join.
             rendered = self.result_cache.read_rendered_keys(
                 spark, max_age_ms=self.result_cache_max_age_ms
             )
             keyed = _anti_join_rendered(keyed, rendered)
-        batch_df = singleflight_within(keyed, ok_col="__ok").drop("__rk", "__ok")
+        survivors = singleflight_within(keyed, ok_col="__ok").select(
+            "file_path", "row_index"
+        )
+        clips = _fetch_payloads(spark, survivors)
+        if clips is None:
+            return None
         # attach admit_status via broadcast join; the transform UDF
         # quarantines non-ok rows pre-decode (single plan, no union)
-        batch_df = resolve_with_config(batch_df, params_config_df(spark)).drop(
+        admitted = resolve_with_config(clips, params_config_df(spark)).drop(
             "decoder", "max_dur_ms", "max_sr_hz", "target_store", "default_quality",
         )
-        out = batch_df.mapInPandas(self.transform_fn, schema=OUTPUT_SCHEMA)
-        self._commit(out, batch_id)
+        return admitted.mapInPandas(self.transform_fn, schema=OUTPUT_SCHEMA)
 
 
 def run_pipeline(

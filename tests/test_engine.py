@@ -9,10 +9,16 @@ import json
 
 import numpy as np
 import pytest
+from pyspark.sql.types import StructType
 
 from imagor_spark.audio import codecs, kernels
 from imagor_spark.audio.apply import apply_transformations
-from imagor_spark.engine.config import params_config_df, resolve_with_config, split_admitted
+from imagor_spark.engine.config import (
+    CONFIG_SCHEMA,
+    params_config_df,
+    resolve_with_config,
+    split_admitted,
+)
 from imagor_spark.engine.transform import split_quarantine, transform
 from imagor_spark.imagorpath import parse
 from imagor_spark.sources.clips import (
@@ -143,6 +149,11 @@ def test_config_broadcast_join(spark, clips):
     assert rejected.count() == 0
     plan = resolved._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
+    # the dimension is a JVM-local relation: no Python job to build it
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    want = StructType.fromDDL(CONFIG_SCHEMA)
+    got = params_config_df(spark).schema
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in want]
 
 
 def test_unsafe_only_mode_rejects_signed(spark, clips):

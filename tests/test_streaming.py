@@ -77,6 +77,75 @@ def test_duplicate_clip_renders_once(spark, dirs):
     assert out.count() == pdf["clip_id"].nunique()
 
 
+def test_dedup_keeps_one_whole_source_row(spark, dirs):
+    """Two rows share a clip_id in one trigger, with different ops, bytes
+    and transcript. The dedup stream carries no payload; the sink fetches
+    it late by (source file, row index). The committed row's ops,
+    transcript and payload must all come from the ONE source row the dedup
+    kept — never one row's ops rendered over the other row's bytes."""
+    import pandas as pd
+
+    from imagor_spark.audio import apply as audio_apply
+    from imagor_spark.imagorpath import parse
+
+    a, b = make_row(42, 1, "unsafe"), make_row(42, 2, "unsafe")
+    assert a["bytes"] != b["bytes"]
+    b["clip_id"] = a["clip_id"]
+    a["ops"] = f"unsafe/fit-in/16000x0/{a['clip_id']}"
+    b["ops"] = f"unsafe/filters:lowpass(0.5):gain(-6)/{a['clip_id']}"
+    a["transcript"], b["transcript"] = "first row", "second row"
+    spark.createDataFrame(pd.DataFrame([a, b]), schema=CLIPS_SCHEMA).coalesce(
+        1
+    ).write.mode("append").parquet(dirs["in"])
+    q, sink = run_pipeline(
+        spark, dirs["in"], dirs["out"], dirs["ckpt"], secret=SECRET, allow_unsafe=True, wait=True
+    )
+    out = sink.read_committed(spark).collect()
+    assert len(out) == 1 and out[0]["status"] == "ok"
+    kept = {r["ops"]: r for r in (a, b)}[out[0]["ops"]]
+    assert out[0]["transcript"] == kept["transcript"]
+    want, _meta = audio_apply.process(kept["bytes"], parse(kept["ops"]))
+    assert bytes(out[0]["bytes"]) == want
+
+
+def test_late_fetch_reads_odd_input_path(spark, tmp_path):
+    """The stream records each row's source as the URI-encoded
+    ``_metadata.file_path``; the late payload fetch must decode it, so an
+    input dir whose name holds a space and a literal ``%41`` (a valid
+    escape for ``A``) still commits every clip."""
+    base = tmp_path / "odd dir %41"
+    write_batch(spark, str(base / "in"), 0, 40)
+    q, sink = run_pipeline(
+        spark, str(base / "in"), str(base / "out"), str(base / "ckpt"),
+        secret=SECRET, allow_unsafe=True, wait=True,
+    )
+    out = sink.read_committed(spark)
+    assert out.count() == 40
+    assert out.select("clip_id").distinct().count() == 40
+
+
+def test_dedup_stream_is_narrow_and_sink_releases_cache(spark, dirs):
+    """The payload never enters the dedup exchange, and the per-trigger
+    cached key frame is unpersisted after every trigger, data or empty."""
+    from imagor_spark.streaming.pipeline import build_raw_stream
+
+    for start in (0, 10, 20):
+        pdf = make_pdf(42, range(start, start + 10), signed_mix=False)
+        spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(dirs["in"])
+    assert "bytes" not in build_raw_stream(spark, dirs["in"]).columns
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    q, sink = run_pipeline(
+        spark, dirs["in"], dirs["out"], dirs["ckpt"], secret=SECRET,
+        allow_unsafe=True, wait=True, max_files_per_trigger=1,
+    )
+    assert len(sink.committed_batches()) >= 3  # one trigger per file
+    assert sink.read_committed(spark).count() == 30
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_checkpoint_resume_exactly_once(spark, dirs):
     """Kill → append more input (incl. re-sends of old clips) → restart from
     checkpoint: committed output still has one row per clip_id."""
