@@ -13,8 +13,9 @@ Scale design:
 * ops parsing is memoized per distinct ops string within a batch (templates
   repeat heavily — ≅ singleflight's common-subexpression win);
 * rejected rows never decode (signature checked before touching payload);
-* no shuffle introduced: the stage is a narrow map, so upstream partitioning
-  is preserved;
+* no shuffle introduced: the stage is a narrow map and runs on its input's
+  partitions — in the stream, the late payload fetch's file splits, spread
+  over the cores when they are fewer (``streaming/pipeline.py``);
 * watermark/overlay assets ship once per executor via Spark broadcast
   (≅ the loader callback, imagor.go:399-402).
 """

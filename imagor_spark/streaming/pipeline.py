@@ -5,7 +5,7 @@ Streaming (SURVEY §3.1 Spark mapping). Only narrow columns cross the
 stateful stage; the payload is fetched late, for the rows that survive:
 
   readStream (file source)
-    → project clip_id, ingest_ts, ops, _metadata.file_path/row_index
+    → project every column but the payload, + _metadata.file_path/row_index
     → watermark on ingest_ts                     (event-time plane)
     → dropDuplicatesWithinWatermark(clip_id)     (singleflight +
                                                   single-render-per-key,
@@ -13,8 +13,9 @@ stateful stage; the payload is fetched late, for the rows that survive:
     → foreachBatch TransformingSink:
         key + signature/expiry pre-check, persisted once per trigger
         → result-cache anti-join → within-batch singleflight
-        → late fetch: read only the survivors' source files, semi-join
-          on (file_path, row_index)
+        → late fetch: read only the payload column of the survivors'
+          source files, joined to the broadcast survivors on
+          (file_path, row_index)
         → admission → vectorized decode→ops→encode → exactly-once save
 
 State lives in RocksDB (spark.sql.streaming.stateStore.providerClass) so
@@ -26,8 +27,10 @@ too — getTtl, imagor.go:991-1003).
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from ..engine.config import params_config_df, resolve_with_config
 from ..engine.transform import (
@@ -66,12 +69,13 @@ def build_raw_stream(
     taken once at stream start would miss keys committed mid-stream and
     re-render duplicates).
 
-    The stream carries ``clip_id, ingest_ts, ops, file_path, row_index``:
-    the payload never enters the dedup exchange or its state. The sink
-    locates each surviving row's payload by its source file and row index
-    (the file source's ``_metadata`` fields, which survive the dedup).
-    ``input_dir`` must be a flat parquet dir: the late fetch reads files by
-    path, so Hive partition-directory values would not reach the sink."""
+    The stream carries every source column but ``bytes``, plus
+    ``file_path, row_index``: the payload never enters the dedup exchange
+    or its state. The sink locates each surviving row's payload by its
+    source file and row index (the file source's ``_metadata`` fields,
+    which survive the dedup). Every other column, partition-directory
+    values of a Hive-style ``input_dir`` included, is resolved here, by
+    the stream."""
     reader = spark.readStream.schema(CLIPS_SCHEMA)
     if max_files_per_trigger:
         # admission control ≅ ProcessConcurrency/ProcessQueueSize semaphores
@@ -81,33 +85,62 @@ def build_raw_stream(
     # clip_id must never pay the render
     return (
         reader.parquet(input_dir)
-        .select("clip_id", "ingest_ts", "ops",
+        .select(*[c for c in StructType.fromDDL(CLIPS_SCHEMA).names if c != "bytes"],
                 "_metadata.file_path", "_metadata.row_index")
         .withWatermark("ingest_ts", watermark)
         .dropDuplicatesWithinWatermark(["clip_id"])
     )
 
 
+# The most survivor rows one broadcast carries. A broadcast is collected
+# to the driver, where spark.driver.maxResultSize (1 GiB by default) caps
+# it; a survivor row of the generated clips, with a 109-character source
+# URI, is 317 B on average as an UnsafeRow, so ~320 MB per broadcast.
+BROADCAST_ROWS = 1_000_000
+
+
 def _fetch_payloads(spark, survivors: DataFrame) -> DataFrame | None:
-    """Late materialization: the full source rows of ``survivors`` (a
-    ``file_path, row_index`` frame), read from exactly the files they came
-    from, or None when there are no survivors. ``_metadata.file_path`` is a
-    URI string (a space is ``%20``, a literal ``%`` is ``%25``); it is
-    decoded to a Hadoop path before it is handed back to the reader, which
-    would otherwise look for a file named with the escapes."""
+    """Late materialization: ``survivors`` (narrow rows with their
+    ``file_path, row_index``) joined to their payloads, or None when there
+    are no survivors. Only the ``bytes`` column of the survivors' own
+    files is read, joined to the broadcast survivors, so no payload
+    crosses a shuffle. Files go to broadcasts whole, at most
+    ``BROADCAST_ROWS`` survivors each where files allow, and the union of
+    those joins is the result.
+
+    ``_metadata.file_path`` is a URI string (a space is ``%20``, a literal
+    ``%`` is ``%25``); it is decoded to a Hadoop path before it is handed
+    back to the reader, which would otherwise look for a file named with
+    the escapes.
+
+    The transform runs on the read's splits. Spark sizes them to cover the
+    cores but never cuts a parquet row group, so survivors from fewer files
+    than cores (one small file, a coalesced input) can leave cores idle:
+    those rows are hash-spread over the cores first. That shuffle carries
+    the payload, once, where the alternative is a render on fewer cores."""
     jvm = spark.sparkContext._jvm
-    paths = [
-        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r.file_path)).toString()
-        for r in survivors.select("file_path").distinct().collect()
-    ]
-    if not paths:
+    chunks, rows = [], BROADCAST_ROWS
+    for r in survivors.groupBy("file_path").count().collect():
+        if rows + r["count"] > BROADCAST_ROWS:
+            chunks.append([])
+            rows = 0
+        chunks[-1].append(r["file_path"])
+        rows += r["count"]
+    if not chunks:
         return None
-    return (
-        spark.read.schema(CLIPS_SCHEMA).parquet(*paths)
-        .select("*", "_metadata.file_path", "_metadata.row_index")
-        .join(F.broadcast(survivors), ["file_path", "row_index"], "left_semi")
-        .drop("file_path", "row_index")
-    )
+    clips = reduce(DataFrame.unionByName, [
+        spark.read.schema("bytes binary")
+        .parquet(*[jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)).toString()
+                   for f in files])
+        .select("bytes", "_metadata.file_path", "_metadata.row_index")
+        .join(F.broadcast(survivors.where(F.col("file_path").isin(files))),
+              ["file_path", "row_index"])
+        for files in chunks
+    ])
+    cores = spark.sparkContext.defaultParallelism
+    if sum(map(len, chunks)) < cores:
+        clips = clips.repartition(cores, "file_path", "row_index")
+    return clips.drop("file_path", "row_index")
 
 
 class TransformingSink(IdempotentSink):
@@ -182,11 +215,11 @@ class TransformingSink(IdempotentSink):
         # and re-run the stateful stage for the rest. Measured on a
         # 2,000-clip drain (one data trigger plus the zero-row trigger
         # availableNow runs last), shared 4-core VM: shuffle write 157 MB
-        # → 0.4 MB, shuffle read 314 → 0.4 MB, RocksDB commit time summed
-        # over both triggers 6.1 → 2.8 s.
+        # → 0.5 MB, shuffle read 314 → 0.5 MB, RocksDB commit time summed
+        # over both triggers 6.8 → 3.3 s.
         keyed = (
             batch_df.withColumn("__kv", self.key_validity(F.col("ops")))
-            .select("clip_id", "file_path", "row_index",
+            .select(*batch_df.columns,
                     F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok"))
             .persist()
         )
@@ -216,9 +249,7 @@ class TransformingSink(IdempotentSink):
                 spark, max_age_ms=self.result_cache_max_age_ms
             )
             keyed = _anti_join_rendered(keyed, rendered)
-        survivors = singleflight_within(keyed, ok_col="__ok").select(
-            "file_path", "row_index"
-        )
+        survivors = singleflight_within(keyed, ok_col="__ok").drop("__rk", "__ok")
         clips = _fetch_payloads(spark, survivors)
         if clips is None:
             return None

@@ -146,6 +146,68 @@ def test_dedup_stream_is_narrow_and_sink_releases_cache(spark, dirs):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_partition_dir_values_reach_the_sink(spark, dirs):
+    """A Hive-partitioned input dir (``codec=…/``): the late fetch reads
+    each file by its own path, where the partition value is not stored, so
+    the value must reach the sink through the stream: a null codec would
+    resolve no config row and quarantine every clip as ``not_found``."""
+    pdf = make_pdf(42, range(20), signed_mix=False)
+    spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).write.partitionBy("codec").mode(
+        "append"
+    ).parquet(dirs["in"])
+    q, sink = run_pipeline(
+        spark, dirs["in"], dirs["out"], dirs["ckpt"], secret=SECRET, allow_unsafe=True, wait=True
+    )
+    out = sink.read_committed(spark).select("clip_id", "status").toPandas()
+    assert sorted(out["clip_id"]) == sorted(pdf["clip_id"])
+    assert set(out["status"]) == {"ok"}
+
+
+def narrow_source(spark, path):
+    """``path``'s rows as the dedup stream carries them: every column but
+    the payload, plus each row's source file and row index."""
+    return spark.read.schema(CLIPS_SCHEMA).parquet(path).drop("bytes").select(
+        "*", "_metadata.file_path", "_metadata.row_index"
+    )
+
+
+def test_late_fetch_splits_broadcasts_by_whole_files(spark, tmp_path, monkeypatch):
+    """More survivors than one broadcast may carry: the fetch unions one
+    broadcast join per group of whole files, and every row gets its own
+    source row's payload."""
+    from imagor_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "BROADCAST_ROWS", 25)  # 4 files of 10 → 2 joins
+    pdf = make_pdf(42, range(40), signed_mix=False)
+    d = str(tmp_path / "in")
+    spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(4).write.parquet(d)
+    clips = pipeline._fetch_payloads(spark, narrow_source(spark, d))
+    plan = clips._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join Inner") == 2, plan
+    got = {r["clip_id"]: bytes(r["bytes"]) for r in clips.select("clip_id", "bytes").collect()}
+    assert got == dict(zip(pdf["clip_id"], pdf["bytes"]))
+
+
+def test_late_fetch_spreads_few_files_over_cores(spark, tmp_path):
+    """The transform runs on the fetch's partitions. Survivors from fewer
+    files than cores are hash-spread over the cores; from as many files as
+    cores, the read's own splits are kept and no payload shuffles."""
+    from imagor_spark.streaming.pipeline import _fetch_payloads
+
+    cores = spark.sparkContext.defaultParallelism
+    pdf = make_pdf(42, range(40), signed_mix=False)
+    for n_files in (1, cores):
+        d = str(tmp_path / f"in{n_files}")
+        spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(n_files).write.parquet(d)
+        clips = _fetch_payloads(spark, narrow_source(spark, d))
+        plan = clips._jdf.queryExecution().optimizedPlan().toString()
+        assert ("RepartitionByExpression" in plan) == (n_files < cores), plan
+        assert clips.rdd.getNumPartitions() >= cores
+        assert sorted(r["clip_id"] for r in clips.select("clip_id").collect()) == sorted(
+            pdf["clip_id"]
+        )
+
+
 def test_checkpoint_resume_exactly_once(spark, dirs):
     """Kill → append more input (incl. re-sends of old clips) → restart from
     checkpoint: committed output still has one row per clip_id."""
