@@ -261,38 +261,12 @@ def oracle_sql() -> dict[str, str]:
     """
     # audio_status_by_codec: the docs-derived mix is all-unsafe (accepted
     # via allow_unsafe) and decode is deterministic, so every row is 'ok';
-    # the status × out_codec rollup is pure doc_id arithmetic (same sample
-    # math as the streaming-parity oracle, grouped by codec only)
-    oracles["audio_status_by_codec"] = """
-    WITH base AS (
-      SELECT doc_id,
-        CASE doc_id % 5 WHEN 0 THEN 8000 WHEN 1 THEN 16000 WHEN 2 THEN 22050
-                        WHEN 3 THEN 44100 ELSE 48000 END AS sr,
-        200 + (doc_id * 37) % 2801 AS dur_ms,
-        CASE WHEN doc_id % 20 < 14 THEN 'wav'
-             WHEN doc_id % 20 < 19 THEN 'flac' ELSE 'ogg' END AS codec,
-        doc_id % 8 AS tmpl
-      FROM documents
-    ), shaped AS (
-      SELECT *,
-        CAST(FLOOR(CAST(dur_ms * sr AS DOUBLE) / 1e3 + 5e-1) AS BIGINT) AS n0
-      FROM base
-    ), withn AS (
-      SELECT *, CAST(n0 * 1000 AS DOUBLE) / sr AS dur0_ms FROM shaped
-    )
-    SELECT 'ok' AS status,
-           CASE tmpl WHEN 6 THEN 'flac' ELSE codec END AS out_codec,
-           COUNT(*) AS n_clips,
-           CAST(SUM(CASE tmpl
-             WHEN 1 THEN CASE WHEN sr > 16000
-                              THEN CAST(FLOOR(CAST(n0 * 16000 AS DOUBLE) / sr + 5e-1) AS BIGINT)
-                              ELSE n0 END
-             WHEN 2 THEN LEAST(n0, 3 * sr // 2) - sr // 10
-             WHEN 3 THEN CAST(FLOOR(8e-1 * dur0_ms * sr / 1e3 + 5e-1) AS BIGINT)
-                       - CAST(FLOOR(1e-1 * dur0_ms * sr / 1e3 + 5e-1) AS BIGINT)
-             WHEN 4 THEN 4000
-             ELSE n0 END) AS BIGINT) AS total_samples
-    FROM withn
+    # the status × out_codec rollup groups the derived-clips oracle's
+    # predicted shapes by codec
+    oracles["audio_status_by_codec"] = f"""
+    SELECT 'ok' AS status, out_codec, COUNT(*) AS n_clips,
+           CAST(SUM(out_n_samples) AS BIGINT) AS total_samples
+    FROM ({ORACLE_DERIVED_SQL}) derived
     GROUP BY 1, 2 ORDER BY 1, 2
     """
     from imagor_spark.plans.catalog import extra_oracles

@@ -50,7 +50,6 @@ MAX_SAMPLES = 81_000_000
 MAX_SR_HZ = 192_000
 MAX_DUR_MS = 3_600_000
 MAX_FILTER_OPS = 64  # ≅ MaxFilterOps cap (process.go:761-796)
-DECODE_CACHE_MAX = 128  # entry bound for plain-dict caches (test/legacy path)
 # byte budget per Python worker process — the reference cache is memory-
 # bounded (ristretto MaxCacheMem, cache.go:37-163), not entry-bounded:
 # 128 entries × up to MAX_SAMPLES float32 samples is tens of GB unbounded
@@ -694,7 +693,7 @@ def process(
     blob: bytes,
     p: Params,
     assets: dict[str, tuple[np.ndarray, int]] | None = None,
-    decode_cache: "dict | None" = None,
+    decode_cache: DecodeCache | None = None,
 ) -> tuple[bytes, dict]:
     """Full decode → transform → encode for one row (≅ vipsprocessor.Process,
     process.go:52-184). Returns (out_bytes, meta_dict). Meta mode returns
@@ -728,13 +727,7 @@ def process(
         pcm, sr, src_codec = codecs.decode(blob, target_sr=target)
         if cache_key is not None:
             pcm.setflags(write=False)
-            admit = getattr(decode_cache, "admit", None)
-            if admit is not None:  # byte-budgeted DecodeCache
-                admit(cache_key, (pcm, sr, src_codec))
-            else:  # plain dict (tests): entry-bounded fallback
-                decode_cache[cache_key] = (pcm, sr, src_codec)
-                if len(decode_cache) > DECODE_CACHE_MAX:
-                    decode_cache.pop(next(iter(decode_cache)))
+            decode_cache.admit(cache_key, (pcm, sr, src_codec))
 
     # resolution-bomb guard (≅ CheckResolution, processor.go:506-516)
     if pcm.shape[1] > MAX_SAMPLES or sr > MAX_SR_HZ:

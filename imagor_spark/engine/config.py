@@ -14,18 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
-CONFIG_SCHEMA = (
-    "codec string, decoder string, max_dur_ms int, max_sr_hz int, "
-    "target_store string, default_quality int"
-)
+CONFIG_SCHEMA = "codec string, decoder string, max_dur_ms int, max_sr_hz int"
 
 # FIXTURES.md §2 defaults; max_* are the resolution-bomb guards
 # (≅ VipsMaxWidth/MaxHeight/MaxResolution, processor.go:70-73)
 DEFAULT_CONFIG_ROWS = [
-    ("wav", "native", 3_600_000, 192_000, "results/wav", 100),
-    ("flac", "standin-zlib", 3_600_000, 192_000, "results/flac", 100),
-    ("ogg", "standin-q", 1_800_000, 48_000, "results/lossy", 75),
-    ("mp3", "standin-q", 1_800_000, 48_000, "results/lossy", 75),
+    ("wav", "native", 3_600_000, 192_000),
+    ("flac", "standin-zlib", 3_600_000, 192_000),
+    ("ogg", "standin-q", 1_800_000, 48_000),
+    ("mp3", "standin-q", 1_800_000, 48_000),
 ]
 
 
@@ -40,7 +37,8 @@ def params_config_df(spark) -> DataFrame:
 
 
 def resolve_with_config(clips_df: DataFrame, config_df: DataFrame) -> DataFrame:
-    """Broadcast stream-table join + admission guards.
+    """Broadcast stream-table join + admission guards: ``clips_df`` plus an
+    ``admit_status`` column.
 
     Rows whose codec has no config entry are ``not_found`` (≅ ErrNotFound
     when no loader resolves, imagor.go:699-760); rows exceeding per-codec
@@ -48,18 +46,11 @@ def resolve_with_config(clips_df: DataFrame, config_df: DataFrame) -> DataFrame:
     processor.go:506-516 — reject BEFORE paying the decode).
     """
     joined = clips_df.join(F.broadcast(config_df), on="codec", how="left")
-    return joined.withColumn(
-        "admit_status",
+    return joined.select(
+        *clips_df.columns,
         F.when(F.col("decoder").isNull(), F.lit("not_found"))
         .when(F.col("dur_ms") > F.col("max_dur_ms"), F.lit("resolution_bomb"))
         .when(F.col("sr_hz") > F.col("max_sr_hz"), F.lit("resolution_bomb"))
-        .otherwise(F.lit("ok")),
+        .otherwise(F.lit("ok"))
+        .alias("admit_status"),
     )
-
-
-def split_admitted(resolved: DataFrame) -> tuple[DataFrame, DataFrame]:
-    admitted = resolved.filter(F.col("admit_status") == "ok").drop(
-        "admit_status", "decoder", "max_dur_ms", "max_sr_hz", "default_quality"
-    )
-    rejected = resolved.filter(F.col("admit_status") != "ok")
-    return admitted, rejected

@@ -30,7 +30,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..audio import apply as audio_apply
-from ..audio import codecs
 from ..imagorpath import Params, hex_digest_path, parse, result_path
 from ..imagorpath.signer import HMACSigner
 
@@ -47,16 +46,6 @@ OUTPUT_SCHEMA = (
     "n_samples int, codec string, transcript string, ingest_ts timestamp, "
     "status string, meta string, ops string"
 )
-
-
-def _canonicalize(p: Params) -> str:
-    """Regenerate the canonical path after parse (imagor.go:377-379) — the
-    result-cache key basis. Utility filters (expire/attachment) are
-    STRIPPED first (imagor.go:331-338): they shape the response envelope,
-    not the rendered bytes, so ``attachment(a.wav)`` and a bare render of
-    the same ops must share one cache entry — the full Params (attachment
-    included) still flows to the processor for the disposition meta."""
-    return result_path(p)
 
 
 class _OpsCache:
@@ -94,7 +83,13 @@ class _OpsCache:
                             reject = STATUS_EXPIRED
                     except ValueError:
                         pass
-        canonical = _canonicalize(p)
+        # the canonical path regenerated after parse (imagor.go:377-379) is
+        # the result-cache key basis. Utility filters (expire/attachment)
+        # are stripped first (imagor.go:331-338): they shape the response
+        # envelope, not the rendered bytes, so ``attachment(a.wav)`` and a
+        # bare render of the same ops share one cache entry; the full
+        # Params (attachment included) still reach the processor
+        canonical = result_path(p)
         key = hex_digest_path(canonical)
         out = (p, canonical, key, reject)
         self.cache[ops] = out
@@ -112,7 +107,6 @@ def make_transform_fn(
     assets: dict[str, tuple[np.ndarray, int]] | None = None,
     alg: str = "sha1",
     truncate: int = 0,
-    now_ms: int | None = None,
     allow_unsafe: bool | None = None,
     use_decode_cache: bool = True,
 ):
@@ -126,11 +120,10 @@ def make_transform_fn(
     signer = HMACSigner(alg, truncate, secret) if secret is not None else None
     if allow_unsafe is None:
         allow_unsafe = signer is None
-    fixed_now = now_ms
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         asset_map = assets.value if hasattr(assets, "value") else (assets or {})
-        now = fixed_now if fixed_now is not None else int(time.time() * 1000)
+        now = int(time.time() * 1000)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -223,8 +216,6 @@ def transform(
     df,
     secret: str | None = None,
     assets: dict[str, tuple[np.ndarray, int]] | None = None,
-    broadcast_assets: bool = True,
-    now_ms: int | None = None,
     allow_unsafe: bool | None = None,
 ):
     """Apply the full ops pipeline to a clips DataFrame → result DataFrame.
@@ -237,15 +228,12 @@ def transform(
     configured, ``unsafe/`` paths are quarantined unless
     ``allow_unsafe=True`` (reference default posture, imagor.go:290-302).
     """
-    spark = df.sparkSession
-    b_assets = None
-    if assets:
-        b_assets = spark.sparkContext.broadcast(assets) if broadcast_assets else assets
-    fn = make_transform_fn(secret, b_assets, now_ms=now_ms, allow_unsafe=allow_unsafe)
+    b_assets = df.sparkSession.sparkContext.broadcast(assets) if assets else None
+    fn = make_transform_fn(secret, b_assets, allow_unsafe=allow_unsafe)
     return df.mapInPandas(fn, schema=OUTPUT_SCHEMA)
 
 
-def with_result_key(df, ops_col: str = "ops", out_col: str = "result_key"):
+def with_result_key(df, out_col: str = "result_key"):
     """Attach the result-cache key (parse → canonical → hex digest) WITHOUT
     decoding payloads — the cheap projection that makes cache-hit-before-
     render possible (≅ the key the reference derives before ``loadResult``,
@@ -253,19 +241,11 @@ def with_result_key(df, ops_col: str = "ops", out_col: str = "result_key"):
 
     @F.pandas_udf("string")
     def rk(ops: pd.Series) -> pd.Series:
-        memo: dict[str, str] = {}
+        # no signer: the key needs no signature, so none is computed
+        cache = _OpsCache(None, 0, True)
+        return ops.map(lambda o: cache.get(o)[2])
 
-        def one(o: str) -> str:
-            hit = memo.get(o)
-            if hit is None:
-                # result_path (not generate_path): utility filters are
-                # excluded from the key, matching _OpsCache/_canonicalize
-                hit = memo[o] = hex_digest_path(result_path(parse(o)))
-            return hit
-
-        return ops.map(one)
-
-    return df.withColumn(out_col, rk(F.col(ops_col)))
+    return df.withColumn(out_col, rk(F.col("ops")))
 
 
 def make_key_validity_udf(
@@ -273,7 +253,6 @@ def make_key_validity_udf(
     alg: str = "sha1",
     truncate: int = 0,
     allow_unsafe: bool | None = None,
-    now_ms: int | None = None,
 ):
     """pandas UDF ``ops → struct<rk, ok>``: the result-cache key PLUS the
     cheap signature/expiry verdict (the same ``_OpsCache`` logic the
@@ -286,12 +265,10 @@ def make_key_validity_udf(
     signer = HMACSigner(alg, truncate, secret) if secret is not None else None
     if allow_unsafe is None:
         allow_unsafe = signer is None
-    fixed_now = now_ms
 
     @F.pandas_udf("rk string, ok boolean")
     def kv(ops: pd.Series) -> pd.DataFrame:
-        now = fixed_now if fixed_now is not None else int(time.time() * 1000)
-        cache = _OpsCache(signer, now, allow_unsafe)
+        cache = _OpsCache(signer, int(time.time() * 1000), allow_unsafe)
         rks, oks = [], []
         for o in ops:
             _p, _canonical, rk, reject = cache.get(o)
@@ -302,42 +279,37 @@ def make_key_validity_udf(
     return kv
 
 
-def _anti_join_rendered(keyed, rendered_keys_df, broadcast_index: bool = True,
-                        key_col: str = "__rk"):
-    """Anti-join a pre-keyed frame against the committed index (shared by
-    :func:`skip_rendered` and the per-batch sink, which computes the key
-    projection ONCE for both the anti-join and within-batch singleflight)."""
-    rendered = rendered_keys_df.select(F.col("result_key").alias(key_col))
-    if broadcast_index:
-        rendered = F.broadcast(rendered)
-    return keyed.join(rendered, key_col, "left_anti")
+def _anti_join_rendered(keyed, rendered_keys_df):
+    """Anti-join a frame keyed on ``__rk`` against the committed index
+    (shared by :func:`skip_rendered` and the per-batch sink, which computes
+    the key projection ONCE for both the anti-join and within-batch
+    singleflight)."""
+    rendered = F.broadcast(rendered_keys_df.select(F.col("result_key").alias("__rk")))
+    return keyed.join(rendered, "__rk", "left_anti")
 
 
-def skip_rendered(df, rendered_keys_df, ops_col: str = "ops",
-                  broadcast_index: bool = True):
+def skip_rendered(df, rendered_keys_df):
     """Result-cache load (imagor.go:403-408, loadResult imagor.go:600-664):
     left-anti join incoming clips against the committed rendered-keys index,
     so already-rendered work is skipped BEFORE the transform ever decodes a
     payload. Works on batch and streaming DataFrames (stream-static left
     anti is supported).
 
-    ``broadcast_index`` (default): the index is the TTL-bounded compacted
-    rendered-keys table — small relative to the stream — so it ships as a
-    broadcast build side and the anti-join is a map-side probe: the payload
-    column NEVER crosses an exchange (without the hint, Spark may plan a
-    sort-merge anti that hash-shuffles the full payload rows by key —
-    plan-asserted in tests). Set False only for an index too large to
-    broadcast; then both sides shuffle by key and payloads ride the
-    exchange — at that point shard the index by TTL first."""
-    keyed = with_result_key(df, ops_col=ops_col, out_col="__rk")
-    return _anti_join_rendered(keyed, rendered_keys_df, broadcast_index).drop("__rk")
+    The index is the TTL-bounded compacted rendered-keys table — small
+    relative to the stream — so it ships as a broadcast build side and the
+    anti-join is a map-side probe: the payload column NEVER crosses an
+    exchange (without the hint, Spark may plan a sort-merge anti that
+    hash-shuffles the full payload rows by key — plan-asserted in tests).
+    An index too large to broadcast should be sharded by TTL first."""
+    keyed = with_result_key(df, out_col="__rk")
+    return _anti_join_rendered(keyed, rendered_keys_df).drop("__rk")
 
 
-def singleflight_within(df, key_col: str = "__rk", id_col: str = "clip_id",
-                        ok_col: str | None = None):
+def singleflight_within(df, ok_col: str = "__ok"):
     """WITHIN-batch singleflight (imagor.go:842-884): concurrent identical
     requests — rows in the SAME micro-batch whose ops+image resolve to one
-    result_key — coalesce to a single render. The min-``id_col`` row wins;
+    result key (the ``__rk`` column) — coalesce to a single render. The
+    min-``clip_id`` row among the valid rows wins;
     a dropped row's result IS the winner's committed row (identical bytes
     under the same key), exactly as if it had arrived one batch later and
     hit the rendered-keys anti-join.
@@ -351,37 +323,27 @@ def singleflight_within(df, key_col: str = "__rk", id_col: str = "clip_id",
     BroadcastHashJoin. A plain ``dropDuplicates([key])`` would instead
     hash-shuffle every payload row per batch.
 
-    ``ok_col``: optional boolean column marking rows that pass the cheap
+    ``ok_col``: the boolean column marking rows that pass the cheap
     pre-render validation (signature/expiry — ``make_key_validity_udf``).
-    When given, the winner is the min-``id_col`` row AMONG VALID rows,
-    falling back to the overall min only when the whole group is invalid
-    (everything quarantines anyway) — so a tampered/expired duplicate can
-    never suppress a valid same-key request (r5 ADVICE #1; reference
-    validates before singleflight, imagor.go:290-338 vs :842)."""
-    agg = [F.count("*").alias("__n"), F.min(id_col).alias("__w_any")]
-    if ok_col is not None:
-        agg.append(
-            F.min(F.when(F.col(ok_col), F.col(id_col))).alias("__w_ok")
-        )
-        winner = F.coalesce(F.col("__w_ok"), F.col("__w_any"))
-    else:
-        winner = F.col("__w_any")
+    The winner is the min-``clip_id`` row AMONG VALID rows, falling back to
+    the overall min only when the whole group is invalid (everything
+    quarantines anyway) — so a tampered/expired duplicate can never
+    suppress a valid same-key request (r5 ADVICE #1; reference validates
+    before singleflight, imagor.go:290-338 vs :842)."""
+    winner = F.coalesce(F.col("__w_ok"), F.col("__w_any"))
     dups = (
-        df.select(key_col, id_col, *([ok_col] if ok_col is not None else []))
-        .groupBy(key_col)
-        .agg(*agg)
+        df.select("__rk", "clip_id", ok_col)
+        .groupBy("__rk")
+        .agg(
+            F.count("*").alias("__n"),
+            F.min("clip_id").alias("__w_any"),
+            F.min(F.when(F.col(ok_col), F.col("clip_id"))).alias("__w_ok"),
+        )
         .filter(F.col("__n") > 1)
-        .select(key_col, winner.alias("__winner"))
+        .select("__rk", winner.alias("__winner"))
     )
     return (
-        df.join(F.broadcast(dups), key_col, "left_outer")
-        .filter(F.col("__winner").isNull() | (F.col(id_col) == F.col("__winner")))
+        df.join(F.broadcast(dups), "__rk", "left_outer")
+        .filter(F.col("__winner").isNull() | (F.col("clip_id") == F.col("__winner")))
         .drop("__winner")
     )
-
-
-def split_quarantine(result_df):
-    """Side-output split (≅ 4xx error paths → quarantine storage)."""
-    ok = result_df.filter(result_df.status.isin(STATUS_OK, STATUS_META))
-    rejected = result_df.filter(~result_df.status.isin(STATUS_OK, STATUS_META))
-    return ok, rejected

@@ -1,22 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
 Baseline: brute-force cosine top-k using built-in higher-order array
-functions (``aggregate``/``zip_with`` — JVM-side, no Python). Scale path:
-LSH-bucketed search (random-hyperplane signs via deterministic md5-derived
-projections) that prunes candidates to same-bucket rows before exact
-scoring, and an IVF-style variant that routes queries to the nearest
-coarse centroids.
+functions (``aggregate``/``zip_with`` — JVM-side, no Python). Scale paths:
+LSH bucketing (random-hyperplane signs via deterministic md5-derived
+projections) that prunes near-duplicate candidates to same-bucket pairs
+before exact scoring, and an IVF-style search that routes queries to the
+nearest coarse centroids.
 
 At 100 TB / billions of vectors: the brute force is one broadcast of the
 query + a full scan (embarrassingly parallel, no shuffle except top-k);
-the LSH variant turns it into a bucket equi-join; IVF prunes to
-``nprobe/nlist`` of the data. All three keep vectors in Arrow/Tungsten
+the LSH variant turns the pair search into a bucket equi-join; IVF prunes
+to ``nprobe/nlist`` of the data. All three keep vectors in Arrow/Tungsten
 arrays — no Python in the scoring loop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def dot(a, b) -> Column:
@@ -55,30 +55,6 @@ def brute_force_topk(
     return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
-def pairwise_topk_per_vector(
-    df: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_rows: int = 5000,
-) -> DataFrame:
-    """All-pairs cosine → top-k neighbors per vector. O(n²) scoring via
-    self-join — correctness baseline for small n; the LSH variant below is
-    the scale path. Guarded by max_rows to prevent accidental 100 TB cross
-    joins."""
-    n = df.count()
-    if n > max_rows:
-        raise ValueError(f"pairwise_topk is O(n²); {n} rows > {max_rows} guard")
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = a.join(b, F.col("id_a") != F.col("id_b"))
-    scored = pairs.select(
-        "id_a", "id_b", F.round(cosine("va", "vb"), 6).alias("cos_sim")
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
-
-
 def _hyperplane(dim: int, seed: int) -> list[float]:
     """Deterministic pseudo-random unit-ish hyperplane from md5 — no RNG
     state, reproducible in any engine."""
@@ -109,26 +85,6 @@ def lsh_bucket(
     return df.withColumn(out_col, F.concat(*bits))
 
 
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ANN: score only rows in the query's LSH bucket (plus exact rerank).
-    Recall < 1 by construction; bucket size ≈ n/2^planes."""
-    dim = len(query_vec)
-    bucketed = lsh_bucket(df, dim, n_planes, vec_col)
-    qbits = ""
-    for s in range(n_planes):
-        hp = _hyperplane(dim, s)
-        qbits += "1" if sum(a * b for a, b in zip(query_vec, hp)) >= 0 else "0"
-    cand = bucketed.filter(F.col("lsh_bucket") == qbits)
-    return brute_force_topk(cand, query_vec, k, vec_col, id_col)
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: list[list[float]],
@@ -152,61 +108,6 @@ def ivf_assign(
     return df.withColumn(
         "ivf_cell", F.array_position(dists, F.array_min(dists)) - 1
     )
-
-
-def kmeans_train(
-    df: DataFrame,
-    k: int,
-    dim: int,
-    n_iters: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[float]]:
-    """Distributed Lloyd's k-means for the IVF coarse quantizer (closes the
-    round-2 "k-means training deferred" gap). Spark-native shape:
-
-    * **init**: deterministic — the k vectors with the smallest
-      ``md5(id)`` digests (a seedless pseudo-random sample any engine can
-      reproduce; no RNG state, stable under re-runs/retries);
-    * **assign**: :func:`ivf_assign` (JVM higher-order functions, narrow);
-    * **update**: ``posexplode`` the vectors of each cell →
-      ``groupBy(cell, pos).avg`` — the standard scalable centroid update
-      (one shuffle of (cell, pos, partial-sum) pairs, map-side combined;
-      at a billion vectors this is exactly the MLlib layout);
-    * only ``k × dim`` floats ever reach the driver per iteration.
-
-    Empty cells keep their previous centroid (standard Lloyd's fallback).
-    Returns the trained centroids as plain lists (broadcastable literals).
-    """
-    md5_order = F.md5(F.col(id_col).cast("string"))
-    init_rows = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(md5_order, F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    if len(init_rows) < k:
-        raise ValueError(
-            f"kmeans_train: k={k} but only {len(init_rows)} rows available — "
-            f"reduce k or provide more vectors"
-        )
-    centroids = [list(map(float, r[vec_col])) for r in init_rows]
-    for _ in range(n_iters):
-        assigned = ivf_assign(df, centroids, vec_col=vec_col)
-        # centroid update: explode to (cell, pos, val), partial-agg per cell
-        new_rows = (
-            assigned.select("ivf_cell", F.posexplode(vec_col).alias("pos", "val"))
-            .groupBy("ivf_cell", "pos")
-            .agg(F.avg("val").alias("mean"))
-            .collect()
-        )
-        by_cell: dict[int, list[float]] = {}
-        for r in new_rows:
-            by_cell.setdefault(int(r["ivf_cell"]), [0.0] * dim)[int(r["pos"])] = float(
-                r["mean"]
-            )
-        centroids = [by_cell.get(c, centroids[c]) for c in range(k)]
-    return centroids
 
 
 def _plan_row_estimate(df: DataFrame) -> int | None:
@@ -286,14 +187,14 @@ def kmeans_train_quantized(
     id_col: str = "vec_id",
     scale: int = 1000,
 ) -> list[list[int]]:
-    """Lloyd's k-means on the quantized integer lattice — the ORACLE-
-    CHECKABLE twin of :func:`kmeans_train` (which stays the production
-    float path): every step is exact integer/floor arithmetic, so a SQL
-    engine can replay the full training unrolled and hash-match the result
-    (erasing the "iterative float algorithms are rows-only" exemption).
+    """Distributed Lloyd's k-means for the IVF coarse quantizer, on the
+    quantized integer lattice: every step is exact integer/floor
+    arithmetic, so a SQL engine can replay the full training unrolled and
+    hash-match the result (erasing the "iterative float algorithms are
+    rows-only" exemption).
 
     * init — the k vectors with smallest ``md5(cast(id as string))``
-      (seedless deterministic sample, same as the float path);
+      (a seedless deterministic sample any engine reproduces);
     * assign — :func:`ivf_assign_quantized` (int64 L2, first-min
       tie-break);
     * update — ``floor(sum/count)`` per (cell, component): double division
@@ -302,8 +203,8 @@ def kmeans_train_quantized(
       floor-division in ANY engine;
     * empty cells keep their previous centroid.
 
-    Same scale shape as the float path: one map-side-combined shuffle per
-    iteration, k×dim ints to the driver.
+    Scale shape: one map-side-combined shuffle of (cell, pos, partial-sum)
+    per iteration, k×dim ints to the driver.
     """
     q = df.select(F.col(id_col), quantized_vec(vec_col, scale).alias("qvec"))
     init_rows = (
@@ -411,8 +312,7 @@ def embedding_near_dups(
     ``2^n_planes`` is small relative to n it silently degenerates toward a
     cross join. ``max_avg_bucket`` raises when the EXPECTED average bucket
     (n / 2^n_planes) exceeds the guard — fix by raising ``n_planes`` (and
-    ``bands`` to recover the recall each extra plane costs). Mirrors the
-    ``pairwise_topk_per_vector`` O(n²) guard.
+    ``bands`` to recover the recall each extra plane costs).
 
     ``bands`` > 1 = banded multi-table LSH (the MinHash band construction):
     each band hashes with an independent plane family; candidates are the

@@ -12,7 +12,7 @@ __spark_entry__ with DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 # tiny per-language stopword seeds for n-gram-free heuristic language ID;
 # deliberately small + deterministic so the SQL oracle can replicate
@@ -98,14 +98,3 @@ def doc_fingerprint(col: str = "text", n_chars: int = 64) -> Column:
     to any SQL engine)."""
     norm = F.lower(F.regexp_replace(F.trim(F.col(col)), "\\s+", " "))
     return F.md5(F.substring(norm, 1, n_chars)).alias("fingerprint")
-
-
-def text_stats(df: DataFrame, col: str = "text") -> DataFrame:
-    return df.select(
-        "doc_id",
-        token_count(col),
-        *char_classes(col),
-        quality_score(col),
-        lang_id(col),
-        doc_fingerprint(col),
-    )

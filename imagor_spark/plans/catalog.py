@@ -18,6 +18,8 @@ import shutil
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.docs_clips import ORACLE_DERIVED_SQL
+
 
 # ------------------------------------------------------------------- text
 
@@ -438,8 +440,7 @@ def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     populations of the TRAINED quantizer. The quantization erases the r3
     "iterative float algorithm → rows-only" exemption: the DuckDB oracle
     replays all 3 training iterations unrolled as CTEs and must match
-    bit-for-bit. The float production path (`kmeans_train`) stays pinned by
-    its numpy-twin pytest."""
+    bit-for-bit."""
     from ..functions.similarity import ivf_assign_quantized, quantized_vec
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -689,7 +690,8 @@ def _bounded_agg_stream(
     scale the formula yields the session default again, which is restored
     once the stream drains. Results are partition-count-invariant."""
     from ..engine.workdirs import make_workdir
-    from ..sources.docs_clips import CLIPS_SCHEMA, cached_clips, clips_cache_dir
+    from ..sources.clips import CLIPS_SCHEMA
+    from ..sources.docs_clips import cached_clips, clips_cache_dir
     from ..streaming.sink import AggSink
 
     # share the one materialized derived-clips table (cached_clips) and
@@ -761,37 +763,13 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_TUMBLING = """
-WITH base AS (
-  SELECT doc_id,
-    CASE doc_id % 5 WHEN 0 THEN 8000 WHEN 1 THEN 16000 WHEN 2 THEN 22050
-                    WHEN 3 THEN 44100 ELSE 48000 END AS sr,
-    200 + (doc_id * 37) % 2801 AS dur_ms,
-    CASE WHEN doc_id % 20 < 14 THEN 'wav'
-         WHEN doc_id % 20 < 19 THEN 'flac' ELSE 'ogg' END AS codec,
-    doc_id % 8 AS tmpl,
-    TIMESTAMP '2026-01-01 00:00:00' + (doc_id % 3600) * INTERVAL 1 SECOND AS ingest_ts
-  FROM documents
-), shaped AS (
-  SELECT *,
-    CAST(FLOOR(CAST(dur_ms * sr AS DOUBLE) / 1e3 + 5e-1) AS BIGINT) AS n0
-  FROM base
-), withn AS (
-  SELECT *, CAST(n0 * 1000 AS DOUBLE) / sr AS dur0_ms FROM shaped
-)
-SELECT time_bucket(INTERVAL '10 minutes', ingest_ts) AS window_start,
-       CASE tmpl WHEN 6 THEN 'flac' ELSE codec END AS out_codec,
+ORACLE_STREAM_TUMBLING = f"""
+SELECT time_bucket(INTERVAL '10 minutes', TIMESTAMP '2026-01-01 00:00:00'
+         + (CAST(SUBSTR(clip_id, 4) AS BIGINT) % 3600) * INTERVAL 1 SECOND) AS window_start,
+       out_codec,
        COUNT(*) AS n_clips,
-       CAST(SUM(CASE tmpl
-         WHEN 1 THEN CASE WHEN sr > 16000
-                          THEN CAST(FLOOR(CAST(n0 * 16000 AS DOUBLE) / sr + 5e-1) AS BIGINT)
-                          ELSE n0 END
-         WHEN 2 THEN LEAST(n0, 3 * sr // 2) - sr // 10
-         WHEN 3 THEN CAST(FLOOR(8e-1 * dur0_ms * sr / 1e3 + 5e-1) AS BIGINT)
-                   - CAST(FLOOR(1e-1 * dur0_ms * sr / 1e3 + 5e-1) AS BIGINT)
-         WHEN 4 THEN 4000
-         ELSE n0 END) AS BIGINT) AS total_samples
-FROM withn
+       CAST(SUM(out_n_samples) AS BIGINT) AS total_samples
+FROM ({ORACLE_DERIVED_SQL}) derived
 GROUP BY 1, 2 ORDER BY 1, 2
 """
 
@@ -1382,12 +1360,10 @@ def q_admission_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    from ..sources.docs_clips import CLIPS_SCHEMA
+    from ..sources.clips import CLIPS_SCHEMA
 
     clips = docs.mapInPandas(gen, schema=CLIPS_SCHEMA)
-    resolved = resolve_with_config(clips, params_config_df(spark)).drop(
-        "decoder", "max_dur_ms", "max_sr_hz", "target_store", "default_quality"
-    )
+    resolved = resolve_with_config(clips, params_config_df(spark))
     res = transform(resolved, secret=None)
     return res.groupBy("status").agg(F.count("*").alias("n_clips")).orderBy("status")
 
@@ -1617,7 +1593,7 @@ def q_image_blend_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
             if rows:
                 yield pd.DataFrame(rows)
 
-    from ..sources.docs_clips import CLIPS_SCHEMA
+    from ..sources.clips import CLIPS_SCHEMA
 
     clips = docs.mapInPandas(gen, schema=CLIPS_SCHEMA)
     res = transform(clips, secret=None, assets=watermark_assets())

@@ -21,6 +21,7 @@ import pandas as pd
 
 from ..audio import codecs
 from ..audio.kernels import ms_to_samples
+from .clips import CLIPS_SCHEMA
 
 SEED = 123
 
@@ -56,12 +57,6 @@ def synth_for(doc_id: int, sr: int, dur_ms: int) -> np.ndarray:
     f2 = 150.0 + (doc_id * 97) % 2500
     x = 0.4 * np.sin(2 * np.pi * f1 * t) + 0.2 * np.sin(2 * np.pi * f2 * t)
     return x.astype(np.float32)
-
-
-CLIPS_SCHEMA = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-    "transcript string, ingest_ts timestamp, ops string"
-)
 
 
 def clips_from_documents(spark, sf_dir: str):
@@ -140,7 +135,9 @@ def cached_clips(spark, sf_dir: str):
     return spark.read.parquet(os.path.join(cache_dir, "data"))
 
 
-# DuckDB SQL predicting the engine's measured output shapes by arithmetic.
+# DuckDB SQL predicting the engine's measured output shapes by arithmetic:
+# the audio_pipeline_shapes oracle, and the one derived-clips relation the
+# audio_status_by_codec and streaming_tumbling_parity oracles select from.
 # Every float expression mirrors the Python kernels' IEEE-double op order
 # (half-up rounding via FLOOR(x+0.5), e-notation literals to force DOUBLE):
 #   n0   = round_half_up(dur_ms*sr/1000)              (ms_to_samples)

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..audio import codecs
-from .docs_clips import CLIPS_SCHEMA
+from .clips import CLIPS_SCHEMA
 
 QUARANTINE_SCHEMA = "clip_id string, reason string, size int"
 

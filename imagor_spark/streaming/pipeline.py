@@ -49,10 +49,7 @@ ROCKSDB_PROVIDER = (
 
 
 def configure_streaming(spark) -> None:
-    try:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    except Exception:
-        pass  # fall back to HDFSBackedStateStoreProvider
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
 
 
 def build_raw_stream(
@@ -255,9 +252,7 @@ class TransformingSink(IdempotentSink):
             return None
         # attach admit_status via broadcast join; the transform UDF
         # quarantines non-ok rows pre-decode (single plan, no union)
-        admitted = resolve_with_config(clips, params_config_df(spark)).drop(
-            "decoder", "max_dur_ms", "max_sr_hz", "target_store", "default_quality",
-        )
+        admitted = resolve_with_config(clips, params_config_df(spark))
         return admitted.mapInPandas(self.transform_fn, schema=OUTPUT_SCHEMA)
 
 

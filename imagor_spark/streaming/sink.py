@@ -72,6 +72,10 @@ class IdempotentSink:
     def _marker(self, batch_id: int) -> str:
         return os.path.join(self.commits_dir, str(batch_id))
 
+    def _committed_at_ms(self, batch_id: int) -> int:
+        with open(self._marker(batch_id)) as f:
+            return int(json.load(f)["committed_at_ms"])
+
     @staticmethod
     def _has_parquet_files(path: str) -> bool:
         """True if any .parquet data file exists under ``path`` (one level of
@@ -223,21 +227,7 @@ class IdempotentSink:
         if max_age_ms is None:
             return ids
         now = now_ms if now_ms is not None else int(time.time() * 1000)
-        fresh = []
-        for b in ids:
-            try:
-                with open(self._marker(b)) as f:
-                    meta = json.load(f)
-                committed_at = meta.get("committed_at_ms")
-                if committed_at is None:
-                    # legacy marker without a timestamp: age by the marker
-                    # file's mtime instead of treating it as infinitely old
-                    committed_at = int(os.path.getmtime(self._marker(b)) * 1000)
-                if now - committed_at <= max_age_ms:
-                    fresh.append(b)
-            except (OSError, ValueError):
-                continue
-        return fresh
+        return [b for b in ids if now - self._committed_at_ms(b) <= max_age_ms]
 
     def _committed_paths(
         self, base: str, prefix: str, max_age_ms: int | None = None,
@@ -285,20 +275,6 @@ class IdempotentSink:
         except FileNotFoundError:
             return 0
 
-    def _marker_committed_at(self, batch_id: int) -> int:
-        try:
-            with open(self._marker(batch_id)) as f:
-                meta = json.load(f)
-            at = meta.get("committed_at_ms")
-            if at is not None:
-                return int(at)
-        except (OSError, ValueError):
-            pass
-        try:
-            return int(os.path.getmtime(self._marker(batch_id)) * 1000)
-        except OSError:
-            return 0
-
     def compact_rendered_keys(self, spark) -> int:
         """Fold the per-batch rendered-keys dirs (plus any previous compact
         index) into ONE distinct parquet keyed (result_key, committed_at_ms)
@@ -329,7 +305,7 @@ class IdempotentSink:
             frames.append(
                 spark.read.parquet(os.path.join(self.rendered_dir, f"batch-{b}"))
                 .select("result_key")
-                .withColumn("committed_at_ms", F.lit(self._marker_committed_at(b)))
+                .withColumn("committed_at_ms", F.lit(self._committed_at_ms(b)))
             )
         if not frames:
             return 0

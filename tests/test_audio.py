@@ -674,9 +674,11 @@ def test_decoded_source_cache_and_bypass():
     """Executor-local decoded-source cache (≅ cache.go:37-163): identical
     payloads decode once; HasCacheBypass ops (crop/trim plane) never read
     or populate it; cached hits produce identical output."""
+    from imagor_spark.audio.apply import DecodeCache
+
     x = tone(440, 0.5)
     blob = codecs.encode(x, SR, "wav")
-    cache = {}
+    cache = DecodeCache()
     p = parse("unsafe/fit-in/8000x0/img")
     out1, _ = process(blob, p, decode_cache=cache)
     assert len(cache) == 1
@@ -703,8 +705,8 @@ def test_decoded_source_cache_and_bypass():
 def test_decode_cache_byte_budget():
     """DecodeCache evicts on cumulative PCM bytes (≅ ristretto MaxCacheMem,
     cache.go:37-163), not entry count: a few large entries must trigger
-    eviction well below DECODE_CACHE_MAX entries, oldest first, and an
-    oversized single payload is never admitted."""
+    eviction, oldest first, and an oversized single payload is never
+    admitted."""
     from imagor_spark.audio.apply import DecodeCache
 
     p = parse("unsafe/fit-in/8000x0/img")

@@ -17,9 +17,8 @@ from imagor_spark.engine.config import (
     CONFIG_SCHEMA,
     params_config_df,
     resolve_with_config,
-    split_admitted,
 )
-from imagor_spark.engine.transform import split_quarantine, transform
+from imagor_spark.engine.transform import transform
 from imagor_spark.imagorpath import parse
 from imagor_spark.sources.clips import (
     SECRET,
@@ -56,14 +55,9 @@ def test_statuses(result):
     # ~1% bad signatures in the mix must be quarantined
     assert rows.get("sig_mismatch", 0) >= 1
     assert "decode_error" not in rows
-
-
-def test_quarantine_split(result):
-    ok, rejected = split_quarantine(result)
-    assert ok.count() + rejected.count() == N
-    assert rejected.filter(rejected.status == "sig_mismatch").count() >= 1
     # rejected rows carry no payload (never decoded)
-    assert all(len(r["bytes"]) == 0 for r in rejected.collect())
+    rejected = result.filter(~result.status.isin("ok", "meta")).collect()
+    assert all(len(r["bytes"]) == 0 for r in rejected)
 
 
 def test_transcript_invariant(result, clips):
@@ -143,10 +137,9 @@ def test_transform_stage_is_narrow(spark, clips):
 
 def test_config_broadcast_join(spark, clips):
     resolved = resolve_with_config(clips, params_config_df(spark))
-    admitted, rejected = split_admitted(resolved)
-    assert admitted.count() + rejected.count() == N
+    assert resolved.columns == clips.columns + ["admit_status"]
     # all fixture rows are within limits
-    assert rejected.count() == 0
+    assert resolved.filter(resolved.admit_status == "ok").count() == N
     plan = resolved._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     # the dimension is a JVM-local relation: no Python job to build it

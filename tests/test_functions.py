@@ -200,18 +200,6 @@ def test_cosine_topk_matches_numpy(spark, emb):
     assert got == expect
 
 
-def test_lsh_topk_subset_of_bucket(spark, emb):
-    from imagor_spark.functions.similarity import lsh_topk
-
-    rows = emb.limit(1).collect()
-    q = list(rows[0]["embedding"])
-    out = lsh_topk(emb, q, k=5, n_planes=4)
-    got = out.collect()
-    # the query vector itself shares its own bucket → at least 1 result
-    assert len(got) >= 1
-    assert all(-1.0 <= r["cos_sim"] <= 1.0 for r in got)
-
-
 def test_ivf_assign_partitions_all(spark, emb):
     from imagor_spark.functions.similarity import ivf_assign
 
@@ -220,13 +208,6 @@ def test_ivf_assign_partitions_all(spark, emb):
     assert out.filter(F.col("ivf_cell").isNull()).count() == 0
     assert out.count() == emb.count()
     assert out.select("ivf_cell").distinct().count() <= 3
-
-
-def test_pairwise_guard(spark, emb):
-    from imagor_spark.functions.similarity import pairwise_topk_per_vector
-
-    with pytest.raises(ValueError, match="O\\(n²\\)|guard"):
-        pairwise_topk_per_vector(emb, max_rows=10)
 
 
 def test_embedding_lsh_guard_and_bands(spark, emb):
@@ -274,52 +255,6 @@ def test_embedding_guard_without_eager_count(spark, emb):
     assert lazy.count() > 0  # and the plan itself still works
 
 
-def test_kmeans_train_converges(spark):
-    """Lloyd's k-means (distributed assign/update) against a numpy twin:
-    deterministic md5 init, identical assignment after training on
-    well-separated synthetic clusters, empty-cell fallback keeps the
-    previous centroid."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from imagor_spark.functions.similarity import ivf_assign, kmeans_train
-
-    # 3 well-separated 8-dim clusters, 30 points each, deterministic
-    rng = np.random.Generator(np.random.Philox(7))
-    centers = np.array([[5.0] * 8, [-5.0] * 8, [5.0] * 4 + [-5.0] * 4])
-    pts = np.concatenate(
-        [c + rng.normal(0, 0.3, (30, 8)) for c in centers]
-    ).astype(float)
-    pdf = pd.DataFrame(
-        {"vec_id": range(90), "embedding": [list(r) for r in pts]}
-    )
-    df = spark.createDataFrame(pdf)
-    got = kmeans_train(df, k=3, dim=8, n_iters=4)
-
-    # numpy twin with the SAME deterministic init (md5 of str(id), top-3)
-    order = sorted(range(90), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
-    cents = pts[order[:3]].copy()
-    for _ in range(4):
-        d = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        for c in range(3):
-            if (assign == c).any():
-                cents[c] = pts[assign == c].mean(0)
-    assert np.allclose(np.array(got), cents, atol=1e-6)
-    # trained centroids ≈ the true cluster centers (order-free)
-    match = ((np.array(got)[:, None, :] - centers[None, :, :]) ** 2).sum(-1).min(1)
-    assert (match < 0.1).all()
-    # every point lands with its own cluster-mates
-    out = ivf_assign(df, got).select("vec_id", "ivf_cell").collect()
-    cells = {}
-    for r in out:
-        cells.setdefault(r["vec_id"] // 30, set()).add(r["ivf_cell"])
-    assert all(len(v) == 1 for v in cells.values())
-    assert len({next(iter(v)) for v in cells.values()}) == 3
-
-
 def test_kmeans_quantized_matches_integer_twin(spark):
     """The oracle-checkable quantized Lloyd's: exact integer arithmetic vs
     a numpy integer twin (floor quantize, int64 L2, first-min tie-break,
@@ -331,7 +266,6 @@ def test_kmeans_quantized_matches_integer_twin(spark):
 
     from imagor_spark.functions.similarity import (
         ivf_assign_quantized,
-        kmeans_train,
         kmeans_train_quantized,
         quantized_vec,
     )
@@ -361,11 +295,9 @@ def test_kmeans_quantized_matches_integer_twin(spark):
     out = {r["vec_id"]: r["ivf_cell"] for r in ivf_assign_quantized(q, got).collect()}
     dfin = ((qpts[:, None, :] - np.array(got)[None, :, :]) ** 2).sum(-1)
     assert all(out[i] == int(dfin[i].argmin()) for i in range(60))
-    # k-validation (ADVICE r3): clear error, both trainers
+    # k-validation (ADVICE r3): clear error
     with pytest.raises(ValueError, match="k=100"):
         kmeans_train_quantized(df, k=100, dim=6)
-    with pytest.raises(ValueError, match="k=100"):
-        kmeans_train(df, k=100, dim=6)
 
 
 def test_ivf_search_quantized_matches_numpy_twin(spark):
@@ -505,9 +437,13 @@ def test_bmp_pnm_real_decode():
 def test_text_ops_stay_in_codegen(spark, docs):
     """The text/dedup column ops must not appear as BatchEvalPython —
     everything stays JVM-side."""
-    from imagor_spark.functions.text import text_stats
+    from imagor_spark.functions.text import (
+        char_classes, doc_fingerprint, lang_id, quality_score, token_count,
+    )
 
-    plan = text_stats(docs)._jdf.queryExecution().executedPlan().toString()
+    stats = docs.select("doc_id", token_count(), *char_classes(), quality_score(),
+                        lang_id(), doc_fingerprint())
+    plan = stats._jdf.queryExecution().executedPlan().toString()
     assert "PythonUDF" not in plan and "BatchEval" not in plan, plan
 
 

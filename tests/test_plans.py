@@ -105,7 +105,7 @@ def test_singleflight_never_shuffles_payload(spark, tmp_path):
     src = str(tmp_path / "clips")
     generate_clips_df(spark, 50, signed_mix=False).write.parquet(src)
     keyed = with_result_key(spark.read.parquet(src), out_col="__rk")
-    out = singleflight_within(keyed)
+    out = singleflight_within(keyed.withColumn("__ok", F.lit(True)))
     out.count()  # settle AQE
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan
@@ -137,9 +137,7 @@ def test_per_batch_render_plane_shape(spark):
     batch = generate_clips_df(spark, 50, signed_mix=False)
     rendered = spark.createDataFrame([("k1",), ("k2",)], "result_key string")
     cache_checked = skip_rendered(batch, rendered)
-    admitted = resolve_with_config(cache_checked, params_config_df(spark)).drop(
-        "decoder", "max_dur_ms", "max_sr_hz", "target_store", "default_quality"
-    )
+    admitted = resolve_with_config(cache_checked, params_config_df(spark))
     out = admitted.mapInPandas(
         make_transform_fn(SECRET, allow_unsafe=True), schema=OUTPUT_SCHEMA
     )

@@ -16,7 +16,7 @@ from imagor_spark.sources.clips import (
     make_pdf,
     make_row,
 )
-from imagor_spark.streaming.pipeline import configure_streaming, run_pipeline
+from imagor_spark.streaming.pipeline import run_pipeline
 from imagor_spark.streaming.sink import IdempotentSink
 
 
@@ -444,54 +444,6 @@ def test_admission_quarantines_before_decode(spark, dirs):
     assert by_id["bomb0001"]["result_key"] not in keys
 
 
-def test_stateful_running_totals_resume(spark, dirs):
-    """applyInPandasWithState custom stateful operator: per-codec running
-    totals accumulate across micro-batches AND across a checkpoint restart
-    (state store persistence) — semantics no built-in window expresses."""
-    from imagor_spark.engine.transform import make_transform_fn, OUTPUT_SCHEMA
-    from imagor_spark.sources.clips import CLIPS_SCHEMA as _CS
-    from imagor_spark.streaming.stateful import running_codec_totals
-
-    configure_streaming(spark)
-    write_batch(spark, dirs["in"], 0, 30)
-    fn = make_transform_fn(SECRET, allow_unsafe=True)
-
-    def run_wave(qname):
-        stream = spark.readStream.schema(_CS).parquet(dirs["in"])
-        res = stream.mapInPandas(fn, schema=OUTPUT_SCHEMA)
-        tot = running_codec_totals(res)
-        latest = {}
-
-        def collect(batch_df, _bid):
-            for r in batch_df.collect():
-                latest[r["codec"]] = (r["n_clips"], r["out_bytes"])
-
-        # foreachBatch (not memory sink): memory sinks cannot recover from
-        # an existing checkpoint, and restart-from-checkpoint is the point
-        q = (
-            tot.writeStream.outputMode("update").foreachBatch(collect)
-            .option("checkpointLocation", dirs["ckpt"] + "_state")
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        return latest
-
-    first = run_wave("totals_w1")
-    assert sum(n for n, _ in first.values()) == 30
-    # second wave: 20 more clips; restart from the same checkpoint →
-    # totals must include wave 1 (state restored), not restart from zero.
-    # update mode re-emits only codecs touched by wave 2; untouched codecs
-    # keep their wave-1 totals.
-    write_batch(spark, dirs["in"], 100, 20)
-    second = run_wave("totals_w2")
-    merged = dict(first)
-    merged.update(second)
-    assert sum(n for n, _ in merged.values()) == 50
-    for codec, (n2, b2) in second.items():
-        n1, b1 = first.get(codec, (0, 0))
-        assert n2 > n1 and b2 > b1  # accumulated, not restarted
-
-
 def test_result_cache_ttl_expiry(spark, dirs):
     """Result-cache TTL (getTtl imagor.go:991-1003 + expiration-on-Get
     filestorage.go:64-76): expired batches drop out of the rendered-keys
@@ -591,12 +543,22 @@ def test_rendered_keys_auto_compaction(spark, dirs):
 
 @pytest.mark.parametrize(
     "name",
-    ["streaming_tumbling_parity", "streaming_sliding_parity", "streaming_session_parity"],
+    [
+        "streaming_tumbling_parity",
+        "streaming_sliding_parity",
+        "streaming_session_parity",
+        "audio_pipeline_shapes",
+        "audio_status_by_codec",
+        "admission_mix",
+        "result_cache_antijoin",
+    ],
 )
 def test_streaming_parity_matches_oracle(spark, name):
     """Each bounded streaming-window query (tumbling, sliding — every clip
-    in exactly two windows — and session) hashes equal to its DuckDB
-    oracle over the same tables, with the oracle sweep's normalisation."""
+    in exactly two windows — and session), plus the pipeline queries that
+    share the derived-clips oracle or the request lifecycle, hashes equal
+    to its DuckDB oracle over the same tables, with the oracle sweep's
+    normalisation."""
     import duckdb
 
     import __spark_entry__ as entry
