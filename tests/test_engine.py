@@ -55,9 +55,15 @@ def test_statuses(result):
     # ~1% bad signatures in the mix must be quarantined
     assert rows.get("sig_mismatch", 0) >= 1
     assert "decode_error" not in rows
+
+
+def test_quarantine_split(result):
+    ok = result.filter(result.status.isin("ok", "meta"))
+    rejected = result.filter(~result.status.isin("ok", "meta"))
+    assert ok.count() + rejected.count() == N
+    assert rejected.filter(rejected.status == "sig_mismatch").count() >= 1
     # rejected rows carry no payload (never decoded)
-    rejected = result.filter(~result.status.isin("ok", "meta")).collect()
-    assert all(len(r["bytes"]) == 0 for r in rejected)
+    assert all(len(r["bytes"]) == 0 for r in rejected.collect())
 
 
 def test_transcript_invariant(result, clips):
