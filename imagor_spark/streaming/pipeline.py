@@ -145,11 +145,13 @@ class TransformingSink(IdempotentSink):
 
       narrow batch → key + signature/expiry pre-check (persisted once)
             → result-cache anti-join (index re-read THIS batch)
-            → within-batch singleflight (same result_key renders once)
+            → within-batch singleflight (same result_key renders once;
+              the survivors persisted once)
             → late payload fetch (survivors' source rows only)
             → admission (broadcast config dim, quarantine pre-decode)
             → decode→ops→encode transform
-            → exactly-once commit (IdempotentSink)
+            → exactly-once commit (IdempotentSink; its marker alone when
+              no row survives)
 
     Re-reading the committed rendered-keys index per micro-batch is the
     live result-cache economy: a key committed by batch N skips render in
@@ -205,48 +207,56 @@ class TransformingSink(IdempotentSink):
         #   arriving in ONE trigger render once, not N times.
         # The keyed frame is narrow (no payload), so it is cheap to persist,
         # and it is materialized by ONE full action: every later branch
-        # (anti-join, singleflight's winner dim, the survivors' broadcast)
-        # reads the cache, and the stateful dedup — with its RocksDB state
-        # commit — runs once per trigger instead of once per branch. A
-        # partial action (isEmpty, limit) would cache only some partitions
-        # and re-run the stateful stage for the rest. Measured on a
-        # 2,000-clip drain (one data trigger plus the zero-row trigger
-        # availableNow runs last), shared 4-core VM: shuffle write 157 MB
-        # → 0.5 MB, shuffle read 314 → 0.5 MB, RocksDB commit time summed
-        # over both triggers 6.8 → 3.3 s.
+        # (anti-join, singleflight's winner dim) reads the cache, and the
+        # stateful dedup — with its RocksDB state commit — runs once per
+        # trigger instead of once per branch. A partial action (isEmpty,
+        # limit) would cache only some partitions and re-run the stateful
+        # stage for the rest. Measured on a 2,000-clip drain (one data
+        # trigger plus the zero-row trigger availableNow runs last), shared
+        # 4-core VM: shuffle write 157 MB → 0.5 MB, shuffle read 314 →
+        # 0.5 MB, RocksDB commit time summed over both triggers 6.8 → 3.3 s.
+        # That count is the only job of a trigger with no rows: the commit
+        # is its marker alone. The zero-row trigger still runs, because it
+        # carries the advanced watermark into the state store (and so into
+        # the late-row filter of the next run).
         keyed = (
             batch_df.withColumn("__kv", self.key_validity(F.col("ops")))
             .select(*batch_df.columns,
                     F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok"))
             .persist()
         )
+        survivors = None
         try:
-            out = self._render(spark, keyed) if keyed.count() else None
-            if out is None:
-                # zero rows to render: commit the empty-batch layout
-                out = spark.createDataFrame(spark.sparkContext.emptyRDD(), OUTPUT_SCHEMA)
+            out = None
+            if keyed.count():
+                survivors = self._survivors(spark, keyed).persist()
+                out = self._render(spark, survivors)
             self._commit(out, batch_id)
         finally:
             keyed.unpersist()
+            if survivors is not None:
+                survivors.unpersist()
 
-    def _render(self, spark, keyed: DataFrame) -> DataFrame | None:
-        """Anti-join → singleflight on the cached narrow frame, then fetch
-        and render the survivors; None when no row survives."""
-        if self.result_cache is not None and (
-            # cheap driver-side probe: with nothing committed yet (fresh
-            # stream, empty cache dir) the anti-join is skipped entirely
-            self.result_cache._read_compact_manifest() is not None
-            or self.result_cache.committed_batches()
-        ):
+    def _survivors(self, spark, keyed: DataFrame) -> DataFrame:
+        """Anti-join → singleflight on the cached narrow frame. The caller
+        persists the result: the fetch's per-file count materializes it, so
+        the winner dimension is aggregated once, not again for the render's
+        survivor broadcast."""
+        if self.result_cache is not None:
             # FRESH read of the committed index — sees keys committed by
             # earlier batches of this very stream (live cache refresh).
             # The compacted index is small relative to the stream (TTL-
-            # bounded), so Spark plans a broadcast anti-join.
+            # bounded), so Spark plans a broadcast anti-join; with no index
+            # yet the read is an empty local relation and the optimizer
+            # drops the join.
             rendered = self.result_cache.read_rendered_keys(
                 spark, max_age_ms=self.result_cache_max_age_ms
             )
             keyed = _anti_join_rendered(keyed, rendered)
-        survivors = singleflight_within(keyed, ok_col="__ok").drop("__rk", "__ok")
+        return singleflight_within(keyed, ok_col="__ok").drop("__rk", "__ok")
+
+    def _render(self, spark, survivors: DataFrame) -> DataFrame | None:
+        """Fetch and render the survivors; None when there are none."""
         clips = _fetch_payloads(spark, survivors)
         if clips is None:
             return None

@@ -16,7 +16,7 @@ then make it visible; cleanup-on-error leaves no committed partial state
 (≅ saveWithErrorHandling + delete-on-error, imagor.go:783-811,
 storage/filestorage/filestorage.go:79-115).
 
-Lineage + metrics (north_rule): every batch also appends rows to
+Lineage + metrics (north_rule): every batch that holds rows also writes
 ``lineage/`` — one row per (batch, spark partition) with row counts and
 event-time bounds — and ``metrics/`` — one row per (batch, status, codec)
 mirroring imagor's Prometheus counters (metrics/prometheusmetrics).
@@ -27,12 +27,21 @@ successful renders to ``rendered_keys/`` — a compact index the pipeline
 left-anti-joins incoming clips against, so re-runs/backfills skip work that
 is already in result storage.
 
+An empty batch commits its marker alone: no data, lineage, metrics or
+rendered-keys dir (≅ imagor saving only what a request produced,
+saveWithErrorHandling imagor.go:783-811). Every reader skips a committed
+batch that has no dir.
+
 Single-pass design: the payload (binary) column is traversed exactly ONCE —
-the partitioned data write. Lineage, metrics and rendered keys are then
-aggregated from a column-pruned re-read of the just-written parquet
-(out_len/part_id materialized at write time), so no multi-GB batch ever
-needs to be persisted for two tiny aggregates (the round-1 sink cached the
-full payload batch three jobs long).
+the partitioned data write, which also counts its rows (an observed
+metric, no extra job). The side tables then come from a column-pruned
+re-read of the just-written parquet (out_len/part_id materialized at write
+time, the schema given so no footer is read): ONE aggregate per
+(part_id, status, codec), collected to the driver, from which lineage and
+metrics are rolled up and written as single small files, plus one job for
+the rendered keys when the batch rendered any. No multi-GB batch is ever
+persisted for the side tables (the round-1 sink cached the full payload
+batch three jobs long).
 """
 
 from __future__ import annotations
@@ -40,14 +49,43 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, functions as F
 
 log = logging.getLogger(__name__)
 
 # statuses whose results land in result storage (≅ successful render)
 _RENDERED_STATUSES = ("ok", "meta")
+
+# the side tables' file schemas: the types Spark gives the same aggregates
+_TS = pa.timestamp("us", tz="UTC")
+_LINEAGE_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("n_rows", pa.int64()), ("min_ingest_ts", _TS),
+    ("max_ingest_ts", _TS), ("out_bytes", pa.int64()), ("batch_id", pa.int32()),
+])
+_METRICS_SCHEMA = pa.schema([
+    ("status", pa.string()), ("codec", pa.string()), ("n", pa.int64()),
+    ("batch_id", pa.int32()),
+])
+
+
+def _skip_nulls(agg, values):
+    """``agg`` over the non-null ``values``; None when all are null (SQL
+    aggregate semantics)."""
+    values = [v for v in values if v is not None]
+    return agg(values) if values else None
+
+
+def _write_table(rows: list[dict], schema: pa.Schema, path: str) -> None:
+    """``rows`` as the single parquet file of dir ``path``, replacing it."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                   os.path.join(path, "part-00000.parquet"))
 
 
 class IdempotentSink:
@@ -76,26 +114,6 @@ class IdempotentSink:
         with open(self._marker(batch_id)) as f:
             return int(json.load(f)["committed_at_ms"])
 
-    @staticmethod
-    def _has_parquet_files(path: str) -> bool:
-        """True if any .parquet data file exists under ``path`` (one level of
-        partition dirs deep — matching the sink's own layout)."""
-        try:
-            entries = os.listdir(path)
-        except FileNotFoundError:
-            return False
-        for e in entries:
-            full = os.path.join(path, e)
-            if e.endswith(".parquet") and os.path.isfile(full):
-                return True
-            if os.path.isdir(full):
-                try:
-                    if any(x.endswith(".parquet") for x in os.listdir(full)):
-                        return True
-                except FileNotFoundError:
-                    continue
-        return False
-
     def is_committed(self, batch_id: int) -> bool:
         return os.path.exists(self._marker(batch_id))
 
@@ -111,45 +129,24 @@ class IdempotentSink:
             "out_len", F.length("bytes")
         )
 
-    def _commit(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Write data + side tables, then the marker (caller has already
-        checked ``is_committed``)."""
-        t0 = time.time()
-        spark = batch_df.sparkSession
-        batch_df = self._with_provenance(batch_df)
-        data_path = os.path.join(self.data_dir, f"batch_id={batch_id}")
-        # snappy (r6 A/B, reversing the r3 zstd choice with measurement):
-        # the payload column is ALREADY-ENCODED media — zstd recovers only
-        # ~5% (2,711 MB written vs 2,853 MB raw at sf0.1) yet costs ~20 s
-        # of a ~27 s pipeline run in compression CPU (measured same-host-
-        # phase: zstd 47.4 s, snappy 27.3 s, uncompressed 30.3 s). Snappy
-        # is near-free CPU and its 5% loss costs ~1.2 s even on the
-        # 122 MB/s disk workdir — it wins on BOTH workdirs, and the same
-        # holds at scale for any sink whose payloads are compressed codecs.
-        writer = batch_df.write.mode("overwrite").option("compression", "snappy")
-        if self.partition_by:
-            writer = writer.partitionBy(self.partition_by)
-        writer.parquet(data_path)
+    def _batch_dirs(self, batch_id: int) -> list[str]:
+        return [
+            os.path.join(self.data_dir, f"batch_id={batch_id}"),
+            os.path.join(self.lineage_dir, f"batch-{batch_id}"),
+            os.path.join(self.metrics_dir, f"batch-{batch_id}"),
+            os.path.join(self.rendered_dir, f"batch-{batch_id}"),
+        ]
 
-        # derived side tables from a column-pruned re-read (never touches
-        # the binary column again — parquet reads only the tiny columns).
-        # An empty batch + dynamic partitionBy writes zero parquet files,
-        # which would make the re-read fail schema inference — detect that
-        # case explicitly (never via a broad except, which would mistake a
-        # transient FS error for an empty batch and stamp a synthetic
-        # partition into a non-empty batch's directory).
-        if not self._has_parquet_files(data_path):
-            # write a schema-bearing empty file inside a synthetic partition
-            # dir so the directory layout stays consistent with non-empty
-            # batches (readers of data/lineage/metrics see the batch as 0 rows)
-            empty = batch_df.limit(0).coalesce(1)
-            target = data_path
-            if self.partition_by:
-                empty = empty.drop(self.partition_by)
-                target = os.path.join(data_path, f"{self.partition_by}=__empty__")
-            empty.write.mode("overwrite").parquet(target)
-        written = spark.read.parquet(data_path)
-        self._write_side_tables(written, batch_id)
+    def _commit(self, batch_df: DataFrame | None, batch_id: int) -> None:
+        """Write data + side tables, then the marker (caller has already
+        checked ``is_committed``). A batch with no rows — ``None`` when the
+        caller knows that without a job — commits its marker alone."""
+        t0 = time.time()
+        wrote = batch_df is not None and self._write_batch(batch_df, batch_id)
+        if not wrote:
+            # no rows: also clear what an earlier attempt at this id left
+            for path in self._batch_dirs(batch_id):
+                shutil.rmtree(path, ignore_errors=True)
         # atomic commit marker LAST
         tmp = self._marker(batch_id) + ".tmp"
         with open(tmp, "w") as f:
@@ -167,47 +164,103 @@ class IdempotentSink:
         # anti-join's build side becomes thousands of small files. The batch
         # data is already committed (marker above), so a failure in this
         # non-essential index maintenance must not fail the streaming query —
-        # the next commit retries it.
-        if self.rendered_compact_every and self._n_rendered_batch_dirs() >= self.rendered_compact_every:
+        # the next commit that writes rows retries it.
+        if (
+            wrote
+            and self.rendered_compact_every
+            and self._n_rendered_batch_dirs() >= self.rendered_compact_every
+        ):
             try:
-                self.compact_rendered_keys(spark)
+                self.compact_rendered_keys(batch_df.sparkSession)
             except Exception as exc:  # pragma: no cover - transient FS/Spark
                 log.warning("rendered-keys compaction deferred: %s", exc, exc_info=True)
 
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> bool:
+        """The data write, then the side tables; False, with only the data
+        dir written, when the batch holds no rows."""
+        spark = batch_df.sparkSession
+        batch_df = self._with_provenance(batch_df)
+        data_path = os.path.join(self.data_dir, f"batch_id={batch_id}")
+        rows = Observation()
+        # snappy (r6 A/B, reversing the r3 zstd choice with measurement):
+        # the payload column is ALREADY-ENCODED media — zstd recovers only
+        # ~5% (2,711 MB written vs 2,853 MB raw at sf0.1) yet costs ~20 s
+        # of a ~27 s pipeline run in compression CPU (measured same-host-
+        # phase: zstd 47.4 s, snappy 27.3 s, uncompressed 30.3 s). Snappy
+        # is near-free CPU and its 5% loss costs ~1.2 s even on the
+        # 122 MB/s disk workdir — it wins on BOTH workdirs, and the same
+        # holds at scale for any sink whose payloads are compressed codecs.
+        writer = (
+            batch_df.observe(rows, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite").option("compression", "snappy")
+        )
+        if self.partition_by:
+            writer = writer.partitionBy(self.partition_by)
+        writer.parquet(data_path)
+        if not rows.get["n"]:
+            return False
+        # derived side tables from a column-pruned re-read (never touches
+        # the binary column again — parquet reads only the tiny columns);
+        # the known schema spares the footer-inference job
+        self._write_side_tables(
+            spark.read.schema(batch_df.schema).parquet(data_path), batch_id
+        )
+        return True
+
     def _write_side_tables(self, written: DataFrame, batch_id: int) -> None:
-        """Lineage / metrics / rendered-keys side tables from a
-        column-pruned re-read of the just-written batch data."""
-        lineage = (
-            written.groupBy("part_id")
+        """Lineage / metrics / rendered-keys side tables of a batch that
+        holds rows. One aggregate job gives each (part_id, status, codec)
+        group's rows, bytes and event-time bounds, a few rows per spark
+        partition; lineage and metrics are rolled up from those on the
+        driver. The rendered keys are one more job, run only when the
+        batch rendered any."""
+        groups = (
+            written.groupBy("part_id", "status", "codec")
             .agg(
-                F.count("*").alias("n_rows"),
-                F.min("ingest_ts").alias("min_ingest_ts"),
-                F.max("ingest_ts").alias("max_ingest_ts"),
+                F.count("*").alias("n"),
+                F.unix_micros(F.min("ingest_ts")).alias("min_us"),
+                F.unix_micros(F.max("ingest_ts")).alias("max_us"),
                 F.sum("out_len").alias("out_bytes"),
             )
-            .withColumn("batch_id", F.lit(batch_id))
+            .collect()
         )
-        metrics = (
-            written.groupBy("status", "codec")
-            .agg(F.count("*").alias("n"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        rendered = (
-            written.filter(F.col("status").isin(*_RENDERED_STATUSES))
-            .select("result_key")
-            .distinct()
-        )
+        parts, metrics = {}, {}
+        for g in groups:
+            parts.setdefault(g.part_id, []).append(g)
+            metrics[g.status, g.codec] = metrics.get((g.status, g.codec), 0) + g.n
         # plain batch-N dir names (no '=') so partition inference does
         # not collide with the explicit batch_id column in the rows
-        lineage.write.mode("overwrite").parquet(
-            os.path.join(self.lineage_dir, f"batch-{batch_id}")
+        _write_table(
+            [
+                {
+                    "part_id": part_id,
+                    "n_rows": sum(g.n for g in gs),
+                    "min_ingest_ts": _skip_nulls(min, [g.min_us for g in gs]),
+                    "max_ingest_ts": _skip_nulls(max, [g.max_us for g in gs]),
+                    "out_bytes": _skip_nulls(sum, [g.out_bytes for g in gs]),
+                    "batch_id": batch_id,
+                }
+                for part_id, gs in parts.items()
+            ],
+            _LINEAGE_SCHEMA,
+            os.path.join(self.lineage_dir, f"batch-{batch_id}"),
         )
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(self.metrics_dir, f"batch-{batch_id}")
+        _write_table(
+            [
+                {"status": status, "codec": codec, "n": n, "batch_id": batch_id}
+                for (status, codec), n in metrics.items()
+            ],
+            _METRICS_SCHEMA,
+            os.path.join(self.metrics_dir, f"batch-{batch_id}"),
         )
-        rendered.write.mode("overwrite").parquet(
-            os.path.join(self.rendered_dir, f"batch-{batch_id}")
-        )
+        if any(g.status in _RENDERED_STATUSES for g in groups):
+            (
+                written.filter(F.col("status").isin(*_RENDERED_STATUSES))
+                .select("result_key")
+                .distinct()
+                .write.mode("overwrite")
+                .parquet(os.path.join(self.rendered_dir, f"batch-{batch_id}"))
+            )
 
     # ---- reader side: only committed batches are visible
 
@@ -343,16 +396,24 @@ class IdempotentSink:
         self, spark, max_age_ms: int | None = None, now_ms: int | None = None
     ) -> DataFrame:
         """Committed result-cache index: DataFrame[result_key] (distinct per
-        batch; dedup across batches happens in the anti-join). Empty frame
-        when nothing is committed yet. ``max_age_ms`` expires old entries —
-        their keys drop out of the index and the anti-join re-renders them
-        (result-cache TTL, getTtl imagor.go:991-1003). Reads the compact
-        index (row-level TTL on its committed_at_ms column) plus any
-        not-yet-folded per-batch dirs (batch-level TTL via the marker)."""
+        batch; dedup across batches happens in the anti-join). ``max_age_ms``
+        expires old entries — their keys drop out of the index and the
+        anti-join re-renders them (result-cache TTL, getTtl
+        imagor.go:991-1003). Reads the compact index (row-level TTL on its
+        committed_at_ms column) plus the not-yet-folded per-batch dirs of
+        committed batches (batch-level TTL via the marker); both schemas are
+        known, so no footer is read.
+
+        With neither (nothing committed yet, or only marker-only batches)
+        the index is an empty ``LocalTableScan``: it needs no Spark job, and
+        the optimizer drops an anti-join against it, so this read is the
+        probe for whether a trigger anti-joins at all."""
         manifest = self._read_compact_manifest()
         frames = []
         if manifest:
-            cdf = spark.read.parquet(os.path.join(self.rendered_dir, manifest["name"]))
+            cdf = spark.read.schema("result_key string, committed_at_ms long").parquet(
+                os.path.join(self.rendered_dir, manifest["name"])
+            )
             if max_age_ms is not None:
                 now = now_ms if now_ms is not None else int(time.time() * 1000)
                 cdf = cdf.filter(F.col("committed_at_ms") >= F.lit(now - max_age_ms))
@@ -369,9 +430,9 @@ class IdempotentSink:
             if os.path.exists(p)
         ]
         if paths:
-            frames.append(spark.read.parquet(*paths).select("result_key"))
+            frames.append(spark.read.schema("result_key string").parquet(*paths))
         if not frames:
-            return spark.createDataFrame([], "result_key string")
+            return spark.sql("SELECT CAST(NULL AS STRING) AS result_key WHERE FALSE")
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)

@@ -59,6 +59,25 @@ def test_streaming_end_to_end(spark, dirs):
     assert lineage.filter(lineage.n_rows > 0).count() > 0
     metrics = sink.read_metrics(spark)
     assert metrics.agg(F.sum("n")).first()[0] == n_stream
+    # each side table equals its oracle over the committed rows: same
+    # column names and types, same rows
+    oracles = [
+        (lineage, out.groupBy("part_id", "batch_id").agg(
+            F.count("*").alias("n_rows"),
+            F.min("ingest_ts").alias("min_ingest_ts"),
+            F.max("ingest_ts").alias("max_ingest_ts"),
+            F.sum("out_len").alias("out_bytes"),
+        )),
+        (metrics, out.groupBy("status", "codec", "batch_id").agg(F.count("*").alias("n"))),
+        (sink.read_rendered_keys(spark),
+         out.filter(out.status.isin("ok", "meta")).select("result_key").distinct()),
+    ]
+    for got, want in oracles:
+        want = want.select(*got.columns)
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+        assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
 
 
 def test_duplicate_clip_renders_once(spark, dirs):
@@ -144,6 +163,78 @@ def test_dedup_stream_is_narrow_and_sink_releases_cache(spark, dirs):
     assert len(sink.committed_batches()) >= 3  # one trigger per file
     assert sink.read_committed(spark).count() == 30
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_trigger_job_counts(spark, dirs):
+    """Spark jobs per trigger, counted over a job group set around each
+    sink call. One input file makes a data trigger, then the zero-row
+    trigger availableNow runs once the watermark has moved: that one runs
+    only the stateful count() and commits its marker alone."""
+    from imagor_spark.engine.transform import make_transform_fn
+    from imagor_spark.streaming.pipeline import TransformingSink, build_raw_stream
+
+    pdf = make_pdf(42, range(20), signed_mix=False)
+    spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(dirs["in"])
+    sink = TransformingSink(
+        dirs["out"], transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
+        secret=SECRET, allow_unsafe=True,
+    )
+    sc = spark.sparkContext
+
+    def counted(batch_df, batch_id):
+        sc.setJobGroup(f"trigger-jobs-{batch_id}", "sink call")
+        sink(batch_df, batch_id)
+
+    q = (
+        build_raw_stream(spark, dirs["in"]).writeStream.foreachBatch(counted)
+        .option("checkpointLocation", dirs["ckpt"])
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sink.committed_batches() == [0, 1]
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"trigger-jobs-{b}")) for b in (0, 1)]
+    assert jobs == [8, 1]
+    assert os.path.isdir(os.path.join(sink.data_dir, "batch_id=0"))
+    assert not os.path.exists(os.path.join(sink.data_dir, "batch_id=1"))
+    assert sink.read_committed(spark).count() == 20
+
+
+def test_marker_only_result_store_plans_no_antijoin(spark, dirs):
+    """An empty batch commits its marker alone, so a result store holding
+    only such batches holds no rendered keys: the keys read is a local
+    empty relation (no ``ExistingRDD``, no job) and the anti-join is gone
+    from the trigger's plan. A store with rendered keys still gets one."""
+    from imagor_spark.engine.transform import OUTPUT_SCHEMA, make_transform_fn, transform
+    from imagor_spark.streaming.pipeline import TransformingSink
+
+    store = IdempotentSink(os.path.join(dirs["out"], "store"))
+    store(spark.createDataFrame([], OUTPUT_SCHEMA), 0)
+    assert store.committed_batches() == [0]
+    assert not any(os.path.exists(p) for p in store._batch_dirs(0))
+    write_batch(spark, dirs["in"], 0, 10)
+    src = narrow_source(spark, dirs["in"])
+
+    def survivors_plan():
+        sink = TransformingSink(
+            os.path.join(dirs["out"], "sink"),
+            transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
+            secret=SECRET, allow_unsafe=True, result_cache=store,
+        )
+        keyed = src.withColumn("__kv", sink.key_validity(F.col("ops"))).select(
+            *src.columns, F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok")
+        )
+        qe = sink._survivors(spark, keyed)._jdf.queryExecution()
+        return qe.optimizedPlan().toString() + qe.executedPlan().toString()
+
+    plan = survivors_plan()
+    assert "ExistingRDD" not in plan and "LeftAnti" not in plan, plan
+    store(transform(generate_clips_df(spark, 10, signed_mix=False),
+                    secret=SECRET, allow_unsafe=True), 1)
+    assert "LeftAnti" in survivors_plan()
 
 
 def test_partition_dir_values_reach_the_sink(spark, dirs):
