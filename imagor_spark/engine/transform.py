@@ -27,6 +27,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from ..audio import apply as audio_apply
@@ -347,3 +349,28 @@ def singleflight_within(df, ok_col: str = "__ok"):
         .filter(F.col("__winner").isNull() | (F.col("clip_id") == F.col("__winner")))
         .drop("__winner")
     )
+
+
+def singleflight_local(narrow: pa.Table, ok_col: str = "__ok") -> pa.Table:
+    """:func:`singleflight_within`'s rule on a driver-side Arrow table: per
+    ``__rk``, the min ``clip_id`` among the ``ok_col`` rows wins, else the
+    min overall; a row with a null key, or of a group whose ``clip_id``s are
+    all null, is kept. The per-batch sink collects its narrow rows once and
+    runs this on them, so the winner dimension costs no Spark job."""
+    rk, clip_id = narrow["__rk"], narrow["clip_id"]
+    groups = (
+        pa.table({
+            "__rk": rk,
+            "any": clip_id,
+            "ok": pc.if_else(pc.fill_null(narrow[ok_col], False), clip_id,
+                             pa.scalar(None, clip_id.type)),
+        })
+        .group_by("__rk")
+        .aggregate([("any", "min"), ("ok", "min")])
+    )
+    winner = pc.take(
+        pc.coalesce(groups["ok_min"], groups["any_min"]),
+        pc.index_in(rk, value_set=groups["__rk"], skip_nulls=True),
+    )
+    keep = pc.or_kleene(pc.is_null(winner), pc.equal(clip_id, winner))
+    return narrow.filter(pc.fill_null(keep, False))

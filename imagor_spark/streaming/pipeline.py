@@ -11,12 +11,17 @@ stateful stage; the payload is fetched late, for the rows that survive:
                                                   single-render-per-key,
                                                   imagor.go:842-884)
     → foreachBatch TransformingSink:
-        key + signature/expiry pre-check, persisted once per trigger
-        → result-cache anti-join → within-batch singleflight
+        key + signature/expiry pre-check → result-cache anti-join,
+        collected once per trigger to the driver as one Arrow table
+        → within-batch singleflight and admission on the local rows
         → late fetch: read only the payload column of the survivors'
-          source files, joined to the broadcast survivors on
+          source files, joined to the broadcast local survivors on
           (file_path, row_index)
-        → admission → vectorized decode→ops→encode → exactly-once save
+        → vectorized decode→ops→encode → exactly-once save
+
+One trigger's narrow rows are one driver result (about 317 B a row, so
+about 3M rows under the 1 GiB ``spark.driver.maxResultSize`` default);
+``max_files_per_trigger`` is the bound that keeps a trigger under it.
 
 State lives in RocksDB (spark.sql.streaming.stateStore.providerClass) so
 dedup state at 10^12 keys spills off-heap; the within-watermark retention
@@ -29,6 +34,8 @@ from __future__ import annotations
 import os
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
@@ -38,7 +45,7 @@ from ..engine.transform import (
     _anti_join_rendered,
     make_key_validity_udf,
     make_transform_fn,
-    singleflight_within,
+    singleflight_local,
 )
 from ..sources.clips import CLIPS_SCHEMA
 from .sink import IdempotentSink
@@ -96,14 +103,21 @@ def build_raw_stream(
 BROADCAST_ROWS = 1_000_000
 
 
-def _fetch_payloads(spark, survivors: DataFrame) -> DataFrame | None:
-    """Late materialization: ``survivors`` (narrow rows with their
-    ``file_path, row_index``) joined to their payloads, or None when there
-    are no survivors. Only the ``bytes`` column of the survivors' own
-    files is read, joined to the broadcast survivors, so no payload
-    crosses a shuffle. Files go to broadcasts whole, at most
-    ``BROADCAST_ROWS`` survivors each where files allow, and the union of
-    those joins is the result.
+def _fetch_payloads(spark, survivors: pa.Table) -> DataFrame:
+    """Late materialization: the driver-side ``survivors`` (non-empty
+    narrow rows with their ``file_path, row_index``) joined to their
+    payloads, with each row's ``admit_status``. Only the ``bytes`` column
+    of the survivors' own files is read, joined to the broadcast
+    survivors, so no payload crosses a shuffle. Files go to broadcasts
+    whole, at most ``BROADCAST_ROWS`` survivors each where files allow,
+    and the union of those joins is the result.
+
+    Each broadcast's build side is its chunk of ``survivors`` as a local
+    relation (``LocalTableScan``, nothing re-read) already admitted against
+    the per-codec config (≅ CheckResolution processor.go:506-516 + the
+    loader resolution chain imagor.go:699-760), so the payload rows pass
+    one join per chunk and the transform quarantines non-ok rows before
+    touching a payload byte.
 
     ``_metadata.file_path`` is a URI string (a space is ``%20``, a literal
     ``%`` is ``%25``); it is decoded to a Hadoop path before it is handed
@@ -116,26 +130,34 @@ def _fetch_payloads(spark, survivors: DataFrame) -> DataFrame | None:
     those rows are hash-spread over the cores first. That shuffle carries
     the payload, once, where the alternative is a render on fewer cores."""
     jvm = spark.sparkContext._jvm
+    config = params_config_df(spark)
+    per_file = survivors.group_by("file_path").aggregate([("file_path", "count")])
     chunks, rows = [], BROADCAST_ROWS
-    for r in survivors.groupBy("file_path").count().collect():
-        if rows + r["count"] > BROADCAST_ROWS:
+    for path, n in sorted(zip(per_file["file_path"].to_pylist(),
+                              per_file["file_path_count"].to_pylist())):
+        if rows + n > BROADCAST_ROWS:
             chunks.append([])
             rows = 0
-        chunks[-1].append(r["file_path"])
-        rows += r["count"]
-    if not chunks:
-        return None
+        chunks[-1].append(path)
+        rows += n
+
+    def admitted(files):
+        local = survivors.filter(pc.is_in(
+            survivors["file_path"],
+            value_set=pa.array(files, survivors.schema.field("file_path").type),
+        ))
+        return F.broadcast(resolve_with_config(spark.createDataFrame(local), config))
+
     clips = reduce(DataFrame.unionByName, [
         spark.read.schema("bytes binary")
         .parquet(*[jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)).toString()
                    for f in files])
         .select("bytes", "_metadata.file_path", "_metadata.row_index")
-        .join(F.broadcast(survivors.where(F.col("file_path").isin(files))),
-              ["file_path", "row_index"])
+        .join(admitted(files), ["file_path", "row_index"])
         for files in chunks
     ])
     cores = spark.sparkContext.defaultParallelism
-    if sum(map(len, chunks)) < cores:
+    if per_file.num_rows < cores:
         clips = clips.repartition(cores, "file_path", "row_index")
     return clips.drop("file_path", "row_index")
 
@@ -143,15 +165,17 @@ def _fetch_payloads(spark, survivors: DataFrame) -> DataFrame | None:
 class TransformingSink(IdempotentSink):
     """The request lifecycle (imagor.go:275-540) executed INSIDE foreachBatch:
 
-      narrow batch → key + signature/expiry pre-check (persisted once)
+      narrow batch → key + signature/expiry pre-check
             → result-cache anti-join (index re-read THIS batch)
-            → within-batch singleflight (same result_key renders once;
-              the survivors persisted once)
-            → late payload fetch (survivors' source rows only)
-            → admission (broadcast config dim, quarantine pre-decode)
+            → ONE collect of the narrow rows to the driver (an Arrow table)
+            → within-batch singleflight on that table (same result_key
+              renders once)
+            → admission (config dim joined to each local survivor chunk)
+            → late payload fetch (survivors' source rows only, one
+              broadcast join per chunk)
             → decode→ops→encode transform
             → exactly-once commit (IdempotentSink; its marker alone when
-              no row survives)
+              no row is collected)
 
     Re-reading the committed rendered-keys index per micro-batch is the
     live result-cache economy: a key committed by batch N skips render in
@@ -164,11 +188,17 @@ class TransformingSink(IdempotentSink):
 
     Admission (≅ CheckResolution processor.go:506-516 + the loader
     resolution chain imagor.go:699-760): the per-codec config dimension is
-    broadcast-joined against the fetched rows and the resulting
-    ``admit_status`` column rides INTO the transform UDF, which quarantines
-    non-ok rows before touching a payload byte. Scale shape: the dimension
-    is tiny (one row per codec) so the join is a broadcast, and admission
-    adds NO extra branch over the fetched rows.
+    broadcast-joined against the local survivors, and the resulting
+    ``admit_status`` column rides with them through the payload join INTO
+    the transform UDF, which quarantines non-ok rows before touching a
+    payload byte. Scale shape: the dimension is tiny (one row per codec)
+    and so are the narrow survivors, so admission adds no join and no
+    branch over the payload rows.
+
+    Ceiling: one trigger's narrow rows are one driver result, about 317 B a
+    row, so about 3M rows fit under the 1 GiB ``spark.driver.maxResultSize``
+    default. ``max_files_per_trigger`` is the bound that keeps a trigger
+    under it.
     """
 
     def __init__(
@@ -200,70 +230,47 @@ class TransformingSink(IdempotentSink):
         if self.is_committed(batch_id):
             return  # replayed batch: effect already visible → exactly-once
         spark = batch_df.sparkSession
-        # one key projection serves BOTH cache economies (the reference
-        # derives the key once per request too, imagor.go:403-408):
-        #   across batches — anti-join vs the committed rendered-keys index;
-        #   within a batch — singleflight (imagor.go:842-884): same-key rows
-        #   arriving in ONE trigger render once, not N times.
-        # The keyed frame is narrow (no payload), so it is cheap to persist,
-        # and it is materialized by ONE full action: every later branch
-        # (anti-join, singleflight's winner dim) reads the cache, and the
-        # stateful dedup — with its RocksDB state commit — runs once per
-        # trigger instead of once per branch. A partial action (isEmpty,
-        # limit) would cache only some partitions and re-run the stateful
-        # stage for the rest. Measured on a 2,000-clip drain (one data
-        # trigger plus the zero-row trigger availableNow runs last), shared
-        # 4-core VM: shuffle write 157 MB → 0.5 MB, shuffle read 314 →
-        # 0.5 MB, RocksDB commit time summed over both triggers 6.8 → 3.3 s.
-        # That count is the only job of a trigger with no rows: the commit
-        # is its marker alone. The zero-row trigger still runs, because it
-        # carries the advanced watermark into the state store (and so into
-        # the late-row filter of the next run).
-        keyed = (
-            batch_df.withColumn("__kv", self.key_validity(F.col("ops")))
-            .select(*batch_df.columns,
-                    F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok"))
-            .persist()
-        )
-        survivors = None
-        try:
-            out = None
-            if keyed.count():
-                survivors = self._survivors(spark, keyed).persist()
-                out = self._render(spark, survivors)
-            self._commit(out, batch_id)
-        finally:
-            keyed.unpersist()
-            if survivors is not None:
-                survivors.unpersist()
-
-    def _survivors(self, spark, keyed: DataFrame) -> DataFrame:
-        """Anti-join → singleflight on the cached narrow frame. The caller
-        persists the result: the fetch's per-file count materializes it, so
-        the winner dimension is aggregated once, not again for the render's
-        survivor broadcast."""
-        if self.result_cache is not None:
-            # FRESH read of the committed index — sees keys committed by
-            # earlier batches of this very stream (live cache refresh).
-            # The compacted index is small relative to the stream (TTL-
-            # bounded), so Spark plans a broadcast anti-join; with no index
-            # yet the read is an empty local relation and the optimizer
-            # drops the join.
-            rendered = self.result_cache.read_rendered_keys(
-                spark, max_age_ms=self.result_cache_max_age_ms
+        # The narrow rows (no payload) are collected once, as one Arrow
+        # table: that collect is the only action over the stream's batch,
+        # so the stateful dedup — with its RocksDB state commit — runs once
+        # per trigger, and everything after it (singleflight, the chunk
+        # plan, the survivors' broadcasts) works on the driver's copy. A
+        # trigger with no rows runs that one job and commits its marker
+        # alone. The zero-row trigger still
+        # runs, because it carries the advanced watermark into the state
+        # store (and so into the late-row filter of the next run).
+        narrow = self._narrow(spark, batch_df).toArrow()
+        out = None
+        if narrow.num_rows:
+            survivors = singleflight_local(narrow).drop_columns(["__rk", "__ok"])
+            out = _fetch_payloads(spark, survivors).mapInPandas(
+                self.transform_fn, schema=OUTPUT_SCHEMA
             )
-            keyed = _anti_join_rendered(keyed, rendered)
-        return singleflight_within(keyed, ok_col="__ok").drop("__rk", "__ok")
+        self._commit(out, batch_id)
 
-    def _render(self, spark, survivors: DataFrame) -> DataFrame | None:
-        """Fetch and render the survivors; None when there are none."""
-        clips = _fetch_payloads(spark, survivors)
-        if clips is None:
-            return None
-        # attach admit_status via broadcast join; the transform UDF
-        # quarantines non-ok rows pre-decode (single plan, no union)
-        admitted = resolve_with_config(clips, params_config_df(spark))
-        return admitted.mapInPandas(self.transform_fn, schema=OUTPUT_SCHEMA)
+    def _narrow(self, spark, batch_df: DataFrame) -> DataFrame:
+        """The batch's rows with their result key ``__rk`` and validity
+        ``__ok``, minus the keys already committed to the result cache.
+        One key projection serves BOTH cache economies (the reference
+        derives the key once per request too, imagor.go:403-408): across
+        batches — the anti-join against the committed rendered-keys index;
+        within a batch — singleflight (imagor.go:842-884): same-key rows
+        arriving in ONE trigger render once, not N times."""
+        keyed = batch_df.withColumn("__kv", self.key_validity(F.col("ops"))).select(
+            *batch_df.columns,
+            F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok"),
+        )
+        if self.result_cache is None:
+            return keyed
+        # FRESH read of the committed index — sees keys committed by
+        # earlier batches of this very stream (live cache refresh). The
+        # compacted index is small relative to the stream (TTL-bounded), so
+        # Spark plans a broadcast anti-join; with no index yet the read is
+        # an empty local relation and the optimizer drops the join.
+        rendered = self.result_cache.read_rendered_keys(
+            spark, max_age_ms=self.result_cache_max_age_ms
+        )
+        return _anti_join_rendered(keyed, rendered)
 
 
 def run_pipeline(

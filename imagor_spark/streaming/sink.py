@@ -37,9 +37,10 @@ the partitioned data write, which also counts its rows (an observed
 metric, no extra job). The side tables then come from a column-pruned
 re-read of the just-written parquet (out_len/part_id materialized at write
 time, the schema given so no footer is read): ONE aggregate per
-(part_id, status, codec), collected to the driver, from which lineage and
-metrics are rolled up and written as single small files, plus one job for
-the rendered keys when the batch rendered any. No multi-GB batch is ever
+(part_id, status, codec), with the distinct result keys of the rendered
+statuses, collected to the driver, from which lineage, metrics and the
+rendered keys are rolled up and written as single small files. A data
+batch's side tables thus cost one Spark job. No multi-GB batch is ever
 persisted for the side tables (the round-1 sink cached the full payload
 batch three jobs long).
 """
@@ -71,6 +72,7 @@ _METRICS_SCHEMA = pa.schema([
     ("status", pa.string()), ("codec", pa.string()), ("n", pa.int64()),
     ("batch_id", pa.int32()),
 ])
+_RENDERED_KEYS_SCHEMA = pa.schema([("result_key", pa.string())])
 
 
 def _skip_nulls(agg, values):
@@ -210,10 +212,10 @@ class IdempotentSink:
     def _write_side_tables(self, written: DataFrame, batch_id: int) -> None:
         """Lineage / metrics / rendered-keys side tables of a batch that
         holds rows. One aggregate job gives each (part_id, status, codec)
-        group's rows, bytes and event-time bounds, a few rows per spark
-        partition; lineage and metrics are rolled up from those on the
-        driver. The rendered keys are one more job, run only when the
-        batch rendered any."""
+        group's rows, bytes, event-time bounds and, for rendered statuses,
+        its distinct result keys, a few rows per spark partition; all three
+        tables are rolled up from those on the driver and written there.
+        The rendered keys are written only when the batch rendered any."""
         groups = (
             written.groupBy("part_id", "status", "codec")
             .agg(
@@ -221,6 +223,9 @@ class IdempotentSink:
                 F.unix_micros(F.min("ingest_ts")).alias("min_us"),
                 F.unix_micros(F.max("ingest_ts")).alias("max_us"),
                 F.sum("out_len").alias("out_bytes"),
+                F.collect_set(
+                    F.when(F.col("status").isin(*_RENDERED_STATUSES), F.col("result_key"))
+                ).alias("result_keys"),
             )
             .collect()
         )
@@ -254,12 +259,11 @@ class IdempotentSink:
             os.path.join(self.metrics_dir, f"batch-{batch_id}"),
         )
         if any(g.status in _RENDERED_STATUSES for g in groups):
-            (
-                written.filter(F.col("status").isin(*_RENDERED_STATUSES))
-                .select("result_key")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(os.path.join(self.rendered_dir, f"batch-{batch_id}"))
+            keys = set().union(*(g.result_keys for g in groups))
+            _write_table(
+                [{"result_key": k} for k in sorted(keys)],
+                _RENDERED_KEYS_SCHEMA,
+                os.path.join(self.rendered_dir, f"batch-{batch_id}"),
             )
 
     # ---- reader side: only committed batches are visible
@@ -301,10 +305,16 @@ class IdempotentSink:
         return spark.read.option("basePath", self.data_dir).parquet(*paths)
 
     def read_lineage(self, spark) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.lineage_dir, "batch-*"))
+        return self._read_side_table(spark, self.lineage_dir)
 
     def read_metrics(self, spark) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.metrics_dir, "batch-*"))
+        return self._read_side_table(spark, self.metrics_dir)
+
+    def _read_side_table(self, spark, base: str) -> DataFrame:
+        paths = self._committed_paths(base, "batch-")
+        if not paths:
+            raise FileNotFoundError(f"no committed batches under {base}")
+        return spark.read.parquet(*paths)
 
     # ---- rendered-keys index compaction (result-cache index maintenance):
     # the reference's result storage is ONE keyed store; per-batch dirs are

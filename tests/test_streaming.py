@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from imagor_spark.sources.clips import (
@@ -80,6 +81,23 @@ def test_streaming_end_to_end(spark, dirs):
         assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
 
 
+def test_side_table_readers_skip_uncommitted_batches(spark, dirs):
+    """A crash after a batch's side tables and before its marker leaves
+    ``lineage/batch-N`` and ``metrics/batch-N`` with no ``_commits/N``:
+    neither reader may show that batch."""
+    from imagor_spark.engine.transform import transform
+
+    sink = IdempotentSink(dirs["out"])
+    for b in (0, 1):
+        sink(transform(generate_clips_df(spark, 10, signed_mix=False),
+                       secret=SECRET, allow_unsafe=True), b)
+    os.remove(sink._marker(1))
+    assert os.path.isdir(os.path.join(sink.lineage_dir, "batch-1"))
+    assert os.path.isdir(os.path.join(sink.metrics_dir, "batch-1"))
+    for table in (sink.read_lineage(spark), sink.read_metrics(spark)):
+        assert {r.batch_id for r in table.select("batch_id").collect()} == {0}
+
+
 def test_duplicate_clip_renders_once(spark, dirs):
     """Single-render-per-key (≅ singleflight imagor.go:842-884): duplicate
     clip_ids within the watermark render exactly once."""
@@ -144,8 +162,8 @@ def test_late_fetch_reads_odd_input_path(spark, tmp_path):
 
 
 def test_dedup_stream_is_narrow_and_sink_releases_cache(spark, dirs):
-    """The payload never enters the dedup exchange, and the per-trigger
-    cached key frame is unpersisted after every trigger, data or empty."""
+    """The payload never enters the dedup exchange, and no trigger, data
+    or empty, leaves anything persisted."""
     from imagor_spark.streaming.pipeline import build_raw_stream
 
     for start in (0, 10, 20):
@@ -165,11 +183,12 @@ def test_dedup_stream_is_narrow_and_sink_releases_cache(spark, dirs):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_trigger_job_counts(spark, dirs):
-    """Spark jobs per trigger, counted over a job group set around each
-    sink call. One input file makes a data trigger, then the zero-row
-    trigger availableNow runs once the watermark has moved: that one runs
-    only the stateful count() and commits its marker alone."""
+def trigger_jobs(spark, dirs, result_cache=None):
+    """Spark jobs per trigger, counted over a job group (unique to the
+    test's dirs) set around each sink call, for a stream of one 20-clip
+    input file: a data trigger, then the zero-row trigger availableNow
+    runs once the watermark has moved. Returns the per-trigger counts and
+    the sink."""
     from imagor_spark.engine.transform import make_transform_fn
     from imagor_spark.streaming.pipeline import TransformingSink, build_raw_stream
 
@@ -179,12 +198,12 @@ def test_trigger_job_counts(spark, dirs):
     ).parquet(dirs["in"])
     sink = TransformingSink(
         dirs["out"], transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
-        secret=SECRET, allow_unsafe=True,
+        secret=SECRET, allow_unsafe=True, result_cache=result_cache,
     )
     sc = spark.sparkContext
 
     def counted(batch_df, batch_id):
-        sc.setJobGroup(f"trigger-jobs-{batch_id}", "sink call")
+        sc.setJobGroup(f"{dirs['out']}-{batch_id}", "sink call")
         sink(batch_df, batch_id)
 
     q = (
@@ -196,11 +215,35 @@ def test_trigger_job_counts(spark, dirs):
     )
     q.awaitTermination()
     assert sink.committed_batches() == [0, 1]
-    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"trigger-jobs-{b}")) for b in (0, 1)]
-    assert jobs == [8, 1]
     assert os.path.isdir(os.path.join(sink.data_dir, "batch_id=0"))
     assert not os.path.exists(os.path.join(sink.data_dir, "batch_id=1"))
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"{dirs['out']}-{b}")) for b in (0, 1)]
+    return jobs, sink
+
+
+def test_trigger_job_counts(spark, dirs):
+    """A data trigger runs the narrow collect, the config and survivor
+    broadcasts, the render plus write and the side-table aggregate; the
+    zero-row trigger runs only the collect and commits its marker alone."""
+    jobs, sink = trigger_jobs(spark, dirs)
+    assert jobs == [5, 1]
     assert sink.read_committed(spark).count() == 20
+
+
+def test_trigger_job_counts_live_result_store(spark, dirs):
+    """Against a result store that holds rendered keys, each trigger also
+    broadcasts the keys index for its anti-join; keys already in the store
+    are not rendered again."""
+    from imagor_spark.engine.transform import transform
+
+    store = IdempotentSink(os.path.join(dirs["out"], "store"))
+    done = make_pdf(42, range(5), signed_mix=False)
+    store(transform(spark.createDataFrame(done, schema=CLIPS_SCHEMA),
+                    secret=SECRET, allow_unsafe=True), 0)
+    jobs, sink = trigger_jobs(spark, dirs, result_cache=store)
+    assert jobs == [6, 2]
+    got = {r.clip_id for r in sink.read_committed(spark).select("clip_id").collect()}
+    assert got == set(make_pdf(42, range(20), signed_mix=False)["clip_id"]) - set(done["clip_id"])
 
 
 def test_marker_only_result_store_plans_no_antijoin(spark, dirs):
@@ -218,23 +261,20 @@ def test_marker_only_result_store_plans_no_antijoin(spark, dirs):
     write_batch(spark, dirs["in"], 0, 10)
     src = narrow_source(spark, dirs["in"])
 
-    def survivors_plan():
+    def narrow_plan():
         sink = TransformingSink(
             os.path.join(dirs["out"], "sink"),
             transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
             secret=SECRET, allow_unsafe=True, result_cache=store,
         )
-        keyed = src.withColumn("__kv", sink.key_validity(F.col("ops"))).select(
-            *src.columns, F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok")
-        )
-        qe = sink._survivors(spark, keyed)._jdf.queryExecution()
+        qe = sink._narrow(spark, src)._jdf.queryExecution()
         return qe.optimizedPlan().toString() + qe.executedPlan().toString()
 
-    plan = survivors_plan()
+    plan = narrow_plan()
     assert "ExistingRDD" not in plan and "LeftAnti" not in plan, plan
     store(transform(generate_clips_df(spark, 10, signed_mix=False),
                     secret=SECRET, allow_unsafe=True), 1)
-    assert "LeftAnti" in survivors_plan()
+    assert "LeftAnti" in narrow_plan()
 
 
 def test_partition_dir_values_reach_the_sink(spark, dirs):
@@ -272,11 +312,62 @@ def test_late_fetch_splits_broadcasts_by_whole_files(spark, tmp_path, monkeypatc
     pdf = make_pdf(42, range(40), signed_mix=False)
     d = str(tmp_path / "in")
     spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(4).write.parquet(d)
-    clips = pipeline._fetch_payloads(spark, narrow_source(spark, d))
+    clips = pipeline._fetch_payloads(spark, narrow_source(spark, d).toArrow())
     plan = clips._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Join Inner") == 2, plan
     got = {r["clip_id"]: bytes(r["bytes"]) for r in clips.select("clip_id", "bytes").collect()}
     assert got == dict(zip(pdf["clip_id"], pdf["bytes"]))
+
+
+def test_late_fetch_admits_local_survivors_on_the_build_side(spark, tmp_path, monkeypatch):
+    """Each chunk's broadcast build side is its survivors as a local
+    relation (no ``ExistingRDD``: nothing is re-read or re-run), admitted
+    against the config there, so each payload scan passes exactly one
+    join."""
+    from imagor_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "BROADCAST_ROWS", 25)  # 4 files of 10 → 2 joins
+    d = str(tmp_path / "in")
+    pdf = make_pdf(42, range(40), signed_mix=False)
+    spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(4).write.parquet(d)
+    clips = pipeline._fetch_payloads(spark, narrow_source(spark, d).toArrow())
+    # the local round trip keeps every narrow value, event time included
+    cols = ["clip_id", "codec", "dur_ms", "ingest_ts", "ops"]
+    assert sorted(clips.select(*cols).collect()) == sorted(
+        spark.read.parquet(d).select(*cols).collect()
+    )
+    assert {r.admit_status for r in clips.select("admit_status").collect()} == {"ok"}
+
+    def children(node):
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def leaves(node):
+        kids = children(node)
+        return [node] if not kids else [leaf for k in kids for leaf in leaves(k)]
+
+    def name(node):
+        return node.getClass().getSimpleName()
+
+    scans, builds = [], []
+
+    def walk(node, joins):
+        if name(node) == "FileSourceScanExec":
+            scans.append(joins)
+        if name(node) == "BroadcastHashJoinExec":
+            left, right = children(node)
+            build, stream = (right, left) if "Right" in node.buildSide().toString() else (left, right)
+            builds.append(build)
+            walk(stream, joins + 1)
+            return
+        for k in children(node):
+            walk(k, joins)
+
+    walk(clips._jdf.queryExecution().sparkPlan(), 0)
+    assert scans == [1, 1]  # one payload scan per chunk, one join above each
+    for build in builds:
+        kinds = {name(leaf) for leaf in leaves(build)}
+        assert kinds == {"LocalTableScanExec"}, kinds
 
 
 def test_late_fetch_spreads_few_files_over_cores(spark, tmp_path):
@@ -290,7 +381,7 @@ def test_late_fetch_spreads_few_files_over_cores(spark, tmp_path):
     for n_files in (1, cores):
         d = str(tmp_path / f"in{n_files}")
         spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(n_files).write.parquet(d)
-        clips = _fetch_payloads(spark, narrow_source(spark, d))
+        clips = _fetch_payloads(spark, narrow_source(spark, d).toArrow())
         plan = clips._jdf.queryExecution().optimizedPlan().toString()
         assert ("RepartitionByExpression" in plan) == (n_files < cores), plan
         assert clips.rdd.getNumPartitions() >= cores
@@ -460,6 +551,31 @@ def test_within_batch_singleflight(spark, dirs):
     assert len(shared) == 1
     assert shared[0]["clip_id"] == "alpha001"  # min clip_id wins
     assert out.select("result_key").distinct().count() == 7
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.lists(st.tuples(
+    st.sampled_from(["k1", "k2", "k3", None]),
+    st.sampled_from(["a", "b", "é", "ab", None]),
+    st.booleans(),
+), max_size=12))
+def test_singleflight_local_matches_spark_rule(spark, rows):
+    """The sink's driver-side winner rule keeps exactly the rows that
+    :func:`singleflight_within` keeps: repeated keys, all-invalid groups,
+    null keys and null ids included."""
+    import pyarrow as pa
+
+    from imagor_spark.engine.transform import singleflight_local, singleflight_within
+
+    narrow = pa.table({
+        "row": pa.array(range(len(rows)), pa.int64()),
+        "__rk": pa.array([r[0] for r in rows], pa.string()),
+        "clip_id": pa.array([r[1] for r in rows], pa.string()),
+        "__ok": pa.array([r[2] for r in rows], pa.bool_()),
+    })
+    want = singleflight_within(spark.createDataFrame(narrow)).select("row").collect()
+    got = singleflight_local(narrow)["row"].to_pylist()
+    assert sorted(got) == sorted(r.row for r in want)
 
 
 def test_singleflight_rejected_row_cannot_suppress_valid_row(spark, dirs):
