@@ -14,8 +14,10 @@ Scale design:
   repeat heavily — ≅ singleflight's common-subexpression win);
 * rejected rows never decode (signature checked before touching payload);
 * no shuffle introduced: the stage is a narrow map and runs on its input's
-  partitions — in the stream, the late payload fetch's file splits, spread
-  over the cores when they are fewer (``streaming/pipeline.py``);
+  partitions — in the stream, inside the render job's ``mapInArrow``, on
+  contiguous slices of the survivors sorted by source row (``min(rows,
+  cores)`` tasks), each task reading its own rows' payloads with pyarrow
+  and writing its own output files (``streaming/pipeline.py``);
 * watermark/overlay assets ship once per executor via Spark broadcast
   (≅ the loader callback, imagor.go:399-402).
 """

@@ -13,11 +13,22 @@ stateful stage; the payload is fetched late, for the rows that survive:
     → foreachBatch TransformingSink:
         key + signature/expiry pre-check → result-cache anti-join,
         collected once per trigger to the driver as one Arrow table
-        → within-batch singleflight and admission on the local rows
-        → late fetch: read only the payload column of the survivors'
-          source files, joined to the broadcast local survivors on
-          (file_path, row_index)
-        → vectorized decode→ops→encode → exactly-once save
+        → within-batch singleflight on the local rows
+        → the survivors, sorted by (file_path, row_index), as a local
+          relation admitted against the broadcast codec config
+        → ONE render job (mapInArrow) on contiguous slices of them: each
+          task reads only the payload column of its own rows' source row
+          groups (pyarrow), runs decode→ops→encode, and writes its rows as
+          one snappy parquet file per codec into its attempt's hidden
+          staging dir, returning only narrow per-row results
+        → exactly-once save: the driver promotes the files of the
+          attempts whose results it collected, rolls the side tables up
+          from those results, then writes the marker
+
+Payload bytes never enter the JVM: no scan, join, exchange, Arrow hop or
+Spark write carries them. A render task holds one input batch's payloads
+(``maxRecordsPerBatch`` rows) and their renders at a time, plus one read
+chunk of source rows.
 
 One trigger's narrow rows are one driver result (about 317 B a row, so
 about 3M rows under the 1 GiB ``spark.driver.maxResultSize`` default);
@@ -32,11 +43,14 @@ too — getTtl, imagor.go:991-1003).
 from __future__ import annotations
 
 import os
-from functools import reduce
 
+import numpy as np
+import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..engine.config import params_config_df, resolve_with_config
@@ -48,7 +62,7 @@ from ..engine.transform import (
     singleflight_local,
 )
 from ..sources.clips import CLIPS_SCHEMA
-from .sink import IdempotentSink
+from .sink import RESULT_SCHEMA, IdempotentSink, TaskFiles
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -96,70 +110,85 @@ def build_raw_stream(
     )
 
 
-# The most survivor rows one broadcast carries. A broadcast is collected
-# to the driver, where spark.driver.maxResultSize (1 GiB by default) caps
-# it; a survivor row of the generated clips, with a 109-character source
-# URI, is 317 B on average as an UnsafeRow, so ~320 MB per broadcast.
-BROADCAST_ROWS = 1_000_000
+# Payload rows per chunk read from a source row group: a few MB of payload
+# at a time, with the read of a row group stopping past its last wanted row.
+_READ_ROWS = 64
 
 
-def _fetch_payloads(spark, survivors: pa.Table) -> DataFrame:
-    """Late materialization: the driver-side ``survivors`` (non-empty
-    narrow rows with their ``file_path, row_index``) joined to their
-    payloads, with each row's ``admit_status``. Only the ``bytes`` column
-    of the survivors' own files is read, joined to the broadcast
-    survivors, so no payload crosses a shuffle. Files go to broadcasts
-    whole, at most ``BROADCAST_ROWS`` survivors each where files allow,
-    and the union of those joins is the result.
+def _read_payloads(uri: str, want: np.ndarray) -> pa.Array:
+    """The ``bytes`` of rows ``want`` (row indices) of the parquet file at
+    ``uri``, in ``want``'s order. ``uri`` is a ``_metadata.file_path``
+    (a space is ``%20``, a literal ``%`` is ``%25``), which ``from_uri``
+    decodes. Only the ``bytes`` column of the row groups that hold those
+    rows is read, ``_READ_ROWS`` rows at a time, each group up to its last
+    wanted row."""
+    rows, inverse = np.unique(want, return_inverse=True)
+    fs, path = pafs.FileSystem.from_uri(uri)
+    got = []
+    with fs.open_input_file(path) as f:
+        # buffered: a column chunk is read page by page as it is decoded,
+        # not whole
+        pf = pq.ParquetFile(f, buffer_size=1 << 20)
+        start = 0
+        for g in range(pf.num_row_groups):
+            end = start + pf.metadata.row_group(g).num_rows
+            need = rows[(rows >= start) & (rows < end)]
+            if len(need):
+                at = start
+                for chunk in pf.iter_batches(_READ_ROWS, row_groups=[g],
+                                             columns=["bytes"], use_threads=False):
+                    hit = need[(need >= at) & (need < at + chunk.num_rows)]
+                    got.append(chunk.column(0).take(hit - at))
+                    at += chunk.num_rows
+                    if at > need[-1]:
+                        break
+            start = end
+    return pa.concat_arrays(got).take(inverse)
 
-    Each broadcast's build side is its chunk of ``survivors`` as a local
-    relation (``LocalTableScan``, nothing re-read) already admitted against
-    the per-codec config (≅ CheckResolution processor.go:506-516 + the
-    loader resolution chain imagor.go:699-760), so the payload rows pass
-    one join per chunk and the transform quarantines non-ok rows before
-    touching a payload byte.
 
-    ``_metadata.file_path`` is a URI string (a space is ``%20``, a literal
-    ``%`` is ``%25``); it is decoded to a Hadoop path before it is handed
-    back to the reader, which would otherwise look for a file named with
-    the escapes.
-
-    The transform runs on the read's splits. Spark sizes them to cover the
-    cores but never cuts a parquet row group, so survivors from fewer files
-    than cores (one small file, a coalesced input) can leave cores idle:
-    those rows are hash-spread over the cores first. That shuffle carries
-    the payload, once, where the alternative is a render on fewer cores."""
-    jvm = spark.sparkContext._jvm
-    config = params_config_df(spark)
-    per_file = survivors.group_by("file_path").aggregate([("file_path", "count")])
-    chunks, rows = [], BROADCAST_ROWS
-    for path, n in sorted(zip(per_file["file_path"].to_pylist(),
-                              per_file["file_path_count"].to_pylist())):
-        if rows + n > BROADCAST_ROWS:
-            chunks.append([])
-            rows = 0
-        chunks[-1].append(path)
-        rows += n
-
-    def admitted(files):
-        local = survivors.filter(pc.is_in(
-            survivors["file_path"],
-            value_set=pa.array(files, survivors.schema.field("file_path").type),
+def _with_payloads(batch: pa.RecordBatch) -> pd.DataFrame:
+    """A batch of survivors as the frame the transform reads: each row's
+    ``file_path, row_index`` replaced by its source payload ``bytes``, and
+    ``ingest_ts`` in naive UTC, as ``mapInPandas`` hands it over."""
+    paths = batch.column("file_path").to_numpy(zero_copy_only=False)
+    rows = batch.column("row_index").to_numpy()
+    order, payloads = [], []
+    for path in dict.fromkeys(paths):
+        at = np.flatnonzero(paths == path)
+        order.append(at)
+        payloads.append(_read_payloads(path, rows[at]))
+    table = pa.Table.from_batches([batch]).drop_columns(["file_path", "row_index"])
+    return (
+        table.set_column(
+            table.schema.get_field_index("ingest_ts"), "ingest_ts",
+            table["ingest_ts"].cast(pa.timestamp("us")),
+        )
+        .append_column("bytes", pa.concat_arrays(payloads).take(
+            np.argsort(np.concatenate(order))
         ))
-        return F.broadcast(resolve_with_config(spark.createDataFrame(local), config))
+        .to_pandas()
+    )
 
-    clips = reduce(DataFrame.unionByName, [
-        spark.read.schema("bytes binary")
-        .parquet(*[jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)).toString()
-                   for f in files])
-        .select("bytes", "_metadata.file_path", "_metadata.row_index")
-        .join(admitted(files), ["file_path", "row_index"])
-        for files in chunks
-    ])
-    cores = spark.sparkContext.defaultParallelism
-    if per_file.num_rows < cores:
-        clips = clips.repartition(cores, "file_path", "row_index")
-    return clips.drop("file_path", "row_index")
+
+def _render(transform_fn, schema: pa.Schema, staging: str):
+    """The render job's ``mapInArrow`` function. A task streams its input
+    batches of admitted survivors: for each it reads the payloads from the
+    source files, renders them with ``transform_fn`` (whose output columns
+    ``schema`` types) and appends the rendered rows to its staged files
+    (:class:`TaskFiles`) as one row group per codec, returning only their
+    narrow results (``RESULT_SCHEMA``). It holds one input batch's
+    payloads and their renders at a time, plus one read chunk."""
+
+    def fn(batches):
+        files = TaskFiles(staging)
+        try:
+            for pdf in transform_fn(_with_payloads(b) for b in batches if b.num_rows):
+                rows = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
+                yield from files.write(rows).to_batches()
+        finally:
+            files.close()
+
+    return fn
 
 
 class TransformingSink(IdempotentSink):
@@ -170,12 +199,14 @@ class TransformingSink(IdempotentSink):
             → ONE collect of the narrow rows to the driver (an Arrow table)
             → within-batch singleflight on that table (same result_key
               renders once)
-            → admission (config dim joined to each local survivor chunk)
-            → late payload fetch (survivors' source rows only, one
-              broadcast join per chunk)
-            → decode→ops→encode transform
-            → exactly-once commit (IdempotentSink; its marker alone when
-              no row is collected)
+            → the survivors, sorted by source (file_path, row_index), as a
+              local relation admitted against the config dimension
+            → ONE render job: each task reads its own survivors' payloads,
+              runs decode→ops→encode and stages its own parquet files,
+              returning only narrow per-row results to the driver
+            → exactly-once commit (IdempotentSink): promote the collected
+              attempts' files, side tables from the results, marker (the
+              marker alone when no row is collected)
 
     Re-reading the committed rendered-keys index per micro-batch is the
     live result-cache economy: a key committed by batch N skips render in
@@ -189,16 +220,26 @@ class TransformingSink(IdempotentSink):
     Admission (≅ CheckResolution processor.go:506-516 + the loader
     resolution chain imagor.go:699-760): the per-codec config dimension is
     broadcast-joined against the local survivors, and the resulting
-    ``admit_status`` column rides with them through the payload join INTO
-    the transform UDF, which quarantines non-ok rows before touching a
-    payload byte. Scale shape: the dimension is tiny (one row per codec)
-    and so are the narrow survivors, so admission adds no join and no
-    branch over the payload rows.
+    ``admit_status`` column rides INTO the transform, which quarantines
+    non-ok rows before touching a payload byte. The dimension is tiny (one
+    row per codec) and so are the narrow survivors.
+
+    Payload bytes never enter the JVM (≅ imagor's loader → processor →
+    storage path, with no query engine in between). The survivors' local
+    relation is sliced contiguously over the cores, so each render task
+    reads only the ``bytes`` column of the row groups holding its own rows
+    (with pyarrow), and writes its rendered rows itself: one snappy parquet
+    file per codec under a hidden staging dir of its task attempt
+    (≅ ``FileStorage.Put``'s temp file then rename, filestorage.go:79-115).
+    A task streams its input batches (``maxRecordsPerBatch`` rows): it
+    holds one batch's payloads and their renders, plus one read chunk of
+    ``_READ_ROWS`` source rows.
 
     Ceiling: one trigger's narrow rows are one driver result, about 317 B a
     row, so about 3M rows fit under the 1 GiB ``spark.driver.maxResultSize``
-    default. ``max_files_per_trigger`` is the bound that keeps a trigger
-    under it.
+    default; the render's narrower per-row results come back the same
+    way. ``max_files_per_trigger`` is the bound that keeps a trigger under
+    it. The sink's ``out_dir`` must be a path every executor can write.
     """
 
     def __init__(
@@ -207,16 +248,11 @@ class TransformingSink(IdempotentSink):
         transform_fn,
         secret: str | None,
         allow_unsafe: bool | None = None,
-        partition_by: str | None = "codec",
         rendered_compact_every: int = 32,
         result_cache: IdempotentSink | None = None,
         result_cache_max_age_ms: int | None = None,
     ):
-        super().__init__(
-            out_dir,
-            partition_by=partition_by,
-            rendered_compact_every=rendered_compact_every,
-        )
+        super().__init__(out_dir, rendered_compact_every=rendered_compact_every)
         self.transform_fn = transform_fn
         self.result_cache = result_cache
         self.result_cache_max_age_ms = result_cache_max_age_ms
@@ -227,26 +263,43 @@ class TransformingSink(IdempotentSink):
         self.key_validity = make_key_validity_udf(secret, allow_unsafe=allow_unsafe)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed batch: effect already visible → exactly-once
         spark = batch_df.sparkSession
         # The narrow rows (no payload) are collected once, as one Arrow
         # table: that collect is the only action over the stream's batch,
         # so the stateful dedup — with its RocksDB state commit — runs once
-        # per trigger, and everything after it (singleflight, the chunk
-        # plan, the survivors' broadcasts) works on the driver's copy. A
-        # trigger with no rows runs that one job and commits its marker
-        # alone. The zero-row trigger still
-        # runs, because it carries the advanced watermark into the state
-        # store (and so into the late-row filter of the next run).
+        # per trigger, and everything after it (singleflight, the render's
+        # input) works on the driver's copy. A trigger with no rows runs
+        # that one job and commits its marker alone. The zero-row trigger
+        # still runs, because it carries the advanced watermark into the
+        # state store (and so into the late-row filter of the next run).
+        # A data trigger adds two jobs: the config broadcast and the render,
+        # whose collected results are the side tables' only input.
+        # A replayed batch runs that collect too: Spark fails a stateful
+        # stream whose batch leaves its state uncommitted.
         narrow = self._narrow(spark, batch_df).toArrow()
-        out = None
-        if narrow.num_rows:
-            survivors = singleflight_local(narrow).drop_columns(["__rk", "__ok"])
-            out = _fetch_payloads(spark, survivors).mapInPandas(
-                self.transform_fn, schema=OUTPUT_SCHEMA
-            )
-        self._commit(out, batch_id)
+        if self.is_committed(batch_id):
+            return  # replayed batch: effect already visible → exactly-once
+        self._commit(spark, narrow if narrow.num_rows else None, batch_id)
+
+    def _write_batch(self, spark, narrow: pa.Table, batch_id: int) -> bool:
+        """Render the batch's narrow rows (the batch's dirs already cleared):
+        singleflight, admission, then one render job whose tasks stage their
+        own files; its collected results pick the files to promote and feed
+        the side tables."""
+        survivors = (
+            singleflight_local(narrow).drop_columns(["__rk", "__ok"])
+            .sort_by([("file_path", "ascending"), ("row_index", "ascending")])
+        )
+        admitted = resolve_with_config(
+            spark.createDataFrame(survivors), params_config_df(spark)
+        )
+        results = admitted.mapInArrow(
+            _render(self.transform_fn, to_arrow_schema(StructType.fromDDL(OUTPUT_SCHEMA)),
+                    self._staging_dir(batch_id)),
+            RESULT_SCHEMA,
+        ).toArrow()
+        self._promote(batch_id, results)
+        return True
 
     def _narrow(self, spark, batch_df: DataFrame) -> DataFrame:
         """The batch's rows with their result key ``__rk`` and validity

@@ -4,12 +4,13 @@ a rendered-keys side table (the result-cache index).
 ``foreachBatch`` alone is at-least-once (a batch may replay after failure,
 SURVEY §7 hard-point c). We make the effect idempotent the standard way:
 
-  1. data for batch N lands under ``data/batch_id=N/`` with
-     ``mode=overwrite`` — a replay overwrites the same directory, never
-     duplicates;
+  1. before batch N is written, whatever an earlier attempt left of it
+     (``data/batch_id=N/`` and its side-table dirs) is removed, so a
+     replay never duplicates;
   2. a commit marker ``_commits/N`` is written (atomic rename) AFTER the
-     data write; readers/consumers trust only committed batches;
-  3. a replayed batch whose marker already exists is skipped entirely.
+     data and side tables; readers/consumers trust only committed batches;
+  3. a replayed batch whose marker already exists is skipped (it still
+     runs, as Spark requires of a stateful stream, but writes nothing).
 
 This mirrors the reference's result-storage save discipline: write result,
 then make it visible; cleanup-on-error leaves no committed partial state
@@ -32,17 +33,23 @@ rendered-keys dir (≅ imagor saving only what a request produced,
 saveWithErrorHandling imagor.go:783-811). Every reader skips a committed
 batch that has no dir.
 
-Single-pass design: the payload (binary) column is traversed exactly ONCE —
-the partitioned data write, which also counts its rows (an observed
-metric, no extra job). The side tables then come from a column-pruned
-re-read of the just-written parquet (out_len/part_id materialized at write
-time, the schema given so no footer is read): ONE aggregate per
-(part_id, status, codec), with the distinct result keys of the rendered
-statuses, collected to the driver, from which lineage, metrics and the
-rendered keys are rolled up and written as single small files. A data
-batch's side tables thus cost one Spark job. No multi-GB batch is ever
-persisted for the side tables (the round-1 sink cached the full payload
-batch three jobs long).
+Single-pass design, two writers. A DataFrame handed to
+:class:`IdempotentSink` (``transform()`` output, :class:`AggSink`'s rollups)
+is written by Spark, and that write is its payload's one traversal; it also
+counts the rows (an observed metric, no extra job). The side tables then
+come from one Spark aggregate over a column-pruned re-read of the written
+parquet (out_len/part_id materialized at write time, the schema given so
+no footer is read), collected to the driver. The streaming pipeline's
+render (``TransformingSink``) writes without Spark: each task appends its
+rendered rows to one snappy parquet file per codec (:class:`TaskFiles`) in
+a hidden staging dir of its task attempt, and returns only narrow per-row
+results. The driver collects those results as the render job's only
+action, promotes the staged files of exactly the attempts that produced
+them (:meth:`IdempotentSink._promote`) and removes the staging dir.
+Either way, ONE driver-side rollup (:meth:`IdempotentSink._write_side_tables`)
+turns the groups — aggregate rows, or result rows as groups of one — into
+lineage, metrics and the rendered keys, each written as one small file,
+before the marker. No batch is ever persisted for the side tables.
 """
 
 from __future__ import annotations
@@ -54,7 +61,9 @@ import shutil
 import time
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, Observation, functions as F
 
 log = logging.getLogger(__name__)
@@ -75,19 +84,68 @@ _METRICS_SCHEMA = pa.schema([
 _RENDERED_KEYS_SCHEMA = pa.schema([("result_key", pa.string())])
 
 
-def _skip_nulls(agg, values):
-    """``agg`` over the non-null ``values``; None when all are null (SQL
-    aggregate semantics)."""
-    values = [v for v in values if v is not None]
-    return agg(values) if values else None
-
-
-def _write_table(rows: list[dict], schema: pa.Schema, path: str) -> None:
-    """``rows`` as the single parquet file of dir ``path``, replacing it."""
-    shutil.rmtree(path, ignore_errors=True)
+def _write_table(table: pa.Table, schema: pa.Schema, path: str) -> None:
+    """``table`` as the single parquet file of dir ``path``."""
     os.makedirs(path)
-    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+    pq.write_table(table.select(schema.names).cast(schema),
                    os.path.join(path, "part-00000.parquet"))
+
+
+# What a render task returns per row: all the driver needs to promote the
+# task's files and to roll up the side tables.
+RESULT_SCHEMA = (
+    "part_id int, status string, codec string, ingest_ts timestamp, "
+    "out_len int, result_key string, attempt long"
+)
+
+
+class TaskFiles:
+    """One render task's share of a batch: its rows, appended to one snappy
+    parquet file per ``codec`` in the ``codec=X/`` layout (an empty codec
+    under ``__HIVE_DEFAULT_PARTITION__``, as Spark's writer spells a null),
+    inside the task attempt's own dir under the batch's staging dir. The
+    driver promotes the files of the attempts whose results it collected
+    (:meth:`IdempotentSink._promote`)."""
+
+    def __init__(self, staging: str):
+        ctx = TaskContext.get()
+        self.part_id, self.attempt = ctx.partitionId(), ctx.taskAttemptId()
+        self.dir = os.path.join(staging, str(self.attempt))
+        self.writers: dict[str | None, pq.ParquetWriter] = {}
+
+    def write(self, rows: pa.Table) -> pa.Table:
+        """Append ``rows`` (rendered rows with a ``codec`` column) and return
+        their ``RESULT_SCHEMA`` results."""
+        codec = rows["codec"]
+        codec = pc.if_else(pc.equal(codec, ""), pa.scalar(None, codec.type), codec)
+        n = rows.num_rows
+        part_id = pa.repeat(pa.scalar(self.part_id, pa.int32()), n)
+        out_len = pc.binary_length(rows["bytes"])
+        data = (rows.drop_columns(["codec"]).append_column("part_id", part_id)
+                .append_column("out_len", out_len))
+        for value in pc.unique(codec).to_pylist():
+            keep = pc.is_null(codec) if value is None else pc.equal(codec, value)
+            self._writer(value, data.schema).write_table(data.filter(keep))
+        return pa.table({
+            "part_id": part_id, "status": rows["status"], "codec": codec,
+            "ingest_ts": rows["ingest_ts"], "out_len": out_len,
+            "result_key": rows["result_key"],
+            "attempt": pa.repeat(pa.scalar(self.attempt, pa.int64()), n),
+        })
+
+    def _writer(self, codec: str | None, schema: pa.Schema) -> pq.ParquetWriter:
+        if codec not in self.writers:
+            path = os.path.join(self.dir, f"codec={codec or '__HIVE_DEFAULT_PARTITION__'}")
+            os.makedirs(path, exist_ok=True)
+            self.writers[codec] = pq.ParquetWriter(
+                os.path.join(path, f"part-{self.part_id:05d}.snappy.parquet"),
+                schema, compression="snappy",
+            )
+        return self.writers[codec]
+
+    def close(self) -> None:
+        for writer in self.writers.values():
+            writer.close()
 
 
 class IdempotentSink:
@@ -121,8 +179,12 @@ class IdempotentSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
-            return  # replayed batch: effect already visible → exactly-once
-        self._commit(batch_df, batch_id)
+            # replayed batch: effect already visible → exactly-once. The
+            # batch still runs: Spark fails a stateful stream whose batch
+            # leaves its state uncommitted.
+            batch_df.write.format("noop").mode("overwrite").save()
+            return
+        self._commit(batch_df.sparkSession, batch_df, batch_id)
 
     def _with_provenance(self, batch_df: DataFrame) -> DataFrame:
         """Provenance columns materialized in the SINGLE payload pass:
@@ -139,16 +201,21 @@ class IdempotentSink:
             os.path.join(self.rendered_dir, f"batch-{batch_id}"),
         ]
 
-    def _commit(self, batch_df: DataFrame | None, batch_id: int) -> None:
-        """Write data + side tables, then the marker (caller has already
-        checked ``is_committed``). A batch with no rows — ``None`` when the
-        caller knows that without a job — commits its marker alone."""
+    def _clear(self, batch_id: int) -> None:
+        for path in self._batch_dirs(batch_id):
+            shutil.rmtree(path, ignore_errors=True)
+
+    def _commit(self, spark, batch, batch_id: int) -> None:
+        """Clear what an earlier attempt at ``batch_id`` left, write the
+        batch's data and side tables (``_write_batch``), then the marker
+        (caller has already checked ``is_committed``). A batch with no
+        rows — ``None`` when the caller knows that without a job — commits
+        its marker alone."""
         t0 = time.time()
-        wrote = batch_df is not None and self._write_batch(batch_df, batch_id)
+        self._clear(batch_id)
+        wrote = batch is not None and self._write_batch(spark, batch, batch_id)
         if not wrote:
-            # no rows: also clear what an earlier attempt at this id left
-            for path in self._batch_dirs(batch_id):
-                shutil.rmtree(path, ignore_errors=True)
+            self._clear(batch_id)  # the writer's empty data dir
         # atomic commit marker LAST
         tmp = self._marker(batch_id) + ".tmp"
         with open(tmp, "w") as f:
@@ -173,14 +240,13 @@ class IdempotentSink:
             and self._n_rendered_batch_dirs() >= self.rendered_compact_every
         ):
             try:
-                self.compact_rendered_keys(batch_df.sparkSession)
+                self.compact_rendered_keys(spark)
             except Exception as exc:  # pragma: no cover - transient FS/Spark
                 log.warning("rendered-keys compaction deferred: %s", exc, exc_info=True)
 
-    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> bool:
+    def _write_batch(self, spark, batch_df: DataFrame, batch_id: int) -> bool:
         """The data write, then the side tables; False, with only the data
         dir written, when the batch holds no rows."""
-        spark = batch_df.sparkSession
         batch_df = self._with_provenance(batch_df)
         data_path = os.path.join(self.data_dir, f"batch_id={batch_id}")
         rows = Observation()
@@ -204,67 +270,116 @@ class IdempotentSink:
         # derived side tables from a column-pruned re-read (never touches
         # the binary column again — parquet reads only the tiny columns);
         # the known schema spares the footer-inference job
-        self._write_side_tables(
+        self._aggregate_side_tables(
             spark.read.schema(batch_df.schema).parquet(data_path), batch_id
         )
         return True
 
-    def _write_side_tables(self, written: DataFrame, batch_id: int) -> None:
-        """Lineage / metrics / rendered-keys side tables of a batch that
-        holds rows. One aggregate job gives each (part_id, status, codec)
-        group's rows, bytes, event-time bounds and, for rendered statuses,
-        its distinct result keys, a few rows per spark partition; all three
-        tables are rolled up from those on the driver and written there.
-        The rendered keys are written only when the batch rendered any."""
-        groups = (
-            written.groupBy("part_id", "status", "codec")
+    def _aggregate_side_tables(self, written: DataFrame, batch_id: int) -> None:
+        """The side tables of a written batch from one Spark aggregate, a few
+        rows per spark partition: one group per (part_id, status, codec) and,
+        for the rendered statuses, per result key."""
+        rendered_key = F.when(
+            F.col("status").isin(*_RENDERED_STATUSES), F.col("result_key")
+        )
+        self._write_side_tables(
+            written.groupBy("part_id", "status", "codec", rendered_key.alias("result_key"))
             .agg(
                 F.count("*").alias("n"),
-                F.unix_micros(F.min("ingest_ts")).alias("min_us"),
-                F.unix_micros(F.max("ingest_ts")).alias("max_us"),
+                F.min("ingest_ts").alias("min_ingest_ts"),
+                F.max("ingest_ts").alias("max_ingest_ts"),
                 F.sum("out_len").alias("out_bytes"),
-                F.collect_set(
-                    F.when(F.col("status").isin(*_RENDERED_STATUSES), F.col("result_key"))
-                ).alias("result_keys"),
             )
-            .collect()
+            .toArrow(),
+            batch_id,
         )
-        parts, metrics = {}, {}
-        for g in groups:
-            parts.setdefault(g.part_id, []).append(g)
-            metrics[g.status, g.codec] = metrics.get((g.status, g.codec), 0) + g.n
+
+    def _write_side_tables(self, groups: pa.Table, batch_id: int) -> None:
+        """Lineage / metrics / rendered-keys side tables of a batch that
+        holds rows, rolled up on the driver (SQL null semantics) from
+        ``groups``: rows of ``part_id, status, codec, result_key, n,
+        min_ingest_ts, max_ingest_ts, out_bytes`` that partition the batch's
+        rows, as :meth:`_aggregate_side_tables` or a render's results
+        (:meth:`_promote`) give them. The rendered keys are written only
+        when the batch rendered any."""
+        def with_batch_id(table):
+            return table.append_column(
+                "batch_id", pa.repeat(pa.scalar(batch_id, pa.int32()), table.num_rows)
+            )
+
+        parts = groups.group_by("part_id").aggregate([
+            ("n", "sum"), ("min_ingest_ts", "min"), ("max_ingest_ts", "max"),
+            ("out_bytes", "sum"),
+        ])
         # plain batch-N dir names (no '=') so partition inference does
         # not collide with the explicit batch_id column in the rows
         _write_table(
-            [
-                {
-                    "part_id": part_id,
-                    "n_rows": sum(g.n for g in gs),
-                    "min_ingest_ts": _skip_nulls(min, [g.min_us for g in gs]),
-                    "max_ingest_ts": _skip_nulls(max, [g.max_us for g in gs]),
-                    "out_bytes": _skip_nulls(sum, [g.out_bytes for g in gs]),
-                    "batch_id": batch_id,
-                }
-                for part_id, gs in parts.items()
-            ],
+            with_batch_id(pa.table({
+                "part_id": parts["part_id"],
+                "n_rows": parts["n_sum"],
+                "min_ingest_ts": parts["min_ingest_ts_min"],
+                "max_ingest_ts": parts["max_ingest_ts_max"],
+                "out_bytes": parts["out_bytes_sum"],
+            })),
             _LINEAGE_SCHEMA,
             os.path.join(self.lineage_dir, f"batch-{batch_id}"),
         )
+        metrics = groups.group_by(["status", "codec"]).aggregate([("n", "sum")])
         _write_table(
-            [
-                {"status": status, "codec": codec, "n": n, "batch_id": batch_id}
-                for (status, codec), n in metrics.items()
-            ],
+            with_batch_id(pa.table({
+                "status": metrics["status"], "codec": metrics["codec"],
+                "n": metrics["n_sum"],
+            })),
             _METRICS_SCHEMA,
             os.path.join(self.metrics_dir, f"batch-{batch_id}"),
         )
-        if any(g.status in _RENDERED_STATUSES for g in groups):
-            keys = set().union(*(g.result_keys for g in groups))
+        rendered = groups.filter(pc.is_in(
+            groups["status"], value_set=pa.array(_RENDERED_STATUSES)
+        ))
+        if rendered.num_rows:
+            keys = pc.unique(pc.drop_null(rendered["result_key"]))
             _write_table(
-                [{"result_key": k} for k in sorted(keys)],
+                pa.table({"result_key": keys}).sort_by("result_key"),
                 _RENDERED_KEYS_SCHEMA,
                 os.path.join(self.rendered_dir, f"batch-{batch_id}"),
             )
+
+    # ---- the render's commit: each task stages its own files
+
+    def _staging_dir(self, batch_id: int) -> str:
+        """Where batch ``batch_id``'s render tasks stage their files: a
+        ``_``-prefixed dir, which Spark's reader skips, inside the batch's
+        data dir. Absolute, so that a relative ``out_dir`` names the same
+        dir in the executors as in the driver."""
+        return os.path.abspath(
+            os.path.join(self.data_dir, f"batch_id={batch_id}", "_staging")
+        )
+
+    def _promote(self, batch_id: int, results: pa.Table) -> None:
+        """After a render job whose per-row ``results`` (``RESULT_SCHEMA``)
+        the driver collected: move the staged files of exactly the task
+        attempts that produced them into the batch's partition dirs, drop
+        the staging dir with whatever other attempts left there, and roll
+        up the side tables from the results, each row a group of one."""
+        staging = self._staging_dir(batch_id)
+        batch_dir = os.path.dirname(staging)
+        for attempt in pc.unique(results["attempt"]).to_pylist():
+            src = os.path.join(staging, str(attempt))
+            for part in os.listdir(src):
+                os.makedirs(os.path.join(batch_dir, part), exist_ok=True)
+                for name in os.listdir(os.path.join(src, part)):
+                    os.replace(os.path.join(src, part, name),
+                               os.path.join(batch_dir, part, name))
+        shutil.rmtree(staging)
+        ts, n = results["ingest_ts"], results.num_rows
+        self._write_side_tables(
+            results.select(["part_id", "status", "codec", "result_key"])
+            .append_column("n", pa.repeat(pa.scalar(1, pa.int64()), n))
+            .append_column("min_ingest_ts", ts)
+            .append_column("max_ingest_ts", ts)
+            .append_column("out_bytes", results["out_len"]),
+            batch_id,
+        )
 
     # ---- reader side: only committed batches are visible
 
@@ -470,7 +585,7 @@ class AggSink(IdempotentSink):
     def _with_provenance(self, batch_df: DataFrame) -> DataFrame:
         return batch_df
 
-    def _write_side_tables(self, written: DataFrame, batch_id: int) -> None:
+    def _aggregate_side_tables(self, written: DataFrame, batch_id: int) -> None:
         pass
 
     def read_latest(self, spark, key_cols: list[str]) -> DataFrame:

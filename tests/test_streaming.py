@@ -222,11 +222,12 @@ def trigger_jobs(spark, dirs, result_cache=None):
 
 
 def test_trigger_job_counts(spark, dirs):
-    """A data trigger runs the narrow collect, the config and survivor
-    broadcasts, the render plus write and the side-table aggregate; the
-    zero-row trigger runs only the collect and commits its marker alone."""
+    """A data trigger runs the narrow collect, the config broadcast and the
+    render, whose tasks write the data and whose collected results feed the
+    side tables; the zero-row trigger runs only the collect and commits its
+    marker alone."""
     jobs, sink = trigger_jobs(spark, dirs)
-    assert jobs == [5, 1]
+    assert jobs == [3, 1]
     assert sink.read_committed(spark).count() == 20
 
 
@@ -241,7 +242,7 @@ def test_trigger_job_counts_live_result_store(spark, dirs):
     store(transform(spark.createDataFrame(done, schema=CLIPS_SCHEMA),
                     secret=SECRET, allow_unsafe=True), 0)
     jobs, sink = trigger_jobs(spark, dirs, result_cache=store)
-    assert jobs == [6, 2]
+    assert jobs == [4, 2]
     got = {r.clip_id for r in sink.read_committed(spark).select("clip_id").collect()}
     assert got == set(make_pdf(42, range(20), signed_mix=False)["clip_id"]) - set(done["clip_id"])
 
@@ -302,92 +303,145 @@ def narrow_source(spark, path):
     )
 
 
-def test_late_fetch_splits_broadcasts_by_whole_files(spark, tmp_path, monkeypatch):
-    """More survivors than one broadcast may carry: the fetch unions one
-    broadcast join per group of whole files, and every row gets its own
-    source row's payload."""
-    from imagor_spark.streaming import pipeline
+def test_late_fetch_reads_each_rows_payload_across_row_groups(spark, tmp_path):
+    """Input files of several row groups each: a batch of rows taken from
+    across files and row groups, in no particular order, gets each row's
+    own source payload, and only the payload column is read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    monkeypatch.setattr(pipeline, "BROADCAST_ROWS", 25)  # 4 files of 10 → 2 joins
+    from imagor_spark.streaming.pipeline import _with_payloads
+
     pdf = make_pdf(42, range(40), signed_mix=False)
     d = str(tmp_path / "in")
-    spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(4).write.parquet(d)
-    clips = pipeline._fetch_payloads(spark, narrow_source(spark, d).toArrow())
-    plan = clips._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Join Inner") == 2, plan
-    got = {r["clip_id"]: bytes(r["bytes"]) for r in clips.select("clip_id", "bytes").collect()}
-    assert got == dict(zip(pdf["clip_id"], pdf["bytes"]))
+    os.makedirs(d)
+    table = spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).toArrow()
+    for i in range(2):  # two 20-clip files of 3-clip row groups
+        pq.write_table(table.slice(20 * i, 20), os.path.join(d, f"part-{i}.parquet"),
+                       row_group_size=3)
+    narrow = narrow_source(spark, d).toArrow()
+    batch = narrow.take(pa.array([7, 31, 0, 12, 39, 5, 20, 33])).to_batches()[0]
+    got = _with_payloads(batch)
+    assert "file_path" not in got and "row_index" not in got
+    want = dict(zip(pdf["clip_id"], pdf["bytes"]))
+    assert list(got["clip_id"]) == batch.column("clip_id").to_pylist()
+    assert [bytes(b) for b in got["bytes"]] == [want[c] for c in got["clip_id"]]
 
 
-def test_late_fetch_admits_local_survivors_on_the_build_side(spark, tmp_path, monkeypatch):
-    """Each chunk's broadcast build side is its survivors as a local
-    relation (no ``ExistingRDD``: nothing is re-read or re-run), admitted
-    against the config there, so each payload scan passes exactly one
-    join."""
-    from imagor_spark.streaming import pipeline
+def test_render_plan_keeps_payloads_out_of_the_jvm(spark, dirs, monkeypatch):
+    """The render job that a data trigger collects scans no file and
+    carries no binary column in any operator's output: its only leaves
+    are local relations (the survivors and the codec config), so payload
+    bytes never enter the JVM. The committed rows still hold payloads, are
+    all admitted, and keep every narrow value, event time included."""
+    plans = []
+    frame = type(spark.range(1))
+    to_arrow = frame.toArrow
 
-    monkeypatch.setattr(pipeline, "BROADCAST_ROWS", 25)  # 4 files of 10 → 2 joins
-    d = str(tmp_path / "in")
-    pdf = make_pdf(42, range(40), signed_mix=False)
-    spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(4).write.parquet(d)
-    clips = pipeline._fetch_payloads(spark, narrow_source(spark, d).toArrow())
-    # the local round trip keeps every narrow value, event time included
-    cols = ["clip_id", "codec", "dur_ms", "ingest_ts", "ops"]
-    assert sorted(clips.select(*cols).collect()) == sorted(
-        spark.read.parquet(d).select(*cols).collect()
+    def recording(df):
+        plans.append(df._jdf.queryExecution().sparkPlan())
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame, "toArrow", recording)
+    write_batch(spark, dirs["in"], 0, 20)
+    q, sink = run_pipeline(
+        spark, dirs["in"], dirs["out"], dirs["ckpt"], secret=SECRET, allow_unsafe=True, wait=True
     )
-    assert {r.admit_status for r in clips.select("admit_status").collect()} == {"ok"}
 
     def children(node):
         kids = node.children()
         return [kids.apply(i) for i in range(kids.size())]
 
-    def leaves(node):
-        kids = children(node)
-        return [node] if not kids else [leaf for k in kids for leaf in leaves(k)]
+    def nodes(node):
+        return [node] + [n for k in children(node) for n in nodes(k)]
 
     def name(node):
         return node.getClass().getSimpleName()
 
-    scans, builds = [], []
-
-    def walk(node, joins):
-        if name(node) == "FileSourceScanExec":
-            scans.append(joins)
-        if name(node) == "BroadcastHashJoinExec":
-            left, right = children(node)
-            build, stream = (right, left) if "Right" in node.buildSide().toString() else (left, right)
-            builds.append(build)
-            walk(stream, joins + 1)
-            return
-        for k in children(node):
-            walk(k, joins)
-
-    walk(clips._jdf.queryExecution().sparkPlan(), 0)
-    assert scans == [1, 1]  # one payload scan per chunk, one join above each
-    for build in builds:
-        kinds = {name(leaf) for leaf in leaves(build)}
-        assert kinds == {"LocalTableScanExec"}, kinds
+    renders = [p for p in plans if any("MapInArrow" in name(n) for n in nodes(p))]
+    assert len(renders) == 1, [p.toString() for p in plans]
+    for node in nodes(renders[0]):
+        assert name(node) != "FileSourceScanExec"
+        out = node.output()
+        types = {out.apply(i).dataType().typeName() for i in range(out.size())}
+        assert "binary" not in types, node.toString()
+        if not children(node):
+            assert name(node) == "LocalTableScanExec", name(node)
+    out = sink.read_committed(spark)
+    assert out.filter(F.length("bytes") > 0).count() == 20
+    assert {r.status for r in out.select("status").distinct().collect()} <= {"ok", "meta"}
+    cols = ["clip_id", "ingest_ts", "ops"]
+    assert sorted(out.select(*cols).collect()) == sorted(
+        spark.read.parquet(dirs["in"]).select(*cols).collect()
+    )
 
 
 def test_late_fetch_spreads_few_files_over_cores(spark, tmp_path):
-    """The transform runs on the fetch's partitions. Survivors from fewer
-    files than cores are hash-spread over the cores; from as many files as
-    cores, the read's own splits are kept and no payload shuffles."""
-    from imagor_spark.streaming.pipeline import _fetch_payloads
-
+    """One input file: the render's local relation is sliced over the
+    cores, so the render runs on ``min(rows, cores)`` tasks, each its own
+    ``part_id`` in the lineage."""
     cores = spark.sparkContext.defaultParallelism
-    pdf = make_pdf(42, range(40), signed_mix=False)
-    for n_files in (1, cores):
-        d = str(tmp_path / f"in{n_files}")
-        spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).repartition(n_files).write.parquet(d)
-        clips = _fetch_payloads(spark, narrow_source(spark, d).toArrow())
-        plan = clips._jdf.queryExecution().optimizedPlan().toString()
-        assert ("RepartitionByExpression" in plan) == (n_files < cores), plan
-        assert clips.rdd.getNumPartitions() >= cores
-        assert sorted(r["clip_id"] for r in clips.select("clip_id").collect()) == sorted(
-            pdf["clip_id"]
+    for n in (2, 40):
+        base = tmp_path / f"n{n}"
+        pdf = make_pdf(42, range(n), signed_mix=False)
+        spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).coalesce(1).write.parquet(
+            str(base / "in")
         )
+        q, sink = run_pipeline(
+            spark, str(base / "in"), str(base / "out"), str(base / "ckpt"),
+            secret=SECRET, allow_unsafe=True, wait=True,
+        )
+        lineage = sink.read_lineage(spark).collect()
+        assert len({r.part_id for r in lineage}) == min(n, cores)
+        assert sum(r.n_rows for r in lineage) == n
+
+
+def test_commit_ignores_debris_of_a_crashed_attempt(spark, tmp_path):
+    """A crashed attempt at batch 0 left a stale data file and a staging
+    dir, and no ``_commits/0`` marker. The run clears both before its
+    render: the committed rows equal a clean run's, with no duplicate
+    ``clip_id``, and no staging dir remains. A replay of the committed
+    batch (its Spark commit lost) changes nothing."""
+    import shutil
+
+    def run(name):
+        return run_pipeline(
+            spark, str(tmp_path / "in"), str(tmp_path / name), str(tmp_path / f"ck_{name}"),
+            secret=SECRET, allow_unsafe=True, wait=True,
+        )
+
+    def rows(sink):
+        cols = ["clip_id", "status", "codec", "result_key", "bytes", "batch_id"]
+        return sorted(tuple(r) for r in sink.read_committed(spark).select(*cols).collect())
+
+    write_batch(spark, str(tmp_path / "in"), 0, 30)
+    _q, clean = run("clean")
+    stale = next(
+        os.path.join(root, f)
+        for root, _d, fs in os.walk(os.path.join(clean.data_dir, "batch_id=0", "codec=wav"))
+        for f in fs if f.endswith(".parquet")
+    )
+    crashed = IdempotentSink(str(tmp_path / "out"))
+    batch0 = os.path.join(crashed.data_dir, "batch_id=0")
+    for debris in (os.path.join(batch0, "codec=wav"),
+                   os.path.join(batch0, "_staging", "999", "codec=wav")):
+        os.makedirs(debris)
+        shutil.copy(stale, os.path.join(debris, "part-00000.snappy.parquet"))
+    assert crashed.committed_batches() == []
+
+    _q, sink = run("out")
+    got = rows(sink)
+    assert got == rows(clean)
+    assert len({r[0] for r in got}) == len(got) == 30
+    assert not [root for root, _d, _f in os.walk(sink.out_dir) if "_staging" in root]
+    # replay: drop Spark's record of batch 0 being done, so it runs again
+    ck = str(tmp_path / "ck_out")
+    shutil.rmtree(os.path.join(ck, "commits"))
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ck, "offsets", name))
+    q, sink = run("out")
+    assert 0 in [p["batchId"] for p in q.recentProgress]
+    assert rows(sink) == got
 
 
 def test_checkpoint_resume_exactly_once(spark, dirs):
@@ -645,6 +699,12 @@ def test_admission_quarantines_before_decode(spark, dirs):
     assert by_id["bomb0001"]["bytes"] in (None, b"")
     assert by_id["noloader1"]["status"] == "not_found"
     assert out.filter(out.status == "ok").count() == 10
+    # a quarantined row has no output codec: null in the data and metrics
+    assert by_id["bomb0001"]["codec"] is None
+    quarantined = sink.read_metrics(spark).filter("status IN ('resolution_bomb', 'not_found')")
+    assert {(r.status, r.codec, r.n) for r in quarantined.collect()} == {
+        ("resolution_bomb", None, 1), ("not_found", None, 1)
+    }
     # quarantined rows are NOT in the rendered-keys index (re-submission
     # after a config fix must render, not cache-hit)
     keys = {r["result_key"] for r in sink.read_rendered_keys(spark).collect()}
@@ -888,3 +948,11 @@ def test_aggsink_exactly_once_fold_and_checkpoint_resume(spark, dirs):
     run_pass()
     got = {r["k"]: r["n_clips"] for r in sink2.read_latest(spark, ["k"]).collect()}
     assert got == {"x": 3, "y": 1, "z": 1}
+    # replay: Spark's record of the last batch is lost, so it runs again;
+    # the sink skips its commit and the stateful query still succeeds
+    commits = os.path.join(ck, "commits")
+    last = max(int(c) for c in os.listdir(commits) if c.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, name))
+    run_pass()
+    assert {r["k"]: r["n_clips"] for r in sink2.read_latest(spark, ["k"]).collect()} == got
