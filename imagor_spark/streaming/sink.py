@@ -1,5 +1,5 @@
-"""Exactly-once foreachBatch sink with per-partition lineage + metrics and
-a rendered-keys side table (the result-cache index).
+"""Exactly-once foreachBatch sink: one commit protocol, its readers, and
+the rendered-keys index compaction (the result-cache index).
 
 ``foreachBatch`` alone is at-least-once (a batch may replay after failure,
 SURVEY §7 hard-point c). We make the effect idempotent the standard way:
@@ -17,154 +17,51 @@ then make it visible; cleanup-on-error leaves no committed partial state
 (≅ saveWithErrorHandling + delete-on-error, imagor.go:783-811,
 storage/filestorage/filestorage.go:79-115).
 
-Lineage + metrics (north_rule): every batch that holds rows also writes
-``lineage/`` — one row per (batch, spark partition) with row counts and
-event-time bounds — and ``metrics/`` — one row per (batch, status, codec)
-mirroring imagor's Prometheus counters (metrics/prometheusmetrics).
-
-Rendered keys (result-cache load, imagor.go:403-408 + loadResult
-imagor.go:600-664): each batch appends the committed ``result_key``s of
-successful renders to ``rendered_keys/`` — a compact index the pipeline
-left-anti-joins incoming clips against, so re-runs/backfills skip work that
-is already in result storage.
+A batch's dirs: ``data/batch_id=N/``, and the side tables ``lineage/`` —
+one row per (batch, spark partition) with row counts and event-time
+bounds — ``metrics/`` — one row per (batch, status, codec), mirroring
+imagor's Prometheus counters (metrics/prometheusmetrics) — and
+``rendered_keys/``: the committed ``result_key``s of successful renders
+(result-cache load, imagor.go:403-408 + loadResult imagor.go:600-664), a
+compact index the pipeline left-anti-joins incoming clips against, so
+re-runs/backfills skip work that is already in result storage.
 
 An empty batch commits its marker alone: no data, lineage, metrics or
 rendered-keys dir (≅ imagor saving only what a request produced,
 saveWithErrorHandling imagor.go:783-811). Every reader skips a committed
 batch that has no dir.
 
-Single-pass design, two writers. A DataFrame handed to
-:class:`IdempotentSink` (``transform()`` output, :class:`AggSink`'s rollups)
-is written by Spark, and that write is its payload's one traversal; it also
-counts the rows (an observed metric, no extra job). The side tables then
-come from one Spark aggregate over a column-pruned re-read of the written
-parquet (out_len/part_id materialized at write time, the schema given so
-no footer is read), collected to the driver. The streaming pipeline's
-render (``TransformingSink``) writes without Spark: each task appends its
-rendered rows to one snappy parquet file per codec (:class:`TaskFiles`) in
-a hidden staging dir of its task attempt, and returns only narrow per-row
-results. The driver collects those results as the render job's only
-action, promotes the staged files of exactly the attempts that produced
-them (:meth:`IdempotentSink._promote`) and removes the staging dir.
-Either way, ONE driver-side rollup (:meth:`IdempotentSink._write_side_tables`)
-turns the groups — aggregate rows, or result rows as groups of one — into
-lineage, metrics and the rendered keys, each written as one small file,
-before the marker. No batch is ever persisted for the side tables.
+One protocol, two writers. :meth:`IdempotentSink._commit` clears the
+batch's dirs, runs the writer (``_write_batch``), then writes the marker.
+:class:`IdempotentSink`'s own writer is a plain one: one snappy parquet
+write of the batch's rows, counted by an observed metric (no extra job),
+with no side tables; :class:`AggSink`'s rollups are written this way. The
+streaming pipeline's render
+(:class:`~imagor_spark.streaming.pipeline.TransformingSink`) is the one
+payload writer: its tasks write their own files, and it alone writes
+lineage, metrics and the rendered keys, and folds the rendered keys with
+:meth:`IdempotentSink.compact_rendered_keys` once enough batch dirs pile
+up.
 """
 
 from __future__ import annotations
 
 import json
-import logging
 import os
 import shutil
 import time
 
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, Observation, functions as F
-
-log = logging.getLogger(__name__)
-
-# statuses whose results land in result storage (≅ successful render)
-_RENDERED_STATUSES = ("ok", "meta")
-
-# the side tables' file schemas: the types Spark gives the same aggregates
-_TS = pa.timestamp("us", tz="UTC")
-_LINEAGE_SCHEMA = pa.schema([
-    ("part_id", pa.int32()), ("n_rows", pa.int64()), ("min_ingest_ts", _TS),
-    ("max_ingest_ts", _TS), ("out_bytes", pa.int64()), ("batch_id", pa.int32()),
-])
-_METRICS_SCHEMA = pa.schema([
-    ("status", pa.string()), ("codec", pa.string()), ("n", pa.int64()),
-    ("batch_id", pa.int32()),
-])
-_RENDERED_KEYS_SCHEMA = pa.schema([("result_key", pa.string())])
-
-
-def _write_table(table: pa.Table, schema: pa.Schema, path: str) -> None:
-    """``table`` as the single parquet file of dir ``path``."""
-    os.makedirs(path)
-    pq.write_table(table.select(schema.names).cast(schema),
-                   os.path.join(path, "part-00000.parquet"))
-
-
-# What a render task returns per row: all the driver needs to promote the
-# task's files and to roll up the side tables.
-RESULT_SCHEMA = (
-    "part_id int, status string, codec string, ingest_ts timestamp, "
-    "out_len int, result_key string, attempt long"
-)
-
-
-class TaskFiles:
-    """One render task's share of a batch: its rows, appended to one snappy
-    parquet file per ``codec`` in the ``codec=X/`` layout (an empty codec
-    under ``__HIVE_DEFAULT_PARTITION__``, as Spark's writer spells a null),
-    inside the task attempt's own dir under the batch's staging dir. The
-    driver promotes the files of the attempts whose results it collected
-    (:meth:`IdempotentSink._promote`)."""
-
-    def __init__(self, staging: str):
-        ctx = TaskContext.get()
-        self.part_id, self.attempt = ctx.partitionId(), ctx.taskAttemptId()
-        self.dir = os.path.join(staging, str(self.attempt))
-        self.writers: dict[str | None, pq.ParquetWriter] = {}
-
-    def write(self, rows: pa.Table) -> pa.Table:
-        """Append ``rows`` (rendered rows with a ``codec`` column) and return
-        their ``RESULT_SCHEMA`` results."""
-        codec = rows["codec"]
-        codec = pc.if_else(pc.equal(codec, ""), pa.scalar(None, codec.type), codec)
-        n = rows.num_rows
-        part_id = pa.repeat(pa.scalar(self.part_id, pa.int32()), n)
-        out_len = pc.binary_length(rows["bytes"])
-        data = (rows.drop_columns(["codec"]).append_column("part_id", part_id)
-                .append_column("out_len", out_len))
-        for value in pc.unique(codec).to_pylist():
-            keep = pc.is_null(codec) if value is None else pc.equal(codec, value)
-            self._writer(value, data.schema).write_table(data.filter(keep))
-        return pa.table({
-            "part_id": part_id, "status": rows["status"], "codec": codec,
-            "ingest_ts": rows["ingest_ts"], "out_len": out_len,
-            "result_key": rows["result_key"],
-            "attempt": pa.repeat(pa.scalar(self.attempt, pa.int64()), n),
-        })
-
-    def _writer(self, codec: str | None, schema: pa.Schema) -> pq.ParquetWriter:
-        if codec not in self.writers:
-            path = os.path.join(self.dir, f"codec={codec or '__HIVE_DEFAULT_PARTITION__'}")
-            os.makedirs(path, exist_ok=True)
-            self.writers[codec] = pq.ParquetWriter(
-                os.path.join(path, f"part-{self.part_id:05d}.snappy.parquet"),
-                schema, compression="snappy",
-            )
-        return self.writers[codec]
-
-    def close(self) -> None:
-        for writer in self.writers.values():
-            writer.close()
 
 
 class IdempotentSink:
-    def __init__(
-        self,
-        out_dir: str,
-        partition_by: str | None = "codec",
-        rendered_compact_every: int = 32,
-    ):
+    def __init__(self, out_dir: str):
         self.out_dir = out_dir
         self.data_dir = os.path.join(out_dir, "data")
         self.commits_dir = os.path.join(out_dir, "_commits")
         self.lineage_dir = os.path.join(out_dir, "lineage")
         self.metrics_dir = os.path.join(out_dir, "metrics")
         self.rendered_dir = os.path.join(out_dir, "rendered_keys")
-        self.partition_by = partition_by
-        # compact the rendered-keys index once this many per-batch dirs
-        # accumulate (0 disables auto-compaction)
-        self.rendered_compact_every = rendered_compact_every
         os.makedirs(self.commits_dir, exist_ok=True)
 
     def _marker(self, batch_id: int) -> str:
@@ -186,13 +83,6 @@ class IdempotentSink:
             return
         self._commit(batch_df.sparkSession, batch_df, batch_id)
 
-    def _with_provenance(self, batch_df: DataFrame) -> DataFrame:
-        """Provenance columns materialized in the SINGLE payload pass:
-        part_id = producing partition, out_len = payload size."""
-        return batch_df.withColumn("part_id", F.spark_partition_id()).withColumn(
-            "out_len", F.length("bytes")
-        )
-
     def _batch_dirs(self, batch_id: int) -> list[str]:
         return [
             os.path.join(self.data_dir, f"batch_id={batch_id}"),
@@ -207,10 +97,9 @@ class IdempotentSink:
 
     def _commit(self, spark, batch, batch_id: int) -> None:
         """Clear what an earlier attempt at ``batch_id`` left, write the
-        batch's data and side tables (``_write_batch``), then the marker
-        (caller has already checked ``is_committed``). A batch with no
-        rows — ``None`` when the caller knows that without a job — commits
-        its marker alone."""
+        batch (``_write_batch``), then the marker (caller has already
+        checked ``is_committed``). A batch with no rows — ``None`` when the
+        caller knows that without a job — commits its marker alone."""
         t0 = time.time()
         self._clear(batch_id)
         wrote = batch is not None and self._write_batch(spark, batch, batch_id)
@@ -228,158 +117,16 @@ class IdempotentSink:
                 f,
             )
         os.replace(tmp, self._marker(batch_id))
-        # periodic index compaction: a long-running pipeline otherwise grows
-        # one rendered_keys/batch-* parquet dir per batch forever, and the
-        # anti-join's build side becomes thousands of small files. The batch
-        # data is already committed (marker above), so a failure in this
-        # non-essential index maintenance must not fail the streaming query —
-        # the next commit that writes rows retries it.
-        if (
-            wrote
-            and self.rendered_compact_every
-            and self._n_rendered_batch_dirs() >= self.rendered_compact_every
-        ):
-            try:
-                self.compact_rendered_keys(spark)
-            except Exception as exc:  # pragma: no cover - transient FS/Spark
-                log.warning("rendered-keys compaction deferred: %s", exc, exc_info=True)
 
     def _write_batch(self, spark, batch_df: DataFrame, batch_id: int) -> bool:
-        """The data write, then the side tables; False, with only the data
-        dir written, when the batch holds no rows."""
-        batch_df = self._with_provenance(batch_df)
-        data_path = os.path.join(self.data_dir, f"batch_id={batch_id}")
+        """One snappy parquet write of the batch's rows, counted by an
+        observed metric (no extra job); False, with only the data dir
+        written, when the batch holds no rows."""
         rows = Observation()
-        # snappy (r6 A/B, reversing the r3 zstd choice with measurement):
-        # the payload column is ALREADY-ENCODED media — zstd recovers only
-        # ~5% (2,711 MB written vs 2,853 MB raw at sf0.1) yet costs ~20 s
-        # of a ~27 s pipeline run in compression CPU (measured same-host-
-        # phase: zstd 47.4 s, snappy 27.3 s, uncompressed 30.3 s). Snappy
-        # is near-free CPU and its 5% loss costs ~1.2 s even on the
-        # 122 MB/s disk workdir — it wins on BOTH workdirs, and the same
-        # holds at scale for any sink whose payloads are compressed codecs.
-        writer = (
-            batch_df.observe(rows, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite").option("compression", "snappy")
-        )
-        if self.partition_by:
-            writer = writer.partitionBy(self.partition_by)
-        writer.parquet(data_path)
-        if not rows.get["n"]:
-            return False
-        # derived side tables from a column-pruned re-read (never touches
-        # the binary column again — parquet reads only the tiny columns);
-        # the known schema spares the footer-inference job
-        self._aggregate_side_tables(
-            spark.read.schema(batch_df.schema).parquet(data_path), batch_id
-        )
-        return True
-
-    def _aggregate_side_tables(self, written: DataFrame, batch_id: int) -> None:
-        """The side tables of a written batch from one Spark aggregate, a few
-        rows per spark partition: one group per (part_id, status, codec) and,
-        for the rendered statuses, per result key."""
-        rendered_key = F.when(
-            F.col("status").isin(*_RENDERED_STATUSES), F.col("result_key")
-        )
-        self._write_side_tables(
-            written.groupBy("part_id", "status", "codec", rendered_key.alias("result_key"))
-            .agg(
-                F.count("*").alias("n"),
-                F.min("ingest_ts").alias("min_ingest_ts"),
-                F.max("ingest_ts").alias("max_ingest_ts"),
-                F.sum("out_len").alias("out_bytes"),
-            )
-            .toArrow(),
-            batch_id,
-        )
-
-    def _write_side_tables(self, groups: pa.Table, batch_id: int) -> None:
-        """Lineage / metrics / rendered-keys side tables of a batch that
-        holds rows, rolled up on the driver (SQL null semantics) from
-        ``groups``: rows of ``part_id, status, codec, result_key, n,
-        min_ingest_ts, max_ingest_ts, out_bytes`` that partition the batch's
-        rows, as :meth:`_aggregate_side_tables` or a render's results
-        (:meth:`_promote`) give them. The rendered keys are written only
-        when the batch rendered any."""
-        def with_batch_id(table):
-            return table.append_column(
-                "batch_id", pa.repeat(pa.scalar(batch_id, pa.int32()), table.num_rows)
-            )
-
-        parts = groups.group_by("part_id").aggregate([
-            ("n", "sum"), ("min_ingest_ts", "min"), ("max_ingest_ts", "max"),
-            ("out_bytes", "sum"),
-        ])
-        # plain batch-N dir names (no '=') so partition inference does
-        # not collide with the explicit batch_id column in the rows
-        _write_table(
-            with_batch_id(pa.table({
-                "part_id": parts["part_id"],
-                "n_rows": parts["n_sum"],
-                "min_ingest_ts": parts["min_ingest_ts_min"],
-                "max_ingest_ts": parts["max_ingest_ts_max"],
-                "out_bytes": parts["out_bytes_sum"],
-            })),
-            _LINEAGE_SCHEMA,
-            os.path.join(self.lineage_dir, f"batch-{batch_id}"),
-        )
-        metrics = groups.group_by(["status", "codec"]).aggregate([("n", "sum")])
-        _write_table(
-            with_batch_id(pa.table({
-                "status": metrics["status"], "codec": metrics["codec"],
-                "n": metrics["n_sum"],
-            })),
-            _METRICS_SCHEMA,
-            os.path.join(self.metrics_dir, f"batch-{batch_id}"),
-        )
-        rendered = groups.filter(pc.is_in(
-            groups["status"], value_set=pa.array(_RENDERED_STATUSES)
-        ))
-        if rendered.num_rows:
-            keys = pc.unique(pc.drop_null(rendered["result_key"]))
-            _write_table(
-                pa.table({"result_key": keys}).sort_by("result_key"),
-                _RENDERED_KEYS_SCHEMA,
-                os.path.join(self.rendered_dir, f"batch-{batch_id}"),
-            )
-
-    # ---- the render's commit: each task stages its own files
-
-    def _staging_dir(self, batch_id: int) -> str:
-        """Where batch ``batch_id``'s render tasks stage their files: a
-        ``_``-prefixed dir, which Spark's reader skips, inside the batch's
-        data dir. Absolute, so that a relative ``out_dir`` names the same
-        dir in the executors as in the driver."""
-        return os.path.abspath(
-            os.path.join(self.data_dir, f"batch_id={batch_id}", "_staging")
-        )
-
-    def _promote(self, batch_id: int, results: pa.Table) -> None:
-        """After a render job whose per-row ``results`` (``RESULT_SCHEMA``)
-        the driver collected: move the staged files of exactly the task
-        attempts that produced them into the batch's partition dirs, drop
-        the staging dir with whatever other attempts left there, and roll
-        up the side tables from the results, each row a group of one."""
-        staging = self._staging_dir(batch_id)
-        batch_dir = os.path.dirname(staging)
-        for attempt in pc.unique(results["attempt"]).to_pylist():
-            src = os.path.join(staging, str(attempt))
-            for part in os.listdir(src):
-                os.makedirs(os.path.join(batch_dir, part), exist_ok=True)
-                for name in os.listdir(os.path.join(src, part)):
-                    os.replace(os.path.join(src, part, name),
-                               os.path.join(batch_dir, part, name))
-        shutil.rmtree(staging)
-        ts, n = results["ingest_ts"], results.num_rows
-        self._write_side_tables(
-            results.select(["part_id", "status", "codec", "result_key"])
-            .append_column("n", pa.repeat(pa.scalar(1, pa.int64()), n))
-            .append_column("min_ingest_ts", ts)
-            .append_column("max_ingest_ts", ts)
-            .append_column("out_bytes", results["out_len"]),
-            batch_id,
-        )
+        path = os.path.join(self.data_dir, f"batch_id={batch_id}")
+        (batch_df.observe(rows, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").option("compression", "snappy").parquet(path))
+        return bool(rows.get["n"])
 
     # ---- reader side: only committed batches are visible
 
@@ -462,8 +209,6 @@ class IdempotentSink:
         only after the new manifest is visible, and a crash in between is
         harmless (reads use manifest.upto to ignore folded batch dirs).
         Returns the new row count of the compact index."""
-        import shutil
-
         manifest = self._read_compact_manifest()
         prev_upto = manifest["upto"] if manifest else -1
         batch_ids = [
@@ -565,12 +310,11 @@ class IdempotentSink:
 
 
 class AggSink(IdempotentSink):
-    """Exactly-once sink for AGGREGATED streaming output (windowed rollups)
-    — the same commit-marker discipline as :class:`IdempotentSink`, minus
-    the payload-specific side tables (agg rows carry no bytes/status/
-    result_key). Used by the streaming parity queries so no catalog entry
-    needs complete-mode + a memory sink (which cannot resume from a
-    checkpoint and holds the whole result in executor memory).
+    """Exactly-once sink for AGGREGATED streaming output (windowed rollups):
+    :class:`IdempotentSink`'s commit protocol and plain write, with no side
+    tables. Used by the streaming parity queries so no catalog entry needs
+    complete-mode + a memory sink (which cannot resume from a checkpoint
+    and holds the whole result in executor memory).
 
     With ``outputMode("update")`` each micro-batch appends the CHANGED
     groups; :meth:`read_latest` folds the committed log back into current
@@ -578,15 +322,6 @@ class AggSink(IdempotentSink):
     the streaming-upsert read side of an append-only exactly-once log (an
     Iceberg/Delta MERGE target would absorb this fold on a real cluster).
     """
-
-    def __init__(self, out_dir: str):
-        super().__init__(out_dir, partition_by=None, rendered_compact_every=0)
-
-    def _with_provenance(self, batch_df: DataFrame) -> DataFrame:
-        return batch_df
-
-    def _aggregate_side_tables(self, written: DataFrame, batch_id: int) -> None:
-        pass
 
     def read_latest(self, spark, key_cols: list[str]) -> DataFrame:
         """Current state: one row per group key, from the highest committed

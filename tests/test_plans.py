@@ -119,12 +119,14 @@ def test_singleflight_never_shuffles_payload(spark, tmp_path):
 
 
 def test_per_batch_render_plane_shape(spark):
-    """The TransformingSink per-batch plan (result-cache anti-join +
-    admission join + transform) must be payload-friendly: both joins are
-    BROADCAST (the TTL-bounded key index and the tiny config dim build
-    sides), so the payload column never crosses an exchange, and the whole
-    plane is ONE scan of the batch input — no union branches re-executing
-    the batch subtree."""
+    """``skip_rendered`` (the result-cache anti-join) composed with
+    ``resolve_with_config`` (the admission join) and the transform fn, over
+    a whole clips frame, must be payload-friendly: both joins are BROADCAST
+    (the TTL-bounded key index and the tiny config dim build sides), so the
+    payload column never crosses an exchange, and the whole plane is ONE
+    scan of the batch input — no union branches re-executing the batch
+    subtree. (The pipeline's own render plan is pinned by
+    ``test_render_plan_keeps_payloads_out_of_the_jvm``.)"""
     from imagor_spark.engine.config import params_config_df, resolve_with_config
     from imagor_spark.engine.transform import (
         OUTPUT_SCHEMA,

@@ -4,7 +4,9 @@ kill-and-resume from checkpoint and duplicate-clip suppression."""
 
 from __future__ import annotations
 
+import errno
 import os
+import time
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -39,6 +41,28 @@ def write_batch(spark, path, start, count, seed=42):
 
 def write_pdf(spark, path, pdf):
     spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).write.mode("append").parquet(path)
+
+
+def narrow_source(spark, path):
+    """``path``'s rows as the dedup stream carries them: every column but
+    the payload, plus each row's source file and row index."""
+    return spark.read.schema(CLIPS_SCHEMA).parquet(path).drop("bytes").select(
+        "*", "_metadata.file_path", "_metadata.row_index"
+    )
+
+
+def render_sink(out_dir, result_cache=None):
+    """The pipeline's render sink at ``out_dir``. Called directly, without
+    a stream, as ``sink(narrow_source(spark, in_dir), batch_id)``, it
+    commits ``in_dir``'s clips as batch ``batch_id``: data, lineage,
+    metrics and rendered keys."""
+    from imagor_spark.engine.transform import make_transform_fn
+    from imagor_spark.streaming.pipeline import TransformingSink
+
+    return TransformingSink(
+        out_dir, transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
+        secret=SECRET, allow_unsafe=True, result_cache=result_cache,
+    )
 
 
 def test_streaming_end_to_end(spark, dirs):
@@ -85,12 +109,10 @@ def test_side_table_readers_skip_uncommitted_batches(spark, dirs):
     """A crash after a batch's side tables and before its marker leaves
     ``lineage/batch-N`` and ``metrics/batch-N`` with no ``_commits/N``:
     neither reader may show that batch."""
-    from imagor_spark.engine.transform import transform
-
-    sink = IdempotentSink(dirs["out"])
+    write_batch(spark, dirs["in"], 0, 10)
+    sink = render_sink(dirs["out"])
     for b in (0, 1):
-        sink(transform(generate_clips_df(spark, 10, signed_mix=False),
-                       secret=SECRET, allow_unsafe=True), b)
+        sink(narrow_source(spark, dirs["in"]), b)
     os.remove(sink._marker(1))
     assert os.path.isdir(os.path.join(sink.lineage_dir, "batch-1"))
     assert os.path.isdir(os.path.join(sink.metrics_dir, "batch-1"))
@@ -189,17 +211,13 @@ def trigger_jobs(spark, dirs, result_cache=None):
     input file: a data trigger, then the zero-row trigger availableNow
     runs once the watermark has moved. Returns the per-trigger counts and
     the sink."""
-    from imagor_spark.engine.transform import make_transform_fn
-    from imagor_spark.streaming.pipeline import TransformingSink, build_raw_stream
+    from imagor_spark.streaming.pipeline import build_raw_stream
 
     pdf = make_pdf(42, range(20), signed_mix=False)
     spark.createDataFrame(pdf, schema=CLIPS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(dirs["in"])
-    sink = TransformingSink(
-        dirs["out"], transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
-        secret=SECRET, allow_unsafe=True, result_cache=result_cache,
-    )
+    sink = render_sink(dirs["out"], result_cache=result_cache)
     sc = spark.sparkContext
 
     def counted(batch_df, batch_id):
@@ -231,16 +249,14 @@ def test_trigger_job_counts(spark, dirs):
     assert sink.read_committed(spark).count() == 20
 
 
-def test_trigger_job_counts_live_result_store(spark, dirs):
+def test_trigger_job_counts_live_result_store(spark, dirs, tmp_path):
     """Against a result store that holds rendered keys, each trigger also
     broadcasts the keys index for its anti-join; keys already in the store
     are not rendered again."""
-    from imagor_spark.engine.transform import transform
-
-    store = IdempotentSink(os.path.join(dirs["out"], "store"))
+    store = render_sink(os.path.join(dirs["out"], "store"))
     done = make_pdf(42, range(5), signed_mix=False)
-    store(transform(spark.createDataFrame(done, schema=CLIPS_SCHEMA),
-                    secret=SECRET, allow_unsafe=True), 0)
+    write_pdf(spark, str(tmp_path / "done"), done)
+    store(narrow_source(spark, str(tmp_path / "done")), 0)
     jobs, sink = trigger_jobs(spark, dirs, result_cache=store)
     assert jobs == [4, 2]
     got = {r.clip_id for r in sink.read_committed(spark).select("clip_id").collect()}
@@ -252,29 +268,21 @@ def test_marker_only_result_store_plans_no_antijoin(spark, dirs):
     only such batches holds no rendered keys: the keys read is a local
     empty relation (no ``ExistingRDD``, no job) and the anti-join is gone
     from the trigger's plan. A store with rendered keys still gets one."""
-    from imagor_spark.engine.transform import OUTPUT_SCHEMA, make_transform_fn, transform
-    from imagor_spark.streaming.pipeline import TransformingSink
-
-    store = IdempotentSink(os.path.join(dirs["out"], "store"))
-    store(spark.createDataFrame([], OUTPUT_SCHEMA), 0)
-    assert store.committed_batches() == [0]
-    assert not any(os.path.exists(p) for p in store._batch_dirs(0))
     write_batch(spark, dirs["in"], 0, 10)
     src = narrow_source(spark, dirs["in"])
+    store = render_sink(os.path.join(dirs["out"], "store"))
+    store(src.limit(0), 0)
+    assert store.committed_batches() == [0]
+    assert not any(os.path.exists(p) for p in store._batch_dirs(0))
 
     def narrow_plan():
-        sink = TransformingSink(
-            os.path.join(dirs["out"], "sink"),
-            transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
-            secret=SECRET, allow_unsafe=True, result_cache=store,
-        )
+        sink = render_sink(os.path.join(dirs["out"], "sink"), result_cache=store)
         qe = sink._narrow(spark, src)._jdf.queryExecution()
         return qe.optimizedPlan().toString() + qe.executedPlan().toString()
 
     plan = narrow_plan()
     assert "ExistingRDD" not in plan and "LeftAnti" not in plan, plan
-    store(transform(generate_clips_df(spark, 10, signed_mix=False),
-                    secret=SECRET, allow_unsafe=True), 1)
+    store(src, 1)
     assert "LeftAnti" in narrow_plan()
 
 
@@ -293,14 +301,6 @@ def test_partition_dir_values_reach_the_sink(spark, dirs):
     out = sink.read_committed(spark).select("clip_id", "status").toPandas()
     assert sorted(out["clip_id"]) == sorted(pdf["clip_id"])
     assert set(out["status"]) == {"ok"}
-
-
-def narrow_source(spark, path):
-    """``path``'s rows as the dedup stream carries them: every column but
-    the payload, plus each row's source file and row index."""
-    return spark.read.schema(CLIPS_SCHEMA).parquet(path).drop("bytes").select(
-        "*", "_metadata.file_path", "_metadata.row_index"
-    )
 
 
 def test_late_fetch_reads_each_rows_payload_across_row_groups(spark, tmp_path):
@@ -442,6 +442,94 @@ def test_commit_ignores_debris_of_a_crashed_attempt(spark, tmp_path):
     q, sink = run("out")
     assert 0 in [p["batchId"] for p in q.recentProgress]
     assert rows(sink) == got
+
+
+def store_rows(spark, sink):
+    """A store's committed rows, payloads included, and its lineage,
+    metrics and rendered keys, each as sorted tuples."""
+    reads = (sink.read_committed, sink.read_lineage, sink.read_metrics,
+             sink.read_rendered_keys)
+    return [sorted((tuple(r) for r in read(spark).collect()), key=repr) for read in reads]
+
+
+@pytest.fixture(scope="module")
+def clean_store(spark, tmp_path_factory):
+    """One 20-clip input, and a clean run's ``store_rows`` over it."""
+    base = tmp_path_factory.mktemp("clean")
+    write_batch(spark, str(base / "in"), 0, 20)
+    _q, sink = run_pipeline(
+        spark, str(base / "in"), str(base / "out"), str(base / "ckpt"),
+        secret=SECRET, allow_unsafe=True, wait=True,
+    )
+    return str(base / "in"), store_rows(spark, sink)
+
+
+def _crash_after_promote(monkeypatch):
+    from imagor_spark.streaming.pipeline import TransformingSink
+
+    promote = TransformingSink._promote
+
+    def crash(self, *args):
+        promote(self, *args)
+        raise RuntimeError("injected crash after the promote")
+
+    monkeypatch.setattr(TransformingSink, "_promote", crash)
+
+
+def _crash_inside_side_tables(monkeypatch):
+    from imagor_spark.streaming import pipeline
+
+    write_table, written = pipeline._write_table, []
+
+    def crash(*args):
+        if written:  # lineage is on disk, metrics and rendered keys are not
+            raise RuntimeError("injected crash inside the side tables")
+        written.append(args[2])
+        write_table(*args)
+
+    monkeypatch.setattr(pipeline, "_write_table", crash)
+
+
+def _disk_full_on_marker(monkeypatch):
+    replace = os.replace
+
+    def full(src, dst, *args, **kwargs):
+        if os.path.basename(os.path.dirname(dst)) == "_commits":
+            raise OSError(errno.ENOSPC, os.strerror(errno.ENOSPC), dst)
+        return replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", full)
+
+
+@pytest.mark.parametrize("fault, message", [
+    pytest.param(_crash_after_promote, "injected crash after the promote",
+                 id="after_promote"),
+    pytest.param(_crash_inside_side_tables, "injected crash inside the side tables",
+                 id="inside_side_tables"),
+    pytest.param(_disk_full_on_marker, os.strerror(errno.ENOSPC), id="marker_enospc"),
+])
+def test_crash_in_commit_shows_nothing_and_resumes_exactly_once(
+    spark, clean_store, tmp_path, monkeypatch, fault, message
+):
+    """A fault in one of the driver's commit steps (after the promote,
+    inside the side tables, or a full disk on the marker's rename) fails
+    the query and leaves no marker, so no reader shows the batch. A resume
+    on the same checkpoint then commits what a clean run commits: the same
+    rows and side tables."""
+    in_dir, clean = clean_store
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    fault(monkeypatch)
+    with pytest.raises(Exception, match=message):
+        run_pipeline(spark, in_dir, out, ckpt, secret=SECRET, allow_unsafe=True, wait=True)
+    monkeypatch.undo()
+    crashed = IdempotentSink(out)
+    assert crashed.committed_batches() == []
+    for read in (crashed.read_committed, crashed.read_lineage, crashed.read_metrics):
+        with pytest.raises(FileNotFoundError):
+            read(spark)
+    assert crashed.read_rendered_keys(spark).count() == 0
+    _q, sink = run_pipeline(spark, in_dir, out, ckpt, secret=SECRET, allow_unsafe=True, wait=True)
+    assert store_rows(spark, sink) == clean
 
 
 def test_checkpoint_resume_exactly_once(spark, dirs):
@@ -738,21 +826,39 @@ def test_result_cache_ttl_expiry(spark, dirs):
         n_exp = 0
     assert n_exp == 0
 
+    # the pipeline's TTL, against the first run's store: an unexpired TTL
+    # renders no row again; a 1 ms TTL, once it has passed, expires every
+    # batch, so every key renders again
+    def rerun(name, max_age_ms):
+        _q, again = run_pipeline(
+            spark, dirs["in"], dirs["out"] + name, dirs["ckpt"] + name, secret=SECRET,
+            allow_unsafe=True, wait=True, result_cache_dir=dirs["out"],
+            result_cache_max_age_ms=max_age_ms,
+        )
+        return again
+
+    with pytest.raises(FileNotFoundError):
+        rerun("_fresh", 10**9).read_committed(spark)
+    time.sleep(0.05)
+    again = rerun("_expired", 1)
+    assert again.read_committed(spark).count() == sink.read_committed(spark).count()
+    assert sorted(again.read_rendered_keys(spark).collect()) == sorted(
+        sink.read_rendered_keys(spark).collect()
+    )
+
 
 def test_rendered_keys_compaction(spark, dirs):
     """Index compaction (result-cache index maintenance): folding the
     per-batch rendered_keys dirs into one distinct parquet must preserve
     the key set (identical anti-join skip behavior), shrink the dir count,
     keep row-level TTL semantics, and keep folding post-compaction batches."""
-    from imagor_spark.engine.transform import transform
-
-    sink = IdempotentSink(dirs["out"], rendered_compact_every=0)  # manual
-    # 4 index-disjoint mini-batches through the real sink path
+    # 4 index-disjoint mini-batches through the real sink path, fewer than
+    # auto-compaction needs, so compaction below is manual
+    sink = render_sink(dirs["out"])
     for i in range(4):
-        pdf = make_pdf(42, range(i * 8, i * 8 + 8), False)
-        clips = spark.createDataFrame(pdf, schema=CLIPS_SCHEMA)
-        batch = transform(clips, secret=SECRET, allow_unsafe=True)
-        sink(batch, i)
+        in_dir = os.path.join(dirs["in"], f"b{i}")
+        write_batch(spark, in_dir, i * 8, 8)
+        sink(narrow_source(spark, in_dir), i)
     keys_before = sorted(
         r["result_key"] for r in sink.read_rendered_keys(spark).collect()
     )
@@ -774,9 +880,8 @@ def test_rendered_keys_compaction(spark, dirs):
     later = int(_time.time() * 1000) + 60_000
     assert sink.read_rendered_keys(spark, max_age_ms=1000, now_ms=later).count() == 0
     # a post-compaction batch unions in via the batch-dir path...
-    pdf = make_pdf(42, range(500, 505), False)
-    clips = spark.createDataFrame(pdf, schema=CLIPS_SCHEMA)
-    sink(transform(clips, secret=SECRET, allow_unsafe=True), 4)
+    write_batch(spark, os.path.join(dirs["in"], "b4"), 500, 5)
+    sink(narrow_source(spark, os.path.join(dirs["in"], "b4")), 4)
     n_with_new = sink.read_rendered_keys(spark).count()
     assert n_with_new > n
     # ...and a second compaction folds it too (idempotent on re-run)
@@ -785,25 +890,23 @@ def test_rendered_keys_compaction(spark, dirs):
     assert sink.read_rendered_keys(spark).count() == n_with_new
 
 
-def test_rendered_keys_auto_compaction(spark, dirs):
-    """The sink auto-compacts once rendered_compact_every batch dirs
+def test_rendered_keys_auto_compaction(spark, dirs, monkeypatch):
+    """The sink auto-compacts once RENDERED_COMPACT_EVERY batch dirs
     accumulate, and the anti-join skip behavior is unchanged afterwards."""
-    from imagor_spark.engine.transform import skip_rendered, transform
+    from imagor_spark.engine.transform import skip_rendered
+    from imagor_spark.streaming import pipeline
 
-    sink = IdempotentSink(dirs["out"], rendered_compact_every=2)
-    all_clips = []
-    for i in range(3):
-        pdf = make_pdf(42, range(i * 6, i * 6 + 6), False)
-        clips = spark.createDataFrame(pdf, schema=CLIPS_SCHEMA)
-        all_clips.append(clips)
-        sink(transform(clips, secret=SECRET, allow_unsafe=True), i)
+    monkeypatch.setattr(pipeline, "RENDERED_COMPACT_EVERY", 2)
+    sink = render_sink(dirs["out"])
+    in_dirs = [os.path.join(dirs["in"], f"b{i}") for i in range(3)]
+    for i, in_dir in enumerate(in_dirs):
+        write_batch(spark, in_dir, i * 6, 6)
+        sink(narrow_source(spark, in_dir), i)
     # 3 batches with every=2 → at least one auto-compaction fired
     assert sink._read_compact_manifest() is not None
     assert sink._n_rendered_batch_dirs() < 3
     # identical skip behavior: every already-rendered clip is anti-joined out
-    union = all_clips[0]
-    for c in all_clips[1:]:
-        union = union.unionByName(c)
+    union = spark.read.schema(CLIPS_SCHEMA).parquet(*in_dirs)
     left = skip_rendered(union, sink.read_rendered_keys(spark))
     assert left.count() == 0
 
@@ -848,7 +951,7 @@ def test_streaming_parity_matches_oracle(spark, name):
     assert frame_fingerprint(scols, srows) == frame_fingerprint(ocols, orows)
 
 
-def test_compaction_during_live_stream_with_same_dir_cache(spark, dirs):
+def test_compaction_during_live_stream_with_same_dir_cache(spark, dirs, monkeypatch):
     """The r3 ADVICE hazard: with result_cache_dir == out_dir (resume-with-
     cache) and aggressive auto-compaction, compaction rmtree's rendered-keys
     dirs WHILE the stream is running. The per-batch index re-read means
@@ -872,18 +975,12 @@ def test_compaction_during_live_stream_with_same_dir_cache(spark, dirs):
         spark.createDataFrame(w, schema=CLIPS_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(dirs["in"])
-    from imagor_spark.streaming.pipeline import TransformingSink, build_raw_stream
-    from imagor_spark.engine.transform import make_transform_fn
+    from imagor_spark.streaming import pipeline
 
-    sink = TransformingSink(
-        dirs["out"],
-        transform_fn=make_transform_fn(SECRET, allow_unsafe=True),
-        secret=SECRET,
-        allow_unsafe=True,
-        result_cache=IdempotentSink(dirs["out"]),  # SAME dir, live
-        rendered_compact_every=2,  # compact aggressively mid-stream
-    )
-    stream = build_raw_stream(spark, dirs["in"], max_files_per_trigger=1)
+    # compact aggressively mid-stream, with the SAME dir as the live cache
+    monkeypatch.setattr(pipeline, "RENDERED_COMPACT_EVERY", 2)
+    sink = render_sink(dirs["out"], result_cache=IdempotentSink(dirs["out"]))
+    stream = pipeline.build_raw_stream(spark, dirs["in"], max_files_per_trigger=1)
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", dirs["ckpt"])
