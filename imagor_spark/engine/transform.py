@@ -283,21 +283,13 @@ def make_key_validity_udf(
     return kv
 
 
-def _anti_join_rendered(keyed, rendered_keys_df):
-    """Anti-join a frame keyed on ``__rk`` against the committed index
-    (shared by :func:`skip_rendered` and the per-batch sink, which computes
-    the key projection ONCE for both the anti-join and within-batch
-    singleflight)."""
-    rendered = F.broadcast(rendered_keys_df.select(F.col("result_key").alias("__rk")))
-    return keyed.join(rendered, "__rk", "left_anti")
-
-
 def skip_rendered(df, rendered_keys_df):
-    """Result-cache load (imagor.go:403-408, loadResult imagor.go:600-664):
-    left-anti join incoming clips against the committed rendered-keys index,
-    so already-rendered work is skipped BEFORE the transform ever decodes a
-    payload. Works on batch and streaming DataFrames (stream-static left
-    anti is supported).
+    """Result-cache load (imagor.go:403-408, loadResult imagor.go:600-664)
+    as a Spark plan: left-anti join incoming clips against a rendered-keys
+    index DataFrame, so already-rendered work is skipped BEFORE the
+    transform ever decodes a payload. Works on batch and streaming
+    DataFrames (stream-static left anti is supported). The streaming sink
+    probes its collected rows on the driver instead (``TransformingSink``).
 
     The index is the TTL-bounded compacted rendered-keys table — small
     relative to the stream — so it ships as a broadcast build side and the
@@ -306,7 +298,8 @@ def skip_rendered(df, rendered_keys_df):
     hash-shuffles the full payload rows by key — plan-asserted in tests).
     An index too large to broadcast should be sharded by TTL first."""
     keyed = with_result_key(df, out_col="__rk")
-    return _anti_join_rendered(keyed, rendered_keys_df).drop("__rk")
+    rendered = F.broadcast(rendered_keys_df.select(F.col("result_key").alias("__rk")))
+    return keyed.join(rendered, "__rk", "left_anti").drop("__rk")
 
 
 def singleflight_within(df, ok_col: str = "__ok"):
@@ -316,7 +309,7 @@ def singleflight_within(df, ok_col: str = "__ok"):
     min-``clip_id`` row among the valid rows wins;
     a dropped row's result IS the winner's committed row (identical bytes
     under the same key), exactly as if it had arrived one batch later and
-    hit the rendered-keys anti-join.
+    hit the result cache.
 
     Scale shape — the payload never shuffles: the duplicate-winner
     dimension is aggregated over a 2-column (key, id) projection (only

@@ -11,8 +11,10 @@ stateful stage; the payload is fetched late, for the rows that survive:
                                                   single-render-per-key,
                                                   imagor.go:842-884)
     → foreachBatch TransformingSink:
-        key + signature/expiry pre-check → result-cache anti-join,
-        collected once per trigger to the driver as one Arrow table
+        key + signature/expiry pre-check, collected once per trigger to
+        the driver as one Arrow table
+        → result-cache probe of the local rows against the committed
+          rendered-keys index, read on the driver with pyarrow
         → within-batch singleflight on the local rows
         → the survivors, sorted by (file_path, row_index), as a local
           relation admitted against the broadcast codec config
@@ -32,7 +34,9 @@ chunk of source rows.
 
 One trigger's narrow rows are one driver result (about 317 B a row, so
 about 3M rows under the 1 GiB ``spark.driver.maxResultSize`` default);
-``max_files_per_trigger`` is the bound that keeps a trigger under it.
+``max_files_per_trigger`` is the bound that keeps a trigger under it. The
+result includes the trigger's cache hits, and the whole result-cache index
+is read into the driver each trigger (as a broadcast join's build was).
 
 State lives in RocksDB (spark.sql.streaming.stateStore.providerClass) so
 dedup state at 10^12 keys spills off-heap; the within-watermark retention
@@ -60,7 +64,6 @@ from pyspark.sql.types import StructType
 from ..engine.config import params_config_df, resolve_with_config
 from ..engine.transform import (
     OUTPUT_SCHEMA,
-    _anti_join_rendered,
     make_key_validity_udf,
     make_transform_fn,
     singleflight_local,
@@ -292,8 +295,9 @@ class TransformingSink(IdempotentSink):
     """The request lifecycle (imagor.go:275-540) executed INSIDE foreachBatch:
 
       narrow batch → key + signature/expiry pre-check
-            → result-cache anti-join (index re-read THIS batch)
             → ONE collect of the narrow rows to the driver (an Arrow table)
+            → result-cache probe: rows whose key is in the committed
+              rendered-keys index (re-read THIS batch) are dropped
             → within-batch singleflight on that table (same result_key
               renders once)
             → the survivors, sorted by source (file_path, row_index), as a
@@ -309,10 +313,9 @@ class TransformingSink(IdempotentSink):
     live result-cache economy: a key committed by batch N skips render in
     batch N+1 of the SAME continuous stream (no restart needed) — matching
     the reference's per-request result-storage probe (imagor.go:403-408,
-    loadResult :600-664). It also removes the stale-lazy-plan hazard where
-    index compaction deleted parquet dirs still referenced by a plan built
-    at stream start: every batch plans against the current manifest, and
-    compaction only runs after the batch that triggered it has committed.
+    loadResult :600-664). The read and the probe run on the driver with
+    pyarrow, at no Spark job; the marker counts the rows collected
+    (``n_collected``), ``n_cache_hit`` and ``n_singleflight_dropped``.
 
     Admission (≅ CheckResolution processor.go:506-516 + the loader
     resolution chain imagor.go:699-760): the per-codec config dimension is
@@ -332,11 +335,13 @@ class TransformingSink(IdempotentSink):
     holds one batch's payloads and their renders, plus one read chunk of
     ``_READ_ROWS`` source rows.
 
-    Ceiling: one trigger's narrow rows are one driver result, about 317 B a
-    row, so about 3M rows fit under the 1 GiB ``spark.driver.maxResultSize``
-    default; the render's narrower per-row results come back the same
-    way. ``max_files_per_trigger`` is the bound that keeps a trigger under
-    it. The sink's ``out_dir`` must be a path every executor can write.
+    Ceiling: one trigger's narrow rows, its cache hits included, are one
+    driver result, about 317 B a row, so about 3M rows fit under the 1 GiB
+    ``spark.driver.maxResultSize`` default; the render's narrower per-row
+    results come back the same way. ``max_files_per_trigger`` is the bound
+    that keeps a trigger under it. The whole result-cache index is read into
+    the driver each trigger (as a broadcast join's build was). The sink's
+    ``out_dir`` must be a path every executor can write.
     """
 
     def __init__(
@@ -363,39 +368,52 @@ class TransformingSink(IdempotentSink):
         # The narrow rows (no payload) are collected once, as one Arrow
         # table: that collect is the only action over the stream's batch,
         # so the stateful dedup — with its RocksDB state commit — runs once
-        # per trigger, and everything after it (singleflight, the render's
-        # input) works on the driver's copy. A trigger with no rows runs
-        # that one job and commits its marker alone. The zero-row trigger
-        # still runs, because it carries the advanced watermark into the
-        # state store (and so into the late-row filter of the next run).
-        # A data trigger adds two jobs: the config broadcast and the render,
-        # whose collected results are the side tables' only input.
+        # per trigger, and everything after it (the result-cache probe,
+        # singleflight, the render's input) works on the driver's copy. A
+        # trigger with no rows runs that one job and commits its marker
+        # alone; it still runs, because it carries the advanced watermark
+        # into the state store (and so into the late-row filter of the next
+        # run). A data trigger adds two jobs: the config broadcast and the
+        # render, whose collected results are the side tables' only input.
         # A replayed batch runs that collect too: Spark fails a stateful
         # stream whose batch leaves its state uncommitted.
-        narrow = self._narrow(spark, batch_df).toArrow()
+        narrow = self._narrow(batch_df).toArrow()
         if self.is_committed(batch_id):
             return  # replayed batch: effect already visible → exactly-once
-        self._commit(spark, narrow if narrow.num_rows else None, batch_id)
+        rows = narrow
+        if rows.num_rows and self.result_cache is not None:
+            # FRESH read of the committed index: keys committed by earlier
+            # batches of this very stream hit (live cache refresh); a null
+            # key never does
+            index = self.result_cache.rendered_keys(self.result_cache_max_age_ms)
+            rows = rows.filter(pc.invert(pc.is_in(
+                rows["__rk"], value_set=index["result_key"], skip_nulls=True
+            )))
+        n_missed = rows.num_rows
+        rows = singleflight_local(rows)
+        self._commit(spark, rows if rows.num_rows else None, batch_id, {
+            "n_collected": narrow.num_rows,
+            "n_cache_hit": narrow.num_rows - n_missed,
+            "n_singleflight_dropped": n_missed - rows.num_rows,
+        })
         # periodic index compaction: a long-running pipeline otherwise grows
-        # one rendered_keys/batch-* parquet dir per batch forever, and the
-        # anti-join's build side becomes thousands of small files. The batch
-        # is already committed, so a failure in this non-essential index
-        # maintenance must not fail the streaming query — the next commit
-        # that writes rows retries it.
-        if narrow.num_rows and self._n_rendered_batch_dirs() >= RENDERED_COMPACT_EVERY:
+        # one rendered_keys/batch-* dir per batch forever, each read every
+        # trigger. The batch is already committed, so a failure in this
+        # non-essential index maintenance must not fail the streaming query
+        # — the next commit that writes rows retries it.
+        if rows.num_rows and self._n_rendered_batch_dirs() >= RENDERED_COMPACT_EVERY:
             try:
-                self.compact_rendered_keys(spark)
-            except Exception as exc:  # pragma: no cover - transient FS/Spark
+                self.compact_rendered_keys()
+            except Exception as exc:  # pragma: no cover - transient FS
                 log.warning("rendered-keys compaction deferred: %s", exc, exc_info=True)
 
-    def _write_batch(self, spark, narrow: pa.Table, batch_id: int) -> bool:
-        """Render the batch's narrow rows (the batch's dirs already cleared):
-        singleflight, admission, then one render job whose tasks stage their
-        own files; its collected results pick the files to promote and are
-        the side tables' only input."""
-        survivors = (
-            singleflight_local(narrow).drop_columns(["__rk", "__ok"])
-            .sort_by([("file_path", "ascending"), ("row_index", "ascending")])
+    def _write_batch(self, spark, survivors: pa.Table, batch_id: int) -> bool:
+        """Render the batch's singleflight survivors (the batch's dirs
+        already cleared): admission, then one render job whose tasks stage
+        their own files; its collected results pick the files to promote
+        and are the side tables' only input."""
+        survivors = survivors.drop_columns(["__rk", "__ok"]).sort_by(
+            [("file_path", "ascending"), ("row_index", "ascending")]
         )
         admitted = resolve_with_config(
             spark.createDataFrame(survivors), params_config_df(spark)
@@ -484,29 +502,18 @@ class TransformingSink(IdempotentSink):
                 os.path.join(self.rendered_dir, f"batch-{batch_id}"),
             )
 
-    def _narrow(self, spark, batch_df: DataFrame) -> DataFrame:
+    def _narrow(self, batch_df: DataFrame) -> DataFrame:
         """The batch's rows with their result key ``__rk`` and validity
-        ``__ok``, minus the keys already committed to the result cache.
-        One key projection serves BOTH cache economies (the reference
-        derives the key once per request too, imagor.go:403-408): across
-        batches — the anti-join against the committed rendered-keys index;
-        within a batch — singleflight (imagor.go:842-884): same-key rows
-        arriving in ONE trigger render once, not N times."""
-        keyed = batch_df.withColumn("__kv", self.key_validity(F.col("ops"))).select(
+        ``__ok``. One key projection serves BOTH cache economies (the
+        reference derives the key once per request too, imagor.go:403-408):
+        across batches — the driver-side probe of the committed
+        rendered-keys index; within a batch — singleflight
+        (imagor.go:842-884): same-key rows arriving in ONE trigger render
+        once, not N times."""
+        return batch_df.withColumn("__kv", self.key_validity(F.col("ops"))).select(
             *batch_df.columns,
             F.col("__kv.rk").alias("__rk"), F.col("__kv.ok").alias("__ok"),
         )
-        if self.result_cache is None:
-            return keyed
-        # FRESH read of the committed index — sees keys committed by
-        # earlier batches of this very stream (live cache refresh). The
-        # compacted index is small relative to the stream (TTL-bounded), so
-        # Spark plans a broadcast anti-join; with no index yet the read is
-        # an empty local relation and the optimizer drops the join.
-        rendered = self.result_cache.read_rendered_keys(
-            spark, max_age_ms=self.result_cache_max_age_ms
-        )
-        return _anti_join_rendered(keyed, rendered)
 
 
 def run_pipeline(
@@ -526,10 +533,10 @@ def run_pipeline(
     """End-to-end: build, sink, (optionally) wait for availableNow drain.
 
     ``result_cache_dir``: a sink directory whose committed rendered-keys
-    index is anti-joined against each batch BEFORE the transform — re-read
-    per micro-batch, so keys committed mid-stream (including by this very
-    stream when ``result_cache_dir == out_dir``, the resume-with-cache
-    pattern) are seen without a restart."""
+    index each batch's collected rows are probed against on the driver,
+    BEFORE the transform — re-read per micro-batch, so keys committed
+    mid-stream (including by this very stream when ``result_cache_dir ==
+    out_dir``, the resume-with-cache pattern) are seen without a restart."""
     configure_streaming(spark)
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
     b_assets = spark.sparkContext.broadcast(assets) if assets else None

@@ -22,9 +22,10 @@ one row per (batch, spark partition) with row counts and event-time
 bounds — ``metrics/`` — one row per (batch, status, codec), mirroring
 imagor's Prometheus counters (metrics/prometheusmetrics) — and
 ``rendered_keys/``: the committed ``result_key``s of successful renders
-(result-cache load, imagor.go:403-408 + loadResult imagor.go:600-664), a
-compact index the pipeline left-anti-joins incoming clips against, so
-re-runs/backfills skip work that is already in result storage.
+(result-cache load, imagor.go:403-408 + loadResult imagor.go:600-664), an
+index the pipeline reads on the driver with pyarrow and probes each
+trigger's collected rows against, so re-runs/backfills skip work that is
+already in result storage.
 
 An empty batch commits its marker alone: no data, lineage, metrics or
 rendered-keys dir (≅ imagor saving only what a request produced,
@@ -41,7 +42,8 @@ streaming pipeline's render
 payload writer: its tasks write their own files, and it alone writes
 lineage, metrics and the rendered keys, and folds the rendered keys with
 :meth:`IdempotentSink.compact_rendered_keys` once enough batch dirs pile
-up.
+up. Both the index's reader (:meth:`IdempotentSink.rendered_keys`) and its
+fold run on the driver with pyarrow; no Spark job touches it.
 """
 
 from __future__ import annotations
@@ -51,6 +53,9 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, functions as F
 
 
@@ -62,14 +67,19 @@ class IdempotentSink:
         self.lineage_dir = os.path.join(out_dir, "lineage")
         self.metrics_dir = os.path.join(out_dir, "metrics")
         self.rendered_dir = os.path.join(out_dir, "rendered_keys")
+        # batch id -> its marker's committed_at_ms: a marker never changes
+        # once written, so each is opened at most once per sink
+        self._commit_times: dict[int, int] = {}
         os.makedirs(self.commits_dir, exist_ok=True)
 
     def _marker(self, batch_id: int) -> str:
         return os.path.join(self.commits_dir, str(batch_id))
 
     def _committed_at_ms(self, batch_id: int) -> int:
-        with open(self._marker(batch_id)) as f:
-            return int(json.load(f)["committed_at_ms"])
+        if batch_id not in self._commit_times:
+            with open(self._marker(batch_id)) as f:
+                self._commit_times[batch_id] = int(json.load(f)["committed_at_ms"])
+        return self._commit_times[batch_id]
 
     def is_committed(self, batch_id: int) -> bool:
         return os.path.exists(self._marker(batch_id))
@@ -95,11 +105,12 @@ class IdempotentSink:
         for path in self._batch_dirs(batch_id):
             shutil.rmtree(path, ignore_errors=True)
 
-    def _commit(self, spark, batch, batch_id: int) -> None:
+    def _commit(self, spark, batch, batch_id: int, counts: dict | None = None) -> None:
         """Clear what an earlier attempt at ``batch_id`` left, write the
         batch (``_write_batch``), then the marker (caller has already
         checked ``is_committed``). A batch with no rows — ``None`` when the
-        caller knows that without a job — commits its marker alone."""
+        caller knows that without a job — commits its marker alone.
+        ``counts`` (name → int) ride in the marker next to ``wall_s``."""
         t0 = time.time()
         self._clear(batch_id)
         wrote = batch is not None and self._write_batch(spark, batch, batch_id)
@@ -113,6 +124,7 @@ class IdempotentSink:
                     "batch_id": batch_id,
                     "wall_s": round(time.time() - t0, 3),
                     "committed_at_ms": int(time.time() * 1000),
+                    **(counts or {}),
                 },
                 f,
             )
@@ -136,7 +148,7 @@ class IdempotentSink:
         """Committed batch ids; with ``max_age_ms``, expired batches are
         filtered out on READ (≅ the expiration check on Get,
         filestorage.go:64-76 + getTtl imagor.go:991-1003) — an expired
-        result behaves like a cache miss, so the anti-join re-renders it."""
+        result behaves like a cache miss, so the pipeline re-renders it."""
         try:
             ids = sorted(
                 int(x) for x in os.listdir(self.commits_dir) if not x.endswith(".tmp")
@@ -200,15 +212,21 @@ class IdempotentSink:
         except FileNotFoundError:
             return 0
 
-    def compact_rendered_keys(self, spark) -> int:
+    def _read_compact(self, manifest: dict) -> pa.Table:
+        return pq.read_table(os.path.join(self.rendered_dir, manifest["name"]),
+                             columns=["result_key", "committed_at_ms"])
+
+    def compact_rendered_keys(self, spark=None) -> int:
         """Fold the per-batch rendered-keys dirs (plus any previous compact
-        index) into ONE distinct parquet keyed (result_key, committed_at_ms)
-        — a re-rendered key keeps its NEWEST commit time, so TTL expiration
+        index) into ONE parquet file keyed (result_key, committed_at_ms)
+        with a pyarrow group-by on the driver (``spark`` is unused) — a
+        re-rendered key keeps its NEWEST commit time, so TTL expiration
         (applied per-row on read) matches the batch-level semantics. The
-        manifest swap is atomic (os.replace); stale batch dirs are removed
-        only after the new manifest is visible, and a crash in between is
-        harmless (reads use manifest.upto to ignore folded batch dirs).
-        Returns the new row count of the compact index."""
+        manifest swap is atomic (os.replace); folded dirs are removed only
+        after the new manifest is visible, and a crash in between is
+        harmless (reads use manifest.upto to ignore folded batch dirs, and
+        every fold removes them). Returns the new row count of the compact
+        index, 0 when there is nothing new to fold."""
         manifest = self._read_compact_manifest()
         prev_upto = manifest["upto"] if manifest else -1
         batch_ids = [
@@ -217,96 +235,73 @@ class IdempotentSink:
             if b > prev_upto
             and os.path.exists(os.path.join(self.rendered_dir, f"batch-{b}"))
         ]
-        if not batch_ids and manifest:
-            return 0  # nothing new to fold
-        frames = []
-        if manifest:
-            frames.append(
-                spark.read.parquet(os.path.join(self.rendered_dir, manifest["name"]))
+        n = 0
+        if batch_ids:
+            tables = [self._read_compact(manifest)] if manifest else []
+            for b in batch_ids:
+                keys = pq.read_table(os.path.join(self.rendered_dir, f"batch-{b}"),
+                                     columns=["result_key"])["result_key"]
+                at = pa.repeat(pa.scalar(self._committed_at_ms(b), pa.int64()), len(keys))
+                tables.append(pa.table({"result_key": keys, "committed_at_ms": at}))
+            folded = pa.concat_tables(tables).group_by("result_key").aggregate(
+                [("committed_at_ms", "max")]
             )
-        for b in batch_ids:
-            frames.append(
-                spark.read.parquet(os.path.join(self.rendered_dir, f"batch-{b}"))
-                .select("result_key")
-                .withColumn("committed_at_ms", F.lit(self._committed_at_ms(b)))
+            n = folded.num_rows
+            manifest = {"upto": max(batch_ids), "name": f"compact-{max(batch_ids)}",
+                        "n_keys": n}
+            out_path = os.path.join(self.rendered_dir, manifest["name"])
+            os.makedirs(out_path, exist_ok=True)  # a crashed fold's file is rewritten
+            pq.write_table(
+                folded.select(["result_key", "committed_at_ms_max"])
+                .rename_columns(["result_key", "committed_at_ms"]),
+                os.path.join(out_path, "part-00000.parquet"),
             )
-        if not frames:
-            return 0
-        union = frames[0]
-        for fr in frames[1:]:
-            union = union.unionByName(fr)
-        compacted = union.groupBy("result_key").agg(
-            F.max("committed_at_ms").alias("committed_at_ms")
-        ).persist()
-        n = compacted.count()
-        # file sizing: ~5M keys (~300 MB) per output file — ONE file for any
-        # sandbox-scale index, but never a single-file bottleneck at 10^12
-        # keys (the groupBy above already hash-partitioned by result_key;
-        # persist so the count and the write share one aggregation pass)
-        n_files = max(1, n // 5_000_000)
-        new_upto = max(batch_ids) if batch_ids else prev_upto
-        new_name = f"compact-{new_upto}"
-        out_path = os.path.join(self.rendered_dir, new_name)
-        compacted.coalesce(n_files).write.mode("overwrite").parquet(out_path)
-        compacted.unpersist()
-        tmp = self._compact_manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"upto": new_upto, "name": new_name, "n_keys": n}, f)
-        os.replace(tmp, self._compact_manifest_path())
-        # cleanup AFTER the manifest swap: folded batch dirs + old compact
-        for b in batch_ids:
-            shutil.rmtree(os.path.join(self.rendered_dir, f"batch-{b}"), ignore_errors=True)
-        if manifest and manifest["name"] != new_name:
-            shutil.rmtree(
-                os.path.join(self.rendered_dir, manifest["name"]), ignore_errors=True
-            )
+            tmp = self._compact_manifest_path() + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            os.replace(tmp, self._compact_manifest_path())
+        if manifest:  # cleanup AFTER the manifest swap: folded dirs, old compacts
+            for name in os.listdir(self.rendered_dir):
+                if (name.startswith("batch-") and int(name[6:]) <= manifest["upto"]) or (
+                    name.startswith("compact-") and name != manifest["name"]
+                ):
+                    shutil.rmtree(os.path.join(self.rendered_dir, name), ignore_errors=True)
         return n
+
+    def rendered_keys(
+        self, max_age_ms: int | None = None, now_ms: int | None = None
+    ) -> pa.Table:
+        """Committed result-cache index, read on the driver: a table of one
+        string column ``result_key`` (distinct per file, not across them).
+        ``max_age_ms`` expires old entries — their keys drop out of the
+        index and the pipeline re-renders them (result-cache TTL, getTtl
+        imagor.go:991-1003). Reads the compact file (row-level TTL on its
+        committed_at_ms column) plus the not-yet-folded per-batch files of
+        committed batches (batch-level TTL via the marker)."""
+        manifest = self._read_compact_manifest()
+        upto = manifest["upto"] if manifest else -1
+        now = now_ms if now_ms is not None else int(time.time() * 1000)
+        keys = []
+        if manifest:
+            compact = self._read_compact(manifest)
+            if max_age_ms is not None:
+                compact = compact.filter(
+                    pc.greater_equal(compact["committed_at_ms"], now - max_age_ms)
+                )
+            keys.append(compact["result_key"])
+        for b in self.committed_batches(max_age_ms=max_age_ms, now_ms=now):
+            path = os.path.join(self.rendered_dir, f"batch-{b}")
+            if b > upto and os.path.exists(path):
+                keys.append(pq.read_table(path, columns=["result_key"])["result_key"])
+        chunks = [c for k in keys for c in k.chunks]
+        return pa.table({"result_key": pa.chunked_array(chunks, type=pa.string())})
 
     def read_rendered_keys(
         self, spark, max_age_ms: int | None = None, now_ms: int | None = None
     ) -> DataFrame:
-        """Committed result-cache index: DataFrame[result_key] (distinct per
-        batch; dedup across batches happens in the anti-join). ``max_age_ms``
-        expires old entries — their keys drop out of the index and the
-        anti-join re-renders them (result-cache TTL, getTtl
-        imagor.go:991-1003). Reads the compact index (row-level TTL on its
-        committed_at_ms column) plus the not-yet-folded per-batch dirs of
-        committed batches (batch-level TTL via the marker); both schemas are
-        known, so no footer is read.
-
-        With neither (nothing committed yet, or only marker-only batches)
-        the index is an empty ``LocalTableScan``: it needs no Spark job, and
-        the optimizer drops an anti-join against it, so this read is the
-        probe for whether a trigger anti-joins at all."""
-        manifest = self._read_compact_manifest()
-        frames = []
-        if manifest:
-            cdf = spark.read.schema("result_key string, committed_at_ms long").parquet(
-                os.path.join(self.rendered_dir, manifest["name"])
-            )
-            if max_age_ms is not None:
-                now = now_ms if now_ms is not None else int(time.time() * 1000)
-                cdf = cdf.filter(F.col("committed_at_ms") >= F.lit(now - max_age_ms))
-            frames.append(cdf.select("result_key"))
-        upto = manifest["upto"] if manifest else -1
-        batches = [
-            b
-            for b in self.committed_batches(max_age_ms=max_age_ms, now_ms=now_ms)
-            if b > upto
-        ]
-        paths = [
-            p
-            for p in (os.path.join(self.rendered_dir, f"batch-{b}") for b in batches)
-            if os.path.exists(p)
-        ]
-        if paths:
-            frames.append(spark.read.schema("result_key string").parquet(*paths))
-        if not frames:
-            return spark.sql("SELECT CAST(NULL AS STRING) AS result_key WHERE FALSE")
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
+        """:meth:`rendered_keys` as a local DataFrame, e.g. for
+        :func:`~imagor_spark.engine.transform.skip_rendered`."""
+        return spark.createDataFrame(self.rendered_keys(max_age_ms, now_ms))
 
 
 class AggSink(IdempotentSink):

@@ -250,40 +250,52 @@ def test_trigger_job_counts(spark, dirs):
 
 
 def test_trigger_job_counts_live_result_store(spark, dirs, tmp_path):
-    """Against a result store that holds rendered keys, each trigger also
-    broadcasts the keys index for its anti-join; keys already in the store
-    are not rendered again."""
+    """Against a result store that holds rendered keys, a trigger runs the
+    same jobs as without one: the keys index is read and probed on the
+    driver after the collect. Keys already in the store are not rendered
+    again, and the marker counts them as cache hits."""
+    import json
+
     store = render_sink(os.path.join(dirs["out"], "store"))
     done = make_pdf(42, range(5), signed_mix=False)
     write_pdf(spark, str(tmp_path / "done"), done)
     store(narrow_source(spark, str(tmp_path / "done")), 0)
     jobs, sink = trigger_jobs(spark, dirs, result_cache=store)
-    assert jobs == [4, 2]
+    assert jobs == [3, 1]
     got = {r.clip_id for r in sink.read_committed(spark).select("clip_id").collect()}
     assert got == set(make_pdf(42, range(20), signed_mix=False)["clip_id"]) - set(done["clip_id"])
+    with open(sink._marker(0)) as f:
+        marker = json.load(f)
+    assert (marker["n_collected"], marker["n_cache_hit"], marker["n_singleflight_dropped"]) == (
+        20, 5, 0
+    )
 
 
 def test_marker_only_result_store_plans_no_antijoin(spark, dirs):
     """An empty batch commits its marker alone, so a result store holding
-    only such batches holds no rendered keys: the keys read is a local
-    empty relation (no ``ExistingRDD``, no job) and the anti-join is gone
-    from the trigger's plan. A store with rendered keys still gets one."""
+    only such batches holds no rendered keys. Whether the store holds keys
+    or not, the plan the sink collects is the key/validity projection
+    alone: no anti-join and no broadcast, as the result cache is probed on
+    the driver after the collect."""
     write_batch(spark, dirs["in"], 0, 10)
     src = narrow_source(spark, dirs["in"])
     store = render_sink(os.path.join(dirs["out"], "store"))
     store(src.limit(0), 0)
     assert store.committed_batches() == [0]
     assert not any(os.path.exists(p) for p in store._batch_dirs(0))
+    assert store.rendered_keys().num_rows == 0
 
     def narrow_plan():
         sink = render_sink(os.path.join(dirs["out"], "sink"), result_cache=store)
-        qe = sink._narrow(spark, src)._jdf.queryExecution()
+        qe = sink._narrow(src)._jdf.queryExecution()
         return qe.optimizedPlan().toString() + qe.executedPlan().toString()
 
     plan = narrow_plan()
-    assert "ExistingRDD" not in plan and "LeftAnti" not in plan, plan
+    assert "LeftAnti" not in plan and "BroadcastExchange" not in plan, plan
     store(src, 1)
-    assert "LeftAnti" in narrow_plan()
+    assert store.rendered_keys().num_rows > 0
+    plan = narrow_plan()
+    assert "LeftAnti" not in plan and "BroadcastExchange" not in plan, plan
 
 
 def test_partition_dir_values_reach_the_sink(spark, dirs):
@@ -847,7 +859,7 @@ def test_result_cache_ttl_expiry(spark, dirs):
     )
 
 
-def test_rendered_keys_compaction(spark, dirs):
+def test_rendered_keys_compaction(spark, dirs, monkeypatch):
     """Index compaction (result-cache index maintenance): folding the
     per-batch rendered_keys dirs into one distinct parquet must preserve
     the key set (identical anti-join skip behavior), shrink the dir count,
@@ -888,6 +900,74 @@ def test_rendered_keys_compaction(spark, dirs):
     assert sink.compact_rendered_keys(spark) == n_with_new
     assert sink.compact_rendered_keys(spark) == 0  # nothing new
     assert sink.read_rendered_keys(spark).count() == n_with_new
+
+    # a fold that crashes while writing its compact file leaves the old
+    # manifest in force, and the key set as it was
+    from imagor_spark.streaming import sink as sink_module
+
+    def boom(*_a, **_k):
+        raise OSError("injected")
+
+    write_batch(spark, os.path.join(dirs["in"], "b5"), 600, 5)
+    sink(narrow_source(spark, os.path.join(dirs["in"], "b5")), 5)
+    keys_live = sorted(sink.rendered_keys()["result_key"].to_pylist())
+    manifest = sink._read_compact_manifest()
+    with monkeypatch.context() as m:
+        m.setattr(sink_module.pq, "write_table", boom)
+        with pytest.raises(OSError, match="injected"):
+            sink.compact_rendered_keys(spark)
+    assert sink._read_compact_manifest() == manifest
+    assert sorted(sink.rendered_keys()["result_key"].to_pylist()) == keys_live
+    # a fold that crashes in its cleanup, after the manifest swap, leaves
+    # the same key set; the next fold removes what it left
+    with monkeypatch.context() as m:
+        m.setattr(sink_module.shutil, "rmtree", boom)
+        with pytest.raises(OSError, match="injected"):
+            sink.compact_rendered_keys(spark)
+    assert sink._read_compact_manifest()["upto"] == 5
+    assert sink._n_rendered_batch_dirs() > 0
+    assert sorted(sink.rendered_keys()["result_key"].to_pylist()) == keys_live
+    assert sink.compact_rendered_keys(spark) == 0
+    assert sink._n_rendered_batch_dirs() == 0
+    assert sorted(os.listdir(sink.rendered_dir)) == ["_compacted.json", "compact-5"]
+    assert sorted(sink.rendered_keys()["result_key"].to_pylist()) == keys_live
+
+
+def test_ttl_read_opens_each_commit_marker_once(tmp_path, monkeypatch):
+    """A marker never changes once written, so a sink opens each at most
+    once: a second TTL read of the rendered-keys index opens no marker,
+    and one more committed batch costs one more open."""
+    import builtins
+    import json
+
+    from imagor_spark.streaming import sink as sink_module
+
+    sink = IdempotentSink(str(tmp_path / "out"))
+    now = int(time.time() * 1000)
+
+    def mark(b):
+        with open(sink._marker(b), "w") as f:
+            json.dump({"batch_id": b, "wall_s": 0.0, "committed_at_ms": now - b}, f)
+
+    for b in range(2000):
+        mark(b)
+    opened = []
+
+    def counting_open(path, *args, **kwargs):
+        if os.path.dirname(str(path)) == sink.commits_dir:
+            opened.append(path)
+        return builtins.open(path, *args, **kwargs)
+
+    monkeypatch.setattr(sink_module, "open", counting_open, raising=False)
+    assert sink.rendered_keys(max_age_ms=10**9).num_rows == 0
+    assert len(opened) == 2000
+    assert sink.committed_batches(max_age_ms=1000, now_ms=now) == list(range(1001))
+    opened.clear()
+    sink.rendered_keys(max_age_ms=10**9)
+    assert opened == []
+    mark(2000)
+    sink.rendered_keys(max_age_ms=10**9)
+    assert opened == [sink._marker(2000)]
 
 
 def test_rendered_keys_auto_compaction(spark, dirs, monkeypatch):
