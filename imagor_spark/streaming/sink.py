@@ -1,16 +1,21 @@
-"""Exactly-once foreachBatch sink: one commit protocol, its readers, and
-the rendered-keys index compaction (the result-cache index).
+"""Exactly-once foreachBatch sink: one commit protocol, its readers, the
+rendered-keys index compaction (the result-cache index) and the dedup
+window (the pipeline's ``clip_id`` dedup state).
 
 ``foreachBatch`` alone is at-least-once (a batch may replay after failure,
 SURVEY §7 hard-point c). We make the effect idempotent the standard way:
 
   1. before batch N is written, whatever an earlier attempt left of it
-     (``data/batch_id=N/`` and its side-table dirs) is removed, so a
-     replay never duplicates;
+     (``data/batch_id=N/`` and its side-table and window dirs) is removed,
+     so a replay never duplicates;
   2. a commit marker ``_commits/N`` is written (atomic rename) AFTER the
-     data and side tables; readers/consumers trust only committed batches;
-  3. a replayed batch whose marker already exists is skipped (it still
-     runs, as Spark requires of a stateful stream, but writes nothing).
+     data, side tables and window delta; readers/consumers trust only
+     committed batches;
+  3. a replayed batch whose marker already exists is skipped. The render
+     sink's stream is stateless, so it returns before any Spark job; the
+     plain writer still runs the batch as a ``noop`` write, because Spark
+     fails a stateful stream (an :class:`AggSink` rollup) whose batch
+     leaves its state uncommitted.
 
 This mirrors the reference's result-storage save discipline: write result,
 then make it visible; cleanup-on-error leaves no committed partial state
@@ -25,7 +30,9 @@ imagor's Prometheus counters (metrics/prometheusmetrics) — and
 (result-cache load, imagor.go:403-408 + loadResult imagor.go:600-664), an
 index the pipeline reads on the driver with pyarrow and probes each
 trigger's collected rows against, so re-runs/backfills skip work that is
-already in result storage.
+already in result storage. ``dedup/batch-N`` holds the ``clip_id``s the
+batch kept with their expiry, and the marker its watermark
+(:class:`DedupWindow`).
 
 An empty batch commits its marker alone: no data, lineage, metrics or
 rendered-keys dir (≅ imagor saving only what a request produced,
@@ -33,17 +40,18 @@ saveWithErrorHandling imagor.go:783-811). Every reader skips a committed
 batch that has no dir.
 
 One protocol, two writers. :meth:`IdempotentSink._commit` clears the
-batch's dirs, runs the writer (``_write_batch``), then writes the marker.
-:class:`IdempotentSink`'s own writer is a plain one: one snappy parquet
-write of the batch's rows, counted by an observed metric (no extra job),
-with no side tables; :class:`AggSink`'s rollups are written this way. The
-streaming pipeline's render
+batch's dirs, runs the writer (``_write_batch``), writes the window delta,
+then the marker. :class:`IdempotentSink`'s own writer is a plain one: one
+snappy parquet write of the batch's rows, counted by an observed metric
+(no extra job), with no side tables; :class:`AggSink`'s rollups are written
+this way. The streaming pipeline's render
 (:class:`~imagor_spark.streaming.pipeline.TransformingSink`) is the one
 payload writer: its tasks write their own files, and it alone writes
-lineage, metrics and the rendered keys, and folds the rendered keys with
-:meth:`IdempotentSink.compact_rendered_keys` once enough batch dirs pile
-up. Both the index's reader (:meth:`IdempotentSink.rendered_keys`) and its
-fold run on the driver with pyarrow; no Spark job touches it.
+lineage, metrics, the rendered keys and the window deltas, and folds the
+rendered keys with :meth:`IdempotentSink.compact_rendered_keys` once enough
+batch dirs pile up. Both the index's reader
+(:meth:`IdempotentSink.rendered_keys`) and its fold run on the driver with
+pyarrow; no Spark job touches it.
 """
 
 from __future__ import annotations
@@ -52,7 +60,9 @@ import json
 import os
 import shutil
 import time
+from typing import NamedTuple
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -67,18 +77,25 @@ class IdempotentSink:
         self.lineage_dir = os.path.join(out_dir, "lineage")
         self.metrics_dir = os.path.join(out_dir, "metrics")
         self.rendered_dir = os.path.join(out_dir, "rendered_keys")
+        self.dedup_dir = os.path.join(out_dir, "dedup")
         # batch id -> its marker's committed_at_ms: a marker never changes
         # once written, so each is opened at most once per sink
         self._commit_times: dict[int, int] = {}
+        # (manifest name, compact index): a compact file never changes once
+        # a manifest names it, so each is read at most once per sink
+        self._compact: tuple[str, pa.Table] | None = None
         os.makedirs(self.commits_dir, exist_ok=True)
 
     def _marker(self, batch_id: int) -> str:
         return os.path.join(self.commits_dir, str(batch_id))
 
+    def _read_marker(self, batch_id: int) -> dict:
+        with open(self._marker(batch_id)) as f:
+            return json.load(f)
+
     def _committed_at_ms(self, batch_id: int) -> int:
         if batch_id not in self._commit_times:
-            with open(self._marker(batch_id)) as f:
-                self._commit_times[batch_id] = int(json.load(f)["committed_at_ms"])
+            self._commit_times[batch_id] = int(self._read_marker(batch_id)["committed_at_ms"])
         return self._commit_times[batch_id]
 
     def is_committed(self, batch_id: int) -> bool:
@@ -87,8 +104,8 @@ class IdempotentSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
             # replayed batch: effect already visible → exactly-once. The
-            # batch still runs: Spark fails a stateful stream whose batch
-            # leaves its state uncommitted.
+            # batch still runs: Spark fails a stateful stream (an AggSink
+            # rollup) whose batch leaves its state uncommitted.
             batch_df.write.format("noop").mode("overwrite").save()
             return
         self._commit(batch_df.sparkSession, batch_df, batch_id)
@@ -99,23 +116,34 @@ class IdempotentSink:
             os.path.join(self.lineage_dir, f"batch-{batch_id}"),
             os.path.join(self.metrics_dir, f"batch-{batch_id}"),
             os.path.join(self.rendered_dir, f"batch-{batch_id}"),
+            self._window_path(batch_id),
         ]
+
+    def _window_path(self, batch_id: int) -> str:
+        return os.path.join(self.dedup_dir, f"batch-{batch_id}")
 
     def _clear(self, batch_id: int) -> None:
         for path in self._batch_dirs(batch_id):
             shutil.rmtree(path, ignore_errors=True)
 
-    def _commit(self, spark, batch, batch_id: int, counts: dict | None = None) -> None:
+    def _commit(self, spark, batch, batch_id: int, counts: dict | None = None,
+                window: pa.Table | None = None) -> None:
         """Clear what an earlier attempt at ``batch_id`` left, write the
-        batch (``_write_batch``), then the marker (caller has already
-        checked ``is_committed``). A batch with no rows — ``None`` when the
-        caller knows that without a job — commits its marker alone.
-        ``counts`` (name → int) ride in the marker next to ``wall_s``."""
+        batch (``_write_batch``), the ``window`` delta (the keys the
+        batch's dedup kept, :class:`DedupWindow`), then the marker (caller
+        has already checked ``is_committed``). A batch with no rows —
+        ``None`` when the caller knows that without a job — commits its
+        marker alone, plus its window delta. ``counts`` (name → int) ride
+        in the marker next to ``wall_s``."""
         t0 = time.time()
         self._clear(batch_id)
         wrote = batch is not None and self._write_batch(spark, batch, batch_id)
         if not wrote:
             self._clear(batch_id)  # the writer's empty data dir
+        if window is not None and window.num_rows:
+            path = self._window_path(batch_id)
+            os.makedirs(path)
+            pq.write_table(window, os.path.join(path, "part-00000.parquet"))
         # atomic commit marker LAST
         tmp = self._marker(batch_id) + ".tmp"
         with open(tmp, "w") as f:
@@ -213,8 +241,12 @@ class IdempotentSink:
             return 0
 
     def _read_compact(self, manifest: dict) -> pa.Table:
-        return pq.read_table(os.path.join(self.rendered_dir, manifest["name"]),
-                             columns=["result_key", "committed_at_ms"])
+        if self._compact is None or self._compact[0] != manifest["name"]:
+            self._compact = (manifest["name"], pq.read_table(
+                os.path.join(self.rendered_dir, manifest["name"]),
+                columns=["result_key", "committed_at_ms"],
+            ))
+        return self._compact[1]
 
     def compact_rendered_keys(self, spark=None) -> int:
         """Fold the per-batch rendered-keys dirs (plus any previous compact
@@ -275,8 +307,8 @@ class IdempotentSink:
         string column ``result_key`` (distinct per file, not across them).
         ``max_age_ms`` expires old entries — their keys drop out of the
         index and the pipeline re-renders them (result-cache TTL, getTtl
-        imagor.go:991-1003). Reads the compact file (row-level TTL on its
-        committed_at_ms column) plus the not-yet-folded per-batch files of
+        imagor.go:991-1003). Reads the compact file (once per manifest;
+        row-level TTL on its committed_at_ms column) plus the not-yet-folded per-batch files of
         committed batches (batch-level TTL via the marker)."""
         manifest = self._read_compact_manifest()
         upto = manifest["upto"] if manifest else -1
@@ -302,6 +334,125 @@ class IdempotentSink:
         """:meth:`rendered_keys` as a local DataFrame, e.g. for
         :func:`~imagor_spark.engine.transform.skip_rendered`."""
         return spark.createDataFrame(self.rendered_keys(max_age_ms, now_ms))
+
+
+# a window delta's schema: each key a batch kept, with its expiry
+_WINDOW_SCHEMA = pa.schema([("clip_id", pa.string()), ("expiry_us", pa.int64())])
+
+
+class WindowStep(NamedTuple):
+    """One batch through :meth:`DedupWindow.step`: the rows it keeps, its
+    drop counts, and the state its commit records."""
+
+    kept: pa.Table
+    n_late: int
+    n_duplicate: int
+    delta: pa.Table  # the kept keys with their expiry (``_WINDOW_SCHEMA``)
+    watermark_ms: int  # the watermark after the batch
+
+
+class DedupWindow:
+    """The pipeline's ``clip_id`` dedup within the watermark, held on the
+    driver: the rule of Spark's within-watermark dedup operator, with its
+    state kept by ``sink``'s commit protocol instead of a state store
+    (≅ imagor's process-local singleflight, imagor.go:842-884).
+
+    The state is each kept ``clip_id`` with its expiry (its event time plus
+    ``delay_ms``, in µs as Spark keeps it), and the watermark: the largest
+    event time collected, late and duplicate rows included, minus
+    ``delay_ms``, never below 0 (Spark's ``EventTimeWatermark``). A batch (:meth:`step`) drops its rows
+    at or behind the late threshold, then the rows whose key is live (its
+    expiry past the threshold), and keeps one row per remaining key: the
+    smallest ``(ingest_ts, file_path, row_index)``. A null ``clip_id`` is
+    one key, as it is to Spark.
+
+    The threshold follows Spark's schedule: Spark filters late rows with
+    the previous batch's watermark and evicts at the end of a batch with its
+    own, so within a drain the threshold lags the watermark by one batch.
+    An availableNow drain ends with the watermark caught up (Spark runs a
+    no-data batch if it is not), so a new window — a new drain — starts at
+    the committed watermark.
+
+    Exactly-once: a batch's delta is written under ``dedup/batch-N`` and its
+    watermark in its marker (:meth:`IdempotentSink._commit`); the window
+    moves on (:meth:`advance`) only after the marker. A new window reads
+    the committed deltas and keeps their keys that are live under the last
+    committed watermark. A delta whose largest expiry is at or behind the
+    committed watermark is deleted, so that read stays bounded by the keys
+    that arrive within the delay.
+    """
+
+    def __init__(self, sink: IdempotentSink, delay_ms: int):
+        self.sink, self.delay_ms = sink, delay_ms
+        batches = sink.committed_batches()
+        self.watermark_ms = (
+            sink._read_marker(batches[-1]).get("watermark_ms", 0) if batches else 0
+        )
+        self.late_ms = self.watermark_ms
+        # batch id -> the largest expiry in its delta dir, until deleted
+        self._expiry: dict[int, int] = {}
+        deltas = [_WINDOW_SCHEMA.empty_table()]
+        for b in batches:
+            path = sink._window_path(b)
+            if os.path.exists(path):
+                deltas.append(pq.read_table(path, schema=_WINDOW_SCHEMA))
+                self._expiry[b] = pc.max(deltas[-1]["expiry_us"]).as_py()
+        self.keys = self._live(pa.concat_tables(deltas))
+
+    def _live(self, keys: pa.Table) -> pa.Table:
+        return keys.filter(
+            pc.greater(keys["expiry_us"], self.late_ms * 1000)
+        ).combine_chunks()
+
+    def step(self, rows: pa.Table) -> WindowStep:
+        """Dedup ``rows`` (with ``clip_id``, ``ingest_ts``, ``file_path``
+        and ``row_index``) against the window; the window itself does not
+        change until :meth:`advance`."""
+        ts = pc.cast(rows["ingest_ts"], pa.int64())  # µs
+        event_us = pc.fill_null(ts, 0)  # Spark reads a null as 0
+        watermark = self.watermark_ms
+        if rows.num_rows:
+            watermark = max(watermark, pc.max(event_us).as_py() // 1000 - self.delay_ms)
+        late = pc.fill_null(pc.less_equal(ts, self.late_ms * 1000), False)
+        rows = rows.append_column("__expiry", pc.add(event_us, self.delay_ms * 1000))
+        fresh = rows.filter(pc.invert(late))
+        # the live keys this batch holds: the batch's keys are hashed, not
+        # the window's
+        live = self.keys["clip_id"].filter(
+            pc.is_in(self.keys["clip_id"], value_set=fresh["clip_id"].combine_chunks())
+        )
+        fresh = fresh.filter(pc.invert(
+            pc.is_in(fresh["clip_id"], value_set=live.combine_chunks())
+        ))
+        fresh = fresh.sort_by([("ingest_ts", "ascending"), ("file_path", "ascending"),
+                               ("row_index", "ascending")])
+        first = fresh.append_column("__i", pa.array(np.arange(fresh.num_rows))).group_by(
+            "clip_id", use_threads=False
+        ).aggregate([("__i", "min")])
+        kept = fresh.take(np.sort(first["__i_min"].to_numpy()))
+        n_late = pc.sum(late).as_py() or 0
+        return WindowStep(
+            kept=kept.drop_columns(["__expiry"]),
+            n_late=n_late,
+            n_duplicate=rows.num_rows - n_late - kept.num_rows,
+            delta=pa.table({"clip_id": kept["clip_id"], "expiry_us": kept["__expiry"]},
+                           schema=_WINDOW_SCHEMA),
+            watermark_ms=watermark,
+        )
+
+    def advance(self, batch_id: int, step: WindowStep) -> None:
+        """Take in committed batch ``batch_id``'s ``step``. Spark evicts at
+        the end of a batch with the watermark the batch ran under, which is
+        the next batch's late threshold; then delete the delta dirs that
+        hold no key past the new committed watermark."""
+        self.late_ms, self.watermark_ms = self.watermark_ms, step.watermark_ms
+        self.keys = self._live(pa.concat_tables([self.keys, step.delta]))
+        if step.delta.num_rows:
+            self._expiry[batch_id] = pc.max(step.delta["expiry_us"]).as_py()
+        for b, expiry in list(self._expiry.items()):
+            if expiry <= self.watermark_ms * 1000:
+                shutil.rmtree(self.sink._window_path(b), ignore_errors=True)
+                del self._expiry[b]
 
 
 class AggSink(IdempotentSink):

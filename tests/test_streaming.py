@@ -9,7 +9,7 @@ import os
 import time
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from imagor_spark.sources.clips import (
@@ -109,10 +109,11 @@ def test_side_table_readers_skip_uncommitted_batches(spark, dirs):
     """A crash after a batch's side tables and before its marker leaves
     ``lineage/batch-N`` and ``metrics/batch-N`` with no ``_commits/N``:
     neither reader may show that batch."""
-    write_batch(spark, dirs["in"], 0, 10)
     sink = render_sink(dirs["out"])
     for b in (0, 1):
-        sink(narrow_source(spark, dirs["in"]), b)
+        in_dir = os.path.join(dirs["in"], f"b{b}")
+        write_batch(spark, in_dir, 10 * b, 10)
+        sink(narrow_source(spark, in_dir), b)
     os.remove(sink._marker(1))
     assert os.path.isdir(os.path.join(sink.lineage_dir, "batch-1"))
     assert os.path.isdir(os.path.join(sink.metrics_dir, "batch-1"))
@@ -184,8 +185,8 @@ def test_late_fetch_reads_odd_input_path(spark, tmp_path):
 
 
 def test_dedup_stream_is_narrow_and_sink_releases_cache(spark, dirs):
-    """The payload never enters the dedup exchange, and no trigger, data
-    or empty, leaves anything persisted."""
+    """The stream carries no payload, and no trigger, data or empty, leaves
+    anything persisted."""
     from imagor_spark.streaming.pipeline import build_raw_stream
 
     for start in (0, 10, 20):
@@ -208,9 +209,9 @@ def test_dedup_stream_is_narrow_and_sink_releases_cache(spark, dirs):
 def trigger_jobs(spark, dirs, result_cache=None):
     """Spark jobs per trigger, counted over a job group (unique to the
     test's dirs) set around each sink call, for a stream of one 20-clip
-    input file: a data trigger, then the zero-row trigger availableNow
-    runs once the watermark has moved. Returns the per-trigger counts and
-    the sink."""
+    input file: one data trigger, as the stateless stream runs no
+    zero-row trigger after it. Returns the per-trigger counts and the
+    sink."""
     from imagor_spark.streaming.pipeline import build_raw_stream
 
     pdf = make_pdf(42, range(20), signed_mix=False)
@@ -232,20 +233,18 @@ def trigger_jobs(spark, dirs, result_cache=None):
         .start()
     )
     q.awaitTermination()
-    assert sink.committed_batches() == [0, 1]
+    assert sink.committed_batches() == [0]
     assert os.path.isdir(os.path.join(sink.data_dir, "batch_id=0"))
-    assert not os.path.exists(os.path.join(sink.data_dir, "batch_id=1"))
-    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"{dirs['out']}-{b}")) for b in (0, 1)]
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"{dirs['out']}-{b}")) for b in (0,)]
     return jobs, sink
 
 
 def test_trigger_job_counts(spark, dirs):
-    """A data trigger runs the narrow collect, the config broadcast and the
-    render, whose tasks write the data and whose collected results feed the
-    side tables; the zero-row trigger runs only the collect and commits its
-    marker alone."""
+    """A drain of one file is one trigger. It runs the narrow collect, the
+    config broadcast and the render, whose tasks write the data and whose
+    collected results feed the side tables."""
     jobs, sink = trigger_jobs(spark, dirs)
-    assert jobs == [3, 1]
+    assert jobs == [3]
     assert sink.read_committed(spark).count() == 20
 
 
@@ -261,12 +260,12 @@ def test_trigger_job_counts_live_result_store(spark, dirs, tmp_path):
     write_pdf(spark, str(tmp_path / "done"), done)
     store(narrow_source(spark, str(tmp_path / "done")), 0)
     jobs, sink = trigger_jobs(spark, dirs, result_cache=store)
-    assert jobs == [3, 1]
+    assert jobs == [3]
     got = {r.clip_id for r in sink.read_committed(spark).select("clip_id").collect()}
     assert got == set(make_pdf(42, range(20), signed_mix=False)["clip_id"]) - set(done["clip_id"])
     with open(sink._marker(0)) as f:
         marker = json.load(f)
-    assert (marker["n_collected"], marker["n_cache_hit"], marker["n_singleflight_dropped"]) == (
+    assert (marker["n_in"], marker["n_cache_hit"], marker["n_singleflight_dropped"]) == (
         20, 5, 0
     )
 
@@ -413,7 +412,7 @@ def test_commit_ignores_debris_of_a_crashed_attempt(spark, tmp_path):
     dir, and no ``_commits/0`` marker. The run clears both before its
     render: the committed rows equal a clean run's, with no duplicate
     ``clip_id``, and no staging dir remains. A replay of the committed
-    batch (its Spark commit lost) changes nothing."""
+    batch (its Spark commit-log entry lost) changes nothing."""
     import shutil
 
     def run(name):
@@ -448,9 +447,8 @@ def test_commit_ignores_debris_of_a_crashed_attempt(spark, tmp_path):
     assert not [root for root, _d, _f in os.walk(sink.out_dir) if "_staging" in root]
     # replay: drop Spark's record of batch 0 being done, so it runs again
     ck = str(tmp_path / "ck_out")
-    shutil.rmtree(os.path.join(ck, "commits"))
-    for name in ("1", ".1.crc"):
-        os.remove(os.path.join(ck, "offsets", name))
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ck, "commits", name))
     q, sink = run("out")
     assert 0 in [p["batchId"] for p in q.recentProgress]
     assert rows(sink) == got
@@ -563,6 +561,78 @@ def test_checkpoint_resume_exactly_once(spark, dirs):
     dupes = out.groupBy("clip_id").count().filter("count > 1").count()
     assert dupes == 0
     assert out.count() >= n1 + 15  # new clips landed (some ids may collide by design)
+
+
+def test_marker_accounts_for_every_input_row(spark, dirs):
+    """Every input row's fate is in its batch's marker. From the markers and
+    the committed rows alone, per batch: ``n_in = n_late + n_duplicate +
+    n_cache_hit + n_singleflight_dropped`` + rows committed. The second
+    drain's one trigger holds rows of every fate: late behind the first
+    drain's watermark, duplicates of its kept clips and of each other, hits
+    on the result store it committed, and a singleflight pair."""
+    from collections import Counter
+
+    import pandas as pd
+
+    t0 = pd.Timestamp("2024-01-01 12:00:00")
+
+    def wave(specs):
+        rows = []
+        for i, (cid, name, dt_s) in enumerate(specs):
+            row = make_row(42, i, "unsafe")
+            row.update(clip_id=cid, ops=f"unsafe/fit-in/16000x0/{name}",
+                       ingest_ts=t0 + pd.Timedelta(seconds=dt_s))
+            rows.append(row)
+        spark.createDataFrame(pd.DataFrame(rows), schema=CLIPS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(dirs["in"])
+
+    def drain():
+        return run_pipeline(
+            spark, dirs["in"], dirs["out"], dirs["ckpt"], secret=SECRET, allow_unsafe=True,
+            wait=True, result_cache_dir=dirs["out"],
+        )[1]
+
+    wave([(f"a{i}", f"t{i}", 0) for i in range(4)])
+    drain()
+    wave([
+        ("l0", "late0", -7200), ("l1", "late1", -7200),  # late
+        ("a0", "t0", 1), ("a1", "t1", 1),  # duplicates of the first drain
+        ("n0", "new0", 2), ("n0", "new0b", 3),  # a duplicate within the batch
+        ("c0", "t2", 4), ("c1", "t3", 5),  # cache hits on the first drain's keys
+        ("s0", "shared", 6), ("s1", "shared", 7),  # one singleflight drop
+        ("n1", "new1", 8),
+    ])
+    sink = drain()
+    committed = Counter(r.batch_id for r in sink.read_committed(spark).select("batch_id").collect())
+    fates = []
+    for b in sink.committed_batches():
+        m = sink._read_marker(b)
+        fates.append((m["n_in"], m["n_late"], m["n_duplicate"], m["n_cache_hit"],
+                      m["n_singleflight_dropped"], committed[b]))
+        assert m["n_in"] == sum(fates[-1][1:])
+    assert fates == [(4, 0, 0, 0, 0, 4), (11, 2, 3, 2, 1, 3)]
+    kept = {r.clip_id: r.ops for r in sink.read_committed(spark).collect()}
+    assert {c: kept[c] for c in ("n0", "s0", "n1")} == {
+        "n0": "unsafe/fit-in/16000x0/new0", "s0": "unsafe/fit-in/16000x0/shared",
+        "n1": "unsafe/fit-in/16000x0/new1",
+    }
+
+
+def test_run_pipeline_refuses_a_stateful_checkpoint(spark, dirs):
+    """A checkpoint with a ``state/`` dir was written by the stateful dedup
+    query. Its dedup state cannot carry over to the sink's window, so
+    ``run_pipeline`` refuses it before a query starts. The watermark delay
+    is read in Spark's interval grammar."""
+    from imagor_spark.streaming.pipeline import watermark_delay_ms
+
+    os.makedirs(os.path.join(dirs["ckpt"], "state", "0", "0"))
+    with pytest.raises(ValueError, match="state/ dir"):
+        run_pipeline(spark, dirs["in"], dirs["out"], dirs["ckpt"], secret=SECRET,
+                     allow_unsafe=True, wait=True)
+    assert not os.path.exists(os.path.join(dirs["ckpt"], "offsets"))
+    delays = ("10 minutes", "1 minute", "1 hour 2 seconds")
+    assert [watermark_delay_ms(spark, d) for d in delays] == [600_000, 60_000, 3_602_000]
 
 
 def test_sink_replay_is_idempotent(spark, dirs):
@@ -730,6 +800,129 @@ def test_singleflight_local_matches_spark_rule(spark, rows):
     want = singleflight_within(spark.createDataFrame(narrow)).select("row").collect()
     got = singleflight_local(narrow)["row"].to_pylist()
     assert sorted(got) == sorted(r.row for r in want)
+
+
+# the parity test's event times: seconds past this epoch second, some with
+# a half millisecond (Spark keeps an expiry in µs, not in ms)
+_DEDUP_T0 = 1_700_000_000
+_DEDUP_DELAY = ("10 seconds", 10_000)
+
+
+def dedup_rows(rows):
+    """``(clip_id, second)`` rows as an Arrow table of ``clip_id,
+    ingest_ts``."""
+    import pyarrow as pa
+
+    return pa.table({
+        "clip_id": pa.array([r[0] for r in rows], pa.string()),
+        "ingest_ts": pa.array([_DEDUP_T0 * 10**6 + round(r[1] * 10**6) for r in rows],
+                              pa.timestamp("us", tz="UTC")),
+    })
+
+
+def spark_dedup(spark, base, triggers, restart):
+    """The oracle: Spark's ``dropDuplicatesWithinWatermark(clip_id)`` on
+    ``ingest_ts`` over ``triggers`` (each a list of ``(clip_id, second)``),
+    one parquet file a trigger, taken one a batch in two availableNow runs
+    of one checkpoint, the second from trigger ``restart`` on. Per trigger:
+    its kept ``(clip_id, µs)``, late drops and duplicate drops."""
+    import pyarrow.parquet as pq
+
+    in_dir, ckpt = os.path.join(base, "in"), os.path.join(base, "ckpt")
+    os.makedirs(in_dir)
+    kept, fates = {}, {}
+
+    def collect(df, batch_id):
+        us = F.unix_micros("ingest_ts").alias("us")
+        kept[batch_id] = sorted((r.clip_id, r.us) for r in df.select("clip_id", us).collect())
+
+    now = time.time()
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # one state partition
+    try:
+        for run in (triggers[:restart], triggers[restart:]):
+            for rows in run:
+                k = len(os.listdir(in_dir))
+                path = os.path.join(in_dir, f"part-{k:03d}.parquet")
+                pq.write_table(dedup_rows(rows), path)
+                os.utime(path, (now - 100 + k, now - 100 + k))  # the source's order
+            q = (spark.readStream.schema("clip_id string, ingest_ts timestamp")
+                 .option("maxFilesPerTrigger", 1).parquet(in_dir)
+                 .withWatermark("ingest_ts", _DEDUP_DELAY[0])
+                 .dropDuplicatesWithinWatermark(["clip_id"])
+                 .writeStream.foreachBatch(collect).option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
+            q.awaitTermination()
+            for p in q.recentProgress:
+                if p["numInputRows"]:
+                    op = p["stateOperators"][0]
+                    fates[p["batchId"]] = (op["numRowsDroppedByWatermark"],
+                                           op["customMetrics"]["numDroppedDuplicateRows"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    return [(kept[b], *fates[b]) for b in sorted(fates)]
+
+
+def window_dedup(base, triggers, restart):
+    """The sink's rule over the same ``triggers``: a :class:`DedupWindow`
+    on a store whose commits carry its deltas and watermark, rebuilt from
+    that store at trigger ``restart``. Per trigger, as :func:`spark_dedup`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from imagor_spark.streaming.sink import DedupWindow
+
+    store = IdempotentSink(os.path.join(base, "sink"))
+    got = []
+    for k, rows in enumerate(triggers):
+        if k in (0, restart):
+            window = DedupWindow(store, _DEDUP_DELAY[1])
+        step = window.step(
+            dedup_rows(rows)
+            .append_column("file_path", pa.array([f"part-{k:03d}"] * len(rows)))
+            .append_column("row_index", pa.array(range(len(rows)), pa.int64()))
+        )
+        store._commit(None, None, k, {"watermark_ms": step.watermark_ms}, window=step.delta)
+        window.advance(k, step)
+        us = pc.cast(step.kept["ingest_ts"], pa.int64()).to_pylist()
+        got.append((sorted(zip(step.kept["clip_id"].to_pylist(), us)),
+                    step.n_late, step.n_duplicate))
+    return got
+
+
+@st.composite
+def dedup_triggers(draw):
+    """Triggers of ``(clip_id, second)`` rows, each sorted by time — so the
+    row Spark keeps of a key (the first in its file) is the window's pick
+    too — and a restart point."""
+    triggers = draw(st.lists(
+        st.lists(st.tuples(st.sampled_from("abc"), st.builds(
+            lambda s, sub: s + sub, st.integers(0, 40), st.sampled_from([0, 0.0005]),
+        )), min_size=1, max_size=4),
+        min_size=2, max_size=4,
+    ))
+    restart = draw(st.integers(1, len(triggers) - 1))
+    return [sorted(t, key=lambda r: r[1]) for t in triggers], restart
+
+
+@settings(max_examples=2, deadline=None)
+@example(case=(
+    # within a drain the threshold lags the watermark by a batch: c@180.0005
+    # is not late and a@105 is a duplicate, then a has expired and a@195 is
+    # kept, while c, which expires half a millisecond past the watermark,
+    # is live; after the restart d@185 is late, and e, whose delta also
+    # holds the live b, has expired
+    [[("a", 100)], [("e", 150), ("b", 200)], [("a", 105), ("c", 180.0005)],
+     [("c", 190.0005), ("a", 195)], [("d", 185), ("e", 197)]], 4,
+))
+@given(case=dedup_triggers())
+def test_dedup_window_matches_spark_rule(spark, tmp_path_factory, case):
+    """The sink's dedup window keeps the rows, and drops the late and the
+    duplicate rows, that Spark's ``dropDuplicatesWithinWatermark`` does,
+    trigger by trigger, across a restart on committed state."""
+    triggers, restart = case
+    base = str(tmp_path_factory.mktemp("dedup"))
+    assert window_dedup(base, triggers, restart) == spark_dedup(spark, base, triggers, restart)
 
 
 def test_singleflight_rejected_row_cannot_suppress_valid_row(spark, dirs):
@@ -968,6 +1161,48 @@ def test_ttl_read_opens_each_commit_marker_once(tmp_path, monkeypatch):
     mark(2000)
     sink.rendered_keys(max_age_ms=10**9)
     assert opened == [sink._marker(2000)]
+
+
+def test_rendered_keys_reads_compact_once_per_manifest(tmp_path, monkeypatch):
+    """A compact file never changes once its manifest names it, so a sink
+    reads it once: a second index read against one manifest, and a read
+    with a new unfolded batch, read no compact file; a new fold's file is
+    read again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from imagor_spark.streaming import sink as sink_module
+
+    sink = IdempotentSink(str(tmp_path / "out"))
+
+    def commit(b, keys):
+        sink._commit(None, None, b)
+        path = os.path.join(sink.rendered_dir, f"batch-{b}")
+        os.makedirs(path)
+        pq.write_table(pa.table({"result_key": keys}), os.path.join(path, "part-00000.parquet"))
+
+    read_table, reads = pq.read_table, []
+
+    def counting(path, *args, **kwargs):
+        if os.path.basename(str(path)).startswith("compact-"):
+            reads.append(os.path.basename(str(path)))
+        return read_table(path, *args, **kwargs)
+
+    monkeypatch.setattr(sink_module.pq, "read_table", counting)
+
+    def keys():
+        return sorted(sink.rendered_keys()["result_key"].to_pylist())
+
+    commit(0, ["k0", "k1"])
+    sink.compact_rendered_keys()
+    assert keys() == keys() == ["k0", "k1"]
+    assert reads == ["compact-0"]
+    commit(1, ["k2"])
+    assert keys() == ["k0", "k1", "k2"]
+    assert reads == ["compact-0"]
+    sink.compact_rendered_keys()
+    assert keys() == ["k0", "k1", "k2"]
+    assert reads == ["compact-0", "compact-1"]
 
 
 def test_rendered_keys_auto_compaction(spark, dirs, monkeypatch):
